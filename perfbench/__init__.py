@@ -1,0 +1,1 @@
+"""sparkcodec's end-to-end and per-layer benchmark (see ``run.py``)."""
