@@ -1078,10 +1078,11 @@ def _aligned_direct_splits(spark, df):
     consecutive row groups of each file up to
     ``spark.sql.files.maxPartitionBytes`` of compressed bytes — or None
     when the plan is anything else (computed DataFrame, filters or
-    projections on the scan, non-local files): those fall back to the
-    Spark-scan path. The plan depends only on the file listing and the
-    split size, never on session parallelism, so every leg of a scaling
-    pair runs the identical part layout by construction.
+    projections on the scan, non-local files, columns some file does not
+    physically store): those fall back to the Spark-scan path. The plan
+    depends only on the file listing and the split size, never on session
+    parallelism, so every leg of a scaling pair runs the identical part
+    layout by construction.
 
     Why it exists: ``mapInArrow`` over a JVM scan pays a row-to-Arrow
     conversion of every payload byte (measured ~5 s of a 21 s two-core
@@ -1121,9 +1122,16 @@ def _aligned_direct_splits(spark, df):
     import pyarrow.parquet as _pq
 
     splits = []
+    wanted = set(df.columns)
     try:
         for uri, path in paths:
-            md = _pq.ParquetFile(path).metadata
+            pf = _pq.ParquetFile(path)
+            # a column the file does not store (hive partition value,
+            # mergeSchema column absent here) comes from the Spark scan
+            # only: the pyarrow read would miss it
+            if not wanted <= set(pf.schema_arrow.names):
+                return None
+            md = pf.metadata
             if md.num_row_groups == 0:
                 continue
             sizes = []
@@ -3481,13 +3489,14 @@ def decode_table(
             snapshot_field_ids(out_dir, sid, snaps=snaps),
             snaps=snaps, pm=pm,
         ) or None
-    # several parts per task: decode parallelism needs only ~4x the slots,
-    # and per-task Python handoff dominates with hundreds of tiny tasks.
+    # one task per slot: each Python task pays a fixed ~0.2-0.3 s floor
+    # before decoding anything (measured at local[2] on a 4-vCPU VM), so a
+    # second wave of tasks costs a floor per slot for no extra parallelism.
     # spark.range drives the kernel (pure JVM, contiguous id ranges per
-    # task) with the part-id list in the kernel closure — a
-    # createDataFrame(parts).repartition() driver table would add a
-    # pickled-RDD Python scan plus an exchange to every read
-    n_tasks = max(1, min(len(parts), 4 * spark.sparkContext.defaultParallelism))
+    # task, so row order follows part order) with the part-id list in the
+    # kernel closure — a createDataFrame(parts).repartition() driver table
+    # would add a pickled-RDD Python scan plus an exchange to every read
+    n_tasks = max(1, min(len(parts), spark.sparkContext.defaultParallelism))
     parts_df = spark.range(0, len(parts), 1, n_tasks)
     spark_fields = ", ".join(
         f"`{c}` {_SPARK_TYPE_OF[meta['schema'][c]]}" for c in columns

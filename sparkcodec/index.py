@@ -10,9 +10,12 @@ global offsets (272-303).
 Spark-first translation (SURVEY §3.3), distributed end-to-end — no
 global single-task window anywhere:
 
-1. ``repartitionByRange(order_cols)`` + ``sortWithinPartitions`` gives a
-   total order with partition id == rank (the Alltoallv twin; Catalyst
-   plans one range exchange).
+1. The projected input ``(node_id, *order_cols)`` is materialized once
+   (``localCheckpoint``, MEMORY_AND_DISK — the reference's single read of
+   its input, index.cpp:198-227), then ``repartitionByRange(order_cols)``
+   + ``sortWithinPartitions`` gives a total order with partition id ==
+   rank (the Alltoallv twin; Catalyst plans one range exchange, whose
+   sampler and map stage both read the materialized blocks).
 2. A vectorized ``mapInArrow`` kernel groups maximal runs *locally* per
    partition (the reference's ``_groupNodeRanges``, index.cpp:114-137),
    emitting local row offsets; the result is ``localCheckpoint``-ed —
@@ -56,95 +59,15 @@ class _PidTotalsParam(AccumulatorParam):
         return a
 
 
-def _num_range_parts(df: DataFrame) -> int:
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-
-
-# order-column types whose Spark min/max structs compare identically to
-# the Python tuple comparison the disjointness probe performs (floats are
-# excluded: NaN ordering differs between the engines)
-_PROBE_OK_TYPES = (
-    T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-    T.StringType, T.BooleanType, T.DateType, T.TimestampType,
-)
-
-
-def _aligned_rank_map(df: DataFrame, order_cols: list[str]):
-    """If the existing partitions of ``df`` hold DISJOINT order-key ranges
-    (a sorted table's scan does), return {partition_id: rank}; else None.
-
-    One cheap probe job (per-partition min/max/null-count of the order
-    tuple, O(#partitions) rows to the driver) decides whether the range
-    exchange in :func:`_ranged` can be skipped outright: disjoint
-    partitions + a local sort ARE a valid range partitioning, with rank
-    = the partition's position in key order (guide: remove shuffles the
-    data's existing layout already paid for). Conservative everywhere —
-    floats, nulls in the keys, or any overlap fall back to the shuffle."""
-    if not all(
-        isinstance(df.schema[c].dataType, _PROBE_OK_TYPES) for c in order_cols
-    ):
-        return None
-    # the exchange being skipped is also what SPREADS the work: keeping
-    # the input partitioning is only a win when the input already has
-    # enough partitions to occupy the cluster (a one-file, one-row-group
-    # table scans as a single partition — there the shuffle IS the
-    # parallelizer and the probe would be pure overhead)
-    try:
-        npart = df.rdd.getNumPartitions()
-    except Exception:
-        return None
-    spark = df.sparkSession
-    if npart < max(2, spark.sparkContext.defaultParallelism // 2):
-        return None
-    k = F.struct(*[F.col(c) for c in order_cols])
-    nulls = sum(
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)) for c in order_cols
-    )
-    try:
-        rows = (
-            df.select(*order_cols)
-            .withColumn(_PID, F.spark_partition_id())
-            .groupBy(_PID)
-            .agg(F.min(k).alias("mn"), F.max(k).alias("mx"), nulls.alias("nn"))
-            .collect()
-        )
-    except Exception:
-        return None
-    if not rows or any(r["nn"] for r in rows):
-        return None
-    spans = sorted((tuple(r["mn"]), tuple(r["mx"]), int(r[_PID])) for r in rows)
-    for (_, prev_mx, _), (nxt_mn, _, _) in zip(spans, spans[1:]):
-        if not prev_mx < nxt_mn:
-            return None  # overlap (or boundary tie): ranks would be wrong
-    return {pid: rank for rank, (_, _, pid) in enumerate(spans)}
-
-
 def _ranged(df: DataFrame, order_cols: list[str]) -> DataFrame:
     """Range-shuffle + in-partition sort: total order, pid == global rank.
 
-    When the input's partitions already hold disjoint key ranges (sorted
-    source tables), the exchange is skipped: a local sort plus a
-    broadcast pid->rank relabel reproduce the same invariant with zero
-    shuffled bytes. Otherwise: no explicit partition count — AQE
-    right-sizes the range shuffle (coalescing adjacent range partitions,
-    which preserves the pid-is-rank invariant) so small inputs don't pay
-    32 near-empty tasks and huge inputs still spread across the cluster."""
-    rank_map = _aligned_rank_map(df, order_cols)
-    if rank_map is not None:
-        spark = df.sparkSession
-        map_df = spark.createDataFrame(
-            [(int(p), int(r)) for p, r in rank_map.items()],
-            f"__pid_raw int, {_PID} int",
-        )
-        # sort LAST: a local sort sitting below the join is dead code to
-        # Catalyst (EliminateSorts strips it); as the terminal operator
-        # it survives, exactly like the shuffle path's trailing sort
-        return (
-            df.withColumn("__pid_raw", F.spark_partition_id())
-            .join(F.broadcast(map_df), "__pid_raw")
-            .drop("__pid_raw")
-            .sortWithinPartitions(*order_cols)
-        )
+    No explicit partition count — AQE right-sizes the range shuffle
+    (coalescing adjacent range partitions, which preserves the
+    pid-is-rank invariant) so small inputs don't pay 32 near-empty tasks
+    and huge inputs still spread across the cluster. The exchange reads
+    ``df`` twice (the range sampler, then the map stage): callers whose
+    input is expensive to compute materialize it first."""
     return (
         df.repartitionByRange(*order_cols)
         .sortWithinPartitions(*order_cols)
@@ -316,23 +239,26 @@ def edge_ranges(df: DataFrame, node_col: str, order_cols: list[str]) -> DataFram
 
     Returns (node_id, range_start, range_end) with 0-based, half-open row
     positions — exactly the reference's ``_groupNodeRanges`` output
-    (index.cpp:114-137), but fully distributed: one range exchange, one
-    vectorized local-runs pass (materialized via localCheckpoint, so it
-    runs exactly once), an O(#parts) driver offset scan, and an
-    O(2·#parts) boundary merge. Nulls in ``node_col`` are not supported
-    (matches the reference's dense ids).
+    (index.cpp:114-137), but fully distributed: the input materialized
+    once, one range exchange over it, one vectorized local-runs pass
+    (materialized via localCheckpoint, so it runs exactly once), an
+    O(#parts) driver offset scan, and an O(2·#parts) boundary merge.
+    Nulls in ``node_col`` are not supported (matches the reference's
+    dense ids).
 
-    Note: this builder runs Spark jobs eagerly (checkpoint + the tiny
-    offsets read), mirroring the reference's two-phase count-then-build
-    choreography (index.cpp:198-304).
+    Note: this builder runs Spark jobs eagerly (the two checkpoints),
+    mirroring the reference's read-once, count-then-build choreography
+    (index.cpp:198-304).
     """
     spark = df.sparkSession
     spark_t = df.schema[node_col].dataType
     node_type = _arrow_node_type(spark_t)
 
-    ranged = _ranged(
-        df.select(F.col(node_col).alias("node_id"), *order_cols), order_cols
-    )
+    # materialize the projected input once: the range sampler and the
+    # shuffle map stage then both read its blocks instead of re-running
+    # whatever computes ``df`` (a decode_table scan is a Python stage)
+    src = df.select(F.col(node_col).alias("node_id"), *order_cols).localCheckpoint()
+    ranged = _ranged(src, order_cols)
     runs_ddl = (
         f"{_PID} int, node_id {spark_t.simpleString()}, "
         "__ls long, __le long, __last boolean"
@@ -479,8 +405,8 @@ def csr_offsets(ranges: DataFrame) -> DataFrame:
     No re-materialization of the input: edge_ranges' output is a cheap
     filter over its own checkpointed runs unioned with a driver-literal
     boundary merge, so the range shuffle's sampling pass re-executing it
-    costs one checkpoint read, not a kernel re-run (the extra
-    localCheckpoint this used to do was an eager job per call)."""
+    costs one checkpoint read — never a kernel re-run, and never a
+    re-read of the table edge_ranges indexed."""
     pre = ranges.repartitionByRange("node_id")
     per_node = pre.groupBy("node_id").agg(F.count(F.lit(1)).alias("n_ranges"))
     with_off = prefix_sum_exclusive(

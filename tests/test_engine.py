@@ -157,6 +157,48 @@ def test_aligned_resume_guard(spark, code_files_small, tmp_path):
         encode_table(spark, df2, out, layout="aligned")
 
 
+def test_aligned_layout_hive_partitioned_source(spark, code_files_small, tmp_path):
+    """A hive-partitioned source's partition column lives in the
+    directory names, not in the files: the aligned encode must take the
+    Spark-scan path and still store it."""
+    src = str(tmp_path / "src_hive")
+    spark.createDataFrame(code_files_small.to_pandas()).write.partitionBy(
+        "lang"
+    ).parquet(src)
+    df = spark.read.parquet(src)
+    assert "lang" in df.columns
+    out = str(tmp_path / "enc_hive")
+    m = encode_table(spark, df, out, layout="aligned")
+    assert m["n_rows"] == 5000
+    report = verify_roundtrip(df, decode_table(spark, out), KEY)
+    assert report["ok"], report
+
+
+def test_decode_table_one_task_per_slot(spark, tmp_path):
+    """More parts than slots decode in one task per slot, with rows in
+    part order (spark.range hands each task a contiguous part run)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src_many"
+    src.mkdir()
+    n_files, per = 12, 500
+    for i in range(n_files):
+        lo = i * per
+        pq.write_table(pa.table({
+            "id": pa.array(range(lo, lo + per), type=pa.int64()),
+            "v": pa.array([f"row-{k % 7}" for k in range(lo, lo + per)]),
+        }), str(src / f"part-{i:02d}.parquet"))
+    out = str(tmp_path / "enc_many")
+    m = encode_table(spark, spark.read.parquet(str(src)), out, layout="aligned")
+    assert m["parts_encoded"] == n_files
+    dec = decode_table(spark, out)
+    slots = spark.sparkContext.defaultParallelism
+    assert dec.rdd.getNumPartitions() == min(n_files, slots)
+    got = [(r["id"], r["v"]) for r in dec.collect()]
+    assert got == [(k, f"row-{k % 7}") for k in range(n_files * per)]
+
+
 def test_numeric_table_roundtrip(spark, tmp_path):
     """Reference-shaped numeric table (FIXTURES.md §2: narrow ints +
     floats + derived id) through the full engine — exercises FoR/RLE/

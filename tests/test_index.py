@@ -127,49 +127,60 @@ def test_prefix_sum_exclusive_matches_window(spark):
         acc += k % 7 + 1
 
 
-def test_ranged_zero_shuffle_fast_path_matches_shuffle(spark, tmp_path):
-    """On a sorted multi-file input whose scan partitions hold disjoint
-    key ranges, _ranged's probed zero-shuffle path must produce exactly
-    the edge_ranges output the range-shuffle fallback produces."""
-    import os
-
+def test_edge_ranges_sorted_multi_file_input(spark, tmp_path):
+    """A sorted multi-file parquet scan (partitions hold disjoint, ordered
+    key ranges) indexes exactly like the serial oracle over key order."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sparkcodec import index as I
-    from sparkcodec.index import edge_ranges
-
-    d = str(tmp_path / "sorted_multi")
-    os.makedirs(d)
+    d = tmp_path / "sorted_multi"
+    d.mkdir()
     n_files, rows = 8, 20000
     per = rows // n_files
+    nodes = [k // 37 % 5 for k in range(rows)]
     for i in range(n_files):
         lo = i * per
-        t = pa.table({
+        pq.write_table(pa.table({
             "k": pa.array(range(lo, lo + per), type=pa.int64()),
-            "node": pa.array([(lo + j) // 37 % 5 for j in range(per)],
-                             type=pa.int64()),
+            "node": pa.array(nodes[lo:lo + per], type=pa.int64()),
             "pad": pa.array(["x" * 64] * per),
-        })
-        pq.write_table(t, f"{d}/part-{i:02d}.parquet")
+        }), str(d / f"part-{i:02d}.parquet"))
     conf = spark.conf
     old_mpb = conf.get("spark.sql.files.maxPartitionBytes")
     old_open = conf.get("spark.sql.files.openCostInBytes")
     try:
         conf.set("spark.sql.files.maxPartitionBytes", str(64 << 10))
         conf.set("spark.sql.files.openCostInBytes", str(1 << 10))
-        df = spark.read.parquet(d)
-        sel = df.select("node", "k")
-        rm = I._aligned_rank_map(sel, ["k"])
-        assert rm is not None and len(rm) >= 4, rm  # fast path engages
-        fast = {tuple(r) for r in edge_ranges(df, "node", ["k"]).collect()}
-        orig = I._aligned_rank_map
-        I._aligned_rank_map = lambda _df, _oc: None  # force the fallback
-        try:
-            slow = {tuple(r) for r in edge_ranges(df, "node", ["k"]).collect()}
-        finally:
-            I._aligned_rank_map = orig
-        assert fast == slow and len(fast) > 100
+        df = spark.read.parquet(str(d))
+        assert df.rdd.getNumPartitions() >= 4
+        got = _collect_ranges(edge_ranges(df, "node", ["k"]))
     finally:
         conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         conf.set("spark.sql.files.openCostInBytes", old_open)
+    assert got == _runs_oracle(nodes) and len(got) > 100
+
+
+def test_build_index_reads_input_once(spark):
+    """build_index computes its input DataFrame once: the range sampler
+    and the shuffle map stage read the materialized projection, and the
+    consuming action reads only the index's own checkpoints."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    passes = spark.sparkContext.accumulator(0)
+
+    def counting_fn(batches):
+        passes.add(1)
+        for b in batches:
+            node = pc.divide(b.column(0), pa.scalar(97, pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                [node, b.column(0)], names=["node", "ord"]
+            )
+
+    df = spark.range(0, 20000, 1, numPartitions=4).mapInArrow(
+        counting_fn, "node long, ord long"
+    )
+    offsets, ranges = build_index(df, "node", ["ord"])
+    got = _collect_ranges(ranges)
+    assert len(offsets.collect()) == len(got) == 20000 // 97 + 1
+    assert passes.value == 4, passes.value
