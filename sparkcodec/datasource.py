@@ -4,23 +4,26 @@ the encoded blocks table, with filter pushdown driving the zone maps.
 The reader surface (Spark 4.1 Python DataSource API):
 
 * ``schema()`` comes from ``_table_meta.json`` (the table's authoritative
-  schema, SURVEY §2 S6).
-* ``pushFilters`` accepts simple comparison filters on prunable columns
-  and folds them into [lo, hi] bounds per column. Zone-map pruning is
+  schema, SURVEY §2 S6), overlaid with the schema recorded at the read
+  snapshot.
+* ``pushFilters`` turns comparison, IN, prefix and null filters into the
+  normalized predicates ``decode_table(where=...)`` takes. Pruning is
   *conservative* (a kept part/block may still hold non-matching rows), so
   every filter is returned to Spark for post-scan re-evaluation — the
   pushdown only reduces I/O, never correctness obligations.
-* ``partitions()`` maps surviving parts (after part-level pruning across
-  ALL bounded columns) onto a bounded number of input partitions.
-* ``read()`` decodes with the same block-level row-range pruning the
-  engine's ``decode_table`` uses, intersecting ranges across bounded
-  columns, and yields Arrow RecordBatches.
+* ``partitions()`` plans the read with ``engine._plan_read`` and ships
+  one sub-plan per input partition; ``read()`` decodes it with
+  ``_ReadPlan.batches``.
 
-Reading via ``decode_table`` (mapInArrow) and via this data source are
-equivalent; this surface exists so plain ``spark.read`` users get
-predicate pushdown from Catalyst filters with no engine-specific API.
-Writes go through ``engine.encode_table`` (clustering + skew fanout need
-a job-level exchange a per-task writer cannot express).
+The batch reader, the changefeed and ``decode_table`` are equivalent by
+construction: they share one planner (part set, add_column defaults,
+field-id ghosts and aliases, part and block pruning) and one part
+decoder, and all split a read into ``min(parts, slots)`` tasks of
+contiguous parts. There is no task-count option. This surface exists so
+plain ``spark.read`` users get predicate pushdown from Catalyst filters
+with no engine-specific API. Writes go through ``engine.encode_table``
+(clustering + skew fanout need a job-level exchange a per-task writer
+cannot express).
 """
 
 from __future__ import annotations
@@ -80,23 +83,53 @@ def _resolve_sid_option(options, out_dir: str) -> int | None:
     return sid
 
 
-def _default_tasks() -> int:
-    """Scan parallelism when no ``tasks`` option is given: 4 tasks per
-    core of the ACTIVE session (planning runs driver-side, so the session
-    is normally reachable); ``os.cpu_count`` only as the last resort —
-    a driver-core count is a poor proxy for cluster parallelism."""
-    try:
-        from pyspark.sql import SparkSession
+def _slots() -> int:
+    """Task slots of the session a read runs in: the count decode_table
+    splits its plan by. Spark plans a Python data source in a worker the
+    JVM starts, where no SparkSession is reachable; there the count comes
+    from ``SPARKCODEC_SLOTS``, which ``sparkcodec.session.get_spark``
+    exports before it starts the JVM."""
+    from pyspark.sql import SparkSession
 
-        s = SparkSession.getActiveSession()
-        if s is not None:
-            return 4 * s.sparkContext.defaultParallelism
-    except Exception:
-        pass
-    return 4 * (os.cpu_count() or 8)
+    s = SparkSession.getActiveSession()
+    if s is not None:
+        return s.sparkContext.defaultParallelism
+    return int(os.environ.get("SPARKCODEC_SLOTS") or os.cpu_count() or 1)
 
 
-from .engine import _intersect_ranges  # shared with decode_table's multi-predicate path
+def _pushed_pred(f) -> tuple | None:
+    """One Catalyst filter as a normalized predicate (engine
+    ``_normalize_where`` forms, plus the ``(col, "isnull" | "notnull")``
+    null tests only this reader makes), or None when it cannot prune."""
+    if not hasattr(f, "attribute"):
+        return None
+    col = ".".join(f.attribute)
+    val = getattr(f, "value", None)
+    if isinstance(f, IsNotNull):
+        return (col, "notnull")
+    if isinstance(f, IsNull):
+        return (col, "isnull")
+    if isinstance(f, In):
+        vs = [v for v in val if v is not None]
+        if vs and all(isinstance(v, type(vs[0])) for v in vs):
+            return (col, tuple(vs))
+        return None
+    if val is None:
+        return None
+    if isinstance(f, EqualTo):
+        return (col, val, val)
+    if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+        return (col, val, None)
+    if isinstance(f, (LessThan, LessThanOrEqual)):
+        return (col, None, val)
+    if isinstance(f, StringStartsWith) and isinstance(val, str) and val:
+        # every string with this prefix sorts in
+        # [prefix, prefix-with-last-char-incremented)
+        hi = None
+        if ord(val[-1]) < 0x10FFFF:
+            hi = val[:-1] + chr(ord(val[-1]) + 1)
+        return (col, val, hi)
+    return None
 
 
 class SparkcodecReader(DataSourceReader):
@@ -105,239 +138,31 @@ class SparkcodecReader(DataSourceReader):
         if not self.out_dir:
             raise ValueError("sparkcodec reader requires .load(<blocks dir>)")
         self.snapshot_id = _resolve_sid_option(options, self.out_dir)
-        self.n_tasks = int(options.get("tasks", 0)) or None
         self.columns = [f.name for f in schema.fields]
-        self.bounds: dict[str, list] = {}  # col -> [lo, hi] (None = open)
-        self.nulls: dict[str, set] = {}  # col -> {"isnull" | "notnull"}
-        self.eqs: dict[str, list] = {}  # col -> probe values (=, IN)
+        self.wheres: list[tuple] = []  # conjunction of pushed filters
 
     def pushFilters(self, filters):
-        # add_column initial defaults: pre-add parts carry no stats or
-        # block files for the column yet their rows READ as the default,
-        # so pruning structures would misjudge them — never record
-        # pushdown predicates on defaulted columns (Spark re-evaluates
-        # every filter after this reader regardless)
-        try:
-            defaulted = set((_load_meta(self.out_dir).get("defaults") or {}))
-        except Exception:
-            defaulted = set()
         for f in filters:
-            col = ".".join(f.attribute) if hasattr(f, "attribute") else None
-            if col is None or col in defaulted:
-                continue
-            val = getattr(f, "value", None)
-            if isinstance(f, IsNotNull):
-                self.nulls.setdefault(col, set()).add("notnull")
-            elif isinstance(f, IsNull):
-                self.nulls.setdefault(col, set()).add("isnull")
-            elif isinstance(f, In):
-                vs = [v for v in getattr(f, "values", ()) if v is not None]
-                if vs and all(isinstance(v, type(vs[0])) for v in vs):
-                    self._narrow(col, min(vs), max(vs))
-                    self.eqs.setdefault(col, []).extend(vs)
-            elif val is None:
-                pass
-            elif isinstance(f, EqualTo):
-                self._narrow(col, val, val)
-                self.eqs.setdefault(col, []).append(val)
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                self._narrow(col, val, None)
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                self._narrow(col, None, val)
-            elif isinstance(f, StringStartsWith) and isinstance(val, str) and val:
-                # every string with this prefix sorts in
-                # [prefix, prefix-with-last-char-incremented)
-                hi = None
-                if ord(val[-1]) < 0x10FFFF:
-                    hi = val[:-1] + chr(ord(val[-1]) + 1)
-                self._narrow(col, val, hi)
+            w = _pushed_pred(f)
+            if w is not None:
+                self.wheres.append(w)
         # zone maps are conservative: Spark must re-evaluate every filter
         return filters
 
-    def _narrow(self, col, lo, hi):
-        cur = self.bounds.setdefault(col, [None, None])
-        if lo is not None and (cur[0] is None or lo > cur[0]):
-            cur[0] = lo
-        if hi is not None and (cur[1] is None or hi < cur[1]):
-            cur[1] = hi
-
     def partitions(self):
-        from .engine import (
-            completed_parts,
-            part_meta,
-            part_null_stats,
-            part_stats,
-            part_vsets,
-            prune_parts,
-            prune_parts_bloom,
-            prune_parts_eq,
-            prune_parts_nulls,
-            snapshot_parts,
-        )
-
-        parts = snapshot_parts(self.out_dir, self.snapshot_id)
-        if parts is None:
-            parts = sorted(completed_parts(self.out_dir))
-        # field-id resolution (ghosts for dropped-and-re-added names,
-        # aliases for renamed columns): computed on the driver and
-        # shipped INSIDE the partition values — the reader object is
+        # the plan rides the partition values: the reader object is
         # serialized before partitions() runs, so a mutated self
-        # attribute would never reach the executors. Tasks decode
-        # ghosted columns as NULL and renamed columns from their storage
-        # names, same rule as engine.decode_table. Computed BEFORE any
-        # stat pruning: a ghost part's recorded stats describe the DEAD
-        # field, and null pruning must not judge the tip's all-NULL
-        # column by them.
-        remap: dict = {}
-        from .engine import _column_remap, _needs_remap, snapshot_field_ids, snapshots
+        # attribute would never reach the executors
+        from .engine import _plan_read
 
-        snaps = snapshots(self.out_dir)
-        if _needs_remap(snaps):
-            sid = self.snapshot_id
-            if sid is None and snaps:
-                from .engine import _tip_entry
-
-                sid = _tip_entry(snaps)["id"]
-            if sid is not None:
-                remap = _column_remap(
-                    self.out_dir, self.columns, parts,
-                    snapshot_field_ids(self.out_dir, sid, snaps=snaps),
-                    snaps=snaps,
-                )
-        # parts where a column is GHOSTED decode it as all-NULL whatever
-        # its dead stats say: they must bypass null pruning on that
-        # column (an 'IS NULL' probe matches EVERY row of such a part,
-        # yet the dead field's zero-null accounting would drop it).
-        # Range/eq/IN pruning may still use the dead stats: those
-        # predicates never match NULL, so any drop they make is sound,
-        # and a keep is merely conservative (Spark re-evaluates filters).
-        # Aliased parts carry their stats under the storage name, so a
-        # lookup by the requested name misses and stays conservative.
-        ghost_parts: dict[str, set] = {}
-        for p, (gh, _al) in remap.items():
-            for c in gh:
-                ghost_parts.setdefault(c, set()).add(int(p))
-        if self.bounds or self.eqs or self.nulls:
-            # ONE manifest-backed metadata read for all pruning dimensions
-            # (O(#snapshots) files, not O(#parts) checkpoint opens)
-            pm = part_meta(self.out_dir, parts=parts)
-            for col, (lo, hi) in self.bounds.items():
-                parts = prune_parts(
-                    self.out_dir, (col, lo, hi), parts, stats=part_stats(self.out_dir, pm)
-                )
-            for col, values in self.eqs.items():
-                parts = prune_parts_eq(
-                    self.out_dir, col, values, parts, part_vsets(self.out_dir, pm)
-                )
-                parts = prune_parts_bloom(
-                    self.out_dir, col, values, parts,
-                    {p: d["bloom"] for p, d in pm.items()},
-                )
-            for col, kinds in self.nulls.items():
-                protected = ghost_parts.get(col, set())
-                prunable = [p for p in parts if int(p) not in protected]
-                kept_ghosts = [p for p in parts if int(p) in protected]
-                for kind in kinds:
-                    prunable = prune_parts_nulls(
-                        self.out_dir, col, kind, prunable,
-                        part_null_stats(self.out_dir, pm),
-                    )
-                parts = sorted(set(prunable) | set(kept_ghosts))
-        if not parts:
-            return [InputPartition([])]
-
-        def val(p):
-            gh, al = remap.get(int(p), (frozenset(), {}))
-            return (int(p), tuple(sorted(gh)), tuple(sorted(al.items())))
-
-        vals = [val(p) for p in parts]
-        n_tasks = self.n_tasks or min(len(parts), _default_tasks())
-        size = -(-len(parts) // n_tasks)
-        return [InputPartition(vals[i : i + size]) for i in range(0, len(vals), size)]
+        plan = _plan_read(
+            self.out_dir, self.columns, snapshot_id=self.snapshot_id,
+            wheres=self.wheres,
+        )
+        return [InputPartition(t) for t in plan.tasks(_slots())]
 
     def read(self, partition):
-        import pyarrow as pa
-
-        from .engine import (
-            _DECODE_ARROW_OF,
-            _decode_column_ranges,
-            _decode_part_batches,
-            _keep_row_ranges,
-            _keep_row_ranges_nulls,
-        )
-
-        meta = _load_meta(self.out_dir)
-        arrow_schema = pa.schema(
-            [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in self.columns]
-        )
-        fill = {
-            c: v for c, v in (meta.get("defaults") or {}).items()
-            if c in self.columns
-        } or None
-        for pid, gh_cols, al_items in partition.value:
-            gh = frozenset(gh_cols)
-            al = dict(al_items)
-            ranges = None
-            pruned = False
-            # a GHOST column is all-NULL at this snapshot, so its stored
-            # (dead) block stats must not drive pruning: a range or
-            # NOT NULL predicate matches nothing (drop the part), and
-            # IS NULL matches everything (skip pruning on it)
-            if any(c in gh for c in self.bounds) or any(
-                c in gh and "notnull" in ks for c, ks in self.nulls.items()
-            ):
-                continue
-            for col, (lo, hi) in self.bounds.items():
-                r = _keep_row_ranges(
-                    self.out_dir, pid, (al.get(col, col), lo, hi)
-                )
-                if r is not None:
-                    pruned = True
-                    ranges = r if ranges is None else _intersect_ranges(ranges, r)
-            for col, kinds in self.nulls.items():
-                for kind in kinds:
-                    if col in gh:
-                        continue  # isnull on a ghost: keeps every row
-                    r = _keep_row_ranges_nulls(
-                        self.out_dir, pid, al.get(col, col), kind
-                    )
-                    if r is not None:
-                        pruned = True
-                        ranges = r if ranges is None else _intersect_ranges(ranges, r)
-            if pruned and not ranges:
-                continue
-            if not pruned:
-                yield from _decode_part_batches(
-                    self.out_dir, self.columns, arrow_schema, pid, gh, al,
-                    fill,
-                )
-                continue
-            n_kept = sum(e - s for s, e in ranges)
-            def _absent(col):
-                t = arrow_schema.field(col).type
-                dv = (fill or {}).get(col)
-                arr = (
-                    pa.nulls(n_kept, type=t) if dv is None
-                    else pa.array([dv] * n_kept, type=t)
-                )
-                return pa.chunked_array([arr], type=t)
-
-            from .engine import _exists as _ex, _part_file as _pf
-
-            per_col = {
-                col: (
-                    _absent(col)
-                    if col in gh
-                    or not _ex(_pf(self.out_dir, al.get(col, col), pid))
-                    else _decode_column_ranges(
-                        self.out_dir, al.get(col, col), pid,
-                        arrow_schema.field(col).type, ranges,
-                    )
-                )
-                for col in self.columns
-            }
-            tbl = pa.Table.from_arrays([per_col[c] for c in self.columns], schema=arrow_schema)
-            yield from tbl.to_batches(max_chunksize=65536)
+        yield from partition.value.batches()
 
 
 class SparkcodecStreamReader(DataSourceStreamReader):
@@ -358,22 +183,15 @@ class SparkcodecStreamReader(DataSourceStreamReader):
         # .option("where", '[["doc_id",100,200],["lang",["de","fr"]]]')
         # (a CONJUNCTION in decode_table's where forms). Pruning is
         # conservative (zone maps), so compose with .filter for exactness.
-        self.wheres = None
-        self.wheres_any = None
-        w = options.get("where")
-        if w:
-            self.wheres = self._parse_where(w)
+        self.wheres = self._parse_where(options.get("where") or "[]")
+        # DNF disjunction, same semantics as decode_table(where_any=):
+        # JSON list of DISJUNCTS, each a predicate or conjunction —
+        # '[[["lang",["de"]]], [["doc_id",0,99]]]' = lang IN ('de')
+        # OR doc_id BETWEEN 0 AND 99. An empty disjunct prunes nothing.
         wa = options.get("where_any")
-        if wa:
-            # DNF disjunction, same semantics as decode_table(where_any=):
-            # JSON list of DISJUNCTS, each a predicate or conjunction —
-            # '[[["lang",["de"]]], [["doc_id",0,99]]]' = lang IN ('de')
-            # OR doc_id BETWEEN 0 AND 99. An empty disjunct normalizes
-            # to [] (always-true: prunes nothing), never None — read()'s
-            # range walk iterates each disjunct.
-            self.wheres_any = [
-                self._parse_where(d) or [] for d in json.loads(wa)
-            ]
+        self.wheres_any = (
+            [self._parse_where(d) for d in json.loads(wa)] if wa else None
+        )
 
     @staticmethod
     def _parse_where(spec):
@@ -388,7 +206,7 @@ class SparkcodecStreamReader(DataSourceStreamReader):
             spec = json.loads(spec)
         if spec and isinstance(spec[0], str):
             spec = [spec]  # single bare predicate -> conjunction of one
-        return _normalize_where([tuple(p) for p in spec]) or None
+        return _normalize_where([tuple(p) for p in spec])
 
     def initialOffset(self):
         return {"snapshot": 0}
@@ -400,7 +218,7 @@ class SparkcodecStreamReader(DataSourceStreamReader):
         return {"snapshot": snaps[-1]["id"] if snaps else 0}
 
     def partitions(self, start, end):
-        from .engine import snapshots
+        from .engine import _plan_read, snapshots
 
         lo, hi = start["snapshot"], end["snapshot"]
         parts = [
@@ -425,83 +243,14 @@ class SparkcodecStreamReader(DataSourceStreamReader):
                 else s["new_parts"]
             )
         ]
-        if parts and (self.wheres or self.wheres_any):
-            # part-level pruning through every dimension (zone maps +
-            # value sets + blooms) before any task is scheduled; DNF
-            # disjuncts prune independently and their survivors union
-            from .engine import _prune_parts_conj, part_meta
-
-            pm = part_meta(self.out_dir, parts=parts)
-            if self.wheres:
-                parts = _prune_parts_conj(self.out_dir, self.wheres, parts, pm)
-            if self.wheres_any:
-                keep: set = set()
-                for conj in self.wheres_any:
-                    keep |= set(
-                        _prune_parts_conj(self.out_dir, conj or [], parts, pm)
-                    )
-                parts = sorted(keep)
-        if not parts:
-            return [InputPartition([])]
-        # field-id resolution shipped inside the values (same reason as
-        # the batch reader: the reader serializes before partitions())
-        from .engine import (
-            _column_remap,
-            _needs_remap,
-            _tip_entry,
-            snapshot_field_ids,
-            snapshots,
+        plan = _plan_read(
+            self.out_dir, self.columns, parts=parts,
+            wheres=self.wheres, wheres_any=self.wheres_any,
         )
-
-        snaps = snapshots(self.out_dir)
-        remap: dict = {}
-        if _needs_remap(snaps) and snaps:
-            remap = _column_remap(
-                self.out_dir, self.columns, parts,
-                snapshot_field_ids(
-                    self.out_dir, _tip_entry(snaps)["id"], snaps=snaps
-                ),
-                snaps=snaps,
-            )
-
-        def val(p):
-            gh, al = remap.get(int(p), (frozenset(), {}))
-            return (int(p), tuple(sorted(gh)), tuple(sorted(al.items())))
-
-        vals = [val(p) for p in parts]
-        n_tasks = min(len(vals), _default_tasks())
-        size = -(-len(vals) // n_tasks)
-        return [InputPartition(vals[i : i + size]) for i in range(0, len(vals), size)]
+        return [InputPartition(t) for t in plan.tasks(_slots())]
 
     def read(self, partition):
-        import pyarrow as pa
-
-        from .engine import (
-            _DECODE_ARROW_OF,
-            _decode_part_batches_ranged,
-            _keep_row_ranges_dnf,
-        )
-
-        meta = _load_meta(self.out_dir)
-        arrow_schema = pa.schema(
-            [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in self.columns]
-        )
-        fill = {
-            c: v for c, v in (meta.get("defaults") or {}).items()
-            if c in self.columns
-        } or None
-        for pid, gh_cols, al_items in partition.value:
-            gh, al = frozenset(gh_cols), dict(al_items)
-            ranges = (
-                _keep_row_ranges_dnf(
-                    self.out_dir, pid, self.wheres or [], self.wheres_any, al
-                )
-                if (self.wheres or self.wheres_any)
-                else None
-            )
-            yield from _decode_part_batches_ranged(
-                self.out_dir, self.columns, arrow_schema, pid, ranges, gh, al
-            )
+        yield from partition.value.batches()
 
     def commit(self, end):
         pass  # snapshot log is append-only; nothing to clean up
@@ -540,35 +289,19 @@ class SparkcodecCDCStreamReader(DataSourceStreamReader):
         return {"snapshot": snaps[-1]["id"] if snaps else 0}
 
     def partitions(self, start, end):
-        from .engine import (
-            _cdc_plan,
-            _column_remap,
-            _needs_remap,
-            _tip_entry,
-            snapshot_field_ids,
-            snapshots,
-        )
+        from .engine import _cdc_plan, _plan_read, snapshots
 
-        snaps = snapshots(self.out_dir)
-        plan = _cdc_plan(snaps, start["snapshot"], end["snapshot"])
+        plan = _cdc_plan(snapshots(self.out_dir), start["snapshot"], end["snapshot"])
+        if not plan:
+            return [InputPartition([])]
         # field-id resolution for the key column rides each plan row
-        remap: dict = {}
-        if plan and _needs_remap(snaps):
-            remap = _column_remap(
-                self.out_dir, [self.key_col], sorted({p[1] for p in plan}),
-                snapshot_field_ids(
-                    self.out_dir, _tip_entry(snaps)["id"], snaps=snaps
-                ),
-                snaps=snaps,
-            )
+        remap = _plan_read(
+            self.out_dir, [self.key_col], parts=[p[1] for p in plan]
+        ).remap
         by_sid: dict[int, list] = {}
         for sid, pid, w, ch in plan:
             gh, al = remap.get(int(pid), (frozenset(), {}))
-            by_sid.setdefault(sid, []).append(
-                (sid, pid, w, ch, tuple(sorted(gh)), tuple(sorted(al.items())))
-            )
-        if not by_sid:
-            return [InputPartition([])]
+            by_sid.setdefault(sid, []).append((sid, pid, w, ch, gh, al))
         return [InputPartition(rows) for _sid, rows in sorted(by_sid.items())]
 
     def read(self, partition):
@@ -591,10 +324,9 @@ class SparkcodecCDCStreamReader(DataSourceStreamReader):
         # per-part vectorized value_counts, then one Arrow group-by sum
         # per channel — no per-row Python anywhere on the key path
         per_ch: dict[str, list] = {"insert": [], "delete": []}
-        for _sid, pid, w, ch, gh_cols, al_items in partition.value:
+        for _sid, pid, w, ch, gh, al in partition.value:
             res = _part_key_counts(
-                self.out_dir, self.key_col, key_schema, pid,
-                frozenset(gh_cols), dict(al_items),
+                self.out_dir, self.key_col, key_schema, pid, gh, al
             )
             if res is None:
                 continue
@@ -813,6 +545,12 @@ class SparkcodecDataSource(DataSource):
     Reading requires ``spark.sql.python.filterPushdown.enabled=true``
     (on by default in ``sparkcodec.session.get_spark``) because the
     reader implements filter pushdown.
+
+    Every reader here plans and decodes exactly as ``decode_table`` does
+    (``engine._plan_read``), so the same snapshot, predicates and columns
+    give the same parts and rows through either surface. A read runs
+    ``min(parts, slots)`` tasks, where slots is the session's
+    ``defaultParallelism``; no option changes that.
 
     Column pruning: the Python DataSource API pushes filters but not
     projections, so a bare ``.load(dir).select("lang")`` still decodes

@@ -40,6 +40,10 @@ def get_spark(
     os.environ.update(_MALLOC_ENV)
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    # Spark plans Python data sources in workers the JVM starts, where no
+    # session is reachable; the JVM inherits this environment, so those
+    # planners size their reads by the session's slots, not the CPU count
+    os.environ["SPARKCODEC_SLOTS"] = str(cores)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

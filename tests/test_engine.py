@@ -174,6 +174,39 @@ def test_aligned_layout_hive_partitioned_source(spark, code_files_small, tmp_pat
     assert report["ok"], report
 
 
+@pytest.mark.parametrize("kind", ["legacy_rebase", "int96"])
+def test_aligned_layout_spark_rebased_source(spark, tmp_path, kind):
+    """pyarrow reads neither Spark's LEGACY calendar rebase nor INT96
+    timestamps the way the Spark scan does: the aligned encode must take
+    the Spark-scan path for such files and store what Spark reads."""
+    conf = {
+        "legacy_rebase": {
+            "spark.sql.parquet.datetimeRebaseModeInWrite": "LEGACY",
+            "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        },
+        "int96": {
+            "spark.sql.parquet.int96RebaseModeInWrite": "CORRECTED",
+            "spark.sql.parquet.outputTimestampType": "INT96",
+        },
+    }[kind]
+    src = str(tmp_path / f"src_{kind}")
+    day = "date_add(date'1000-01-01', cast(id AS int))"
+    df = spark.range(50).selectExpr(
+        "id", f"{day} AS d", f"cast({day} AS timestamp) AS ts"
+    )
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        df.coalesce(1).write.parquet(src)
+    finally:
+        for k in conf:
+            spark.conf.unset(k)
+    want = spark.read.parquet(src).orderBy("id").collect()
+    out = str(tmp_path / f"enc_{kind}")
+    encode_table(spark, spark.read.parquet(src), out, layout="aligned")
+    assert decode_table(spark, out).orderBy("id").collect() == want
+
+
 def test_decode_table_one_task_per_slot(spark, tmp_path):
     """More parts than slots decode in one task per slot, with rows in
     part order (spark.range hands each task a contiguous part run)."""

@@ -606,31 +606,21 @@ def test_datasource_null_pushdown_prunes(spark, tmp_path):
 
 
 def test_datasource_tasks_follow_session_parallelism(spark, tmp_path):
-    """Default DS scan parallelism derives from the active session's
-    defaultParallelism, not the machine's cpu count."""
-    from pyspark.sql.types import StructType
-
-    from sparkcodec.datasource import SparkcodecReader, _default_tasks
+    """DS scans split by the rule decode_table uses, min(parts,
+    defaultParallelism) of the active session — not the machine's cpu
+    count — whether planned in-process or by the worker Spark starts to
+    plan a Python data source."""
+    from sparkcodec.datasource import SparkcodecDataSource, SparkcodecReader
+    from sparkcodec.engine import completed_parts, decode_table
 
     out = str(tmp_path / "dstasks")
     _encode_docs(spark, "/root/testdata/sf0.001", out, num_parts=6)
-    assert _default_tasks() == 4 * spark.sparkContext.defaultParallelism
-    ds_schema = spark.read.format("sparkcodec").load(out).schema \
-        if False else None
-    # direct reader instantiation (planning runs driver-side like this)
-    from sparkcodec.engine import _SPARK_TYPE_OF, completed_parts
-    import json
-
-    with open(f"{out}/_table_meta.json") as fh:
-        meta = json.load(fh)
-    from pyspark.sql.types import _parse_datatype_string
-
-    schema = _parse_datatype_string(
-        ", ".join(f"`{c}` {_SPARK_TYPE_OF[meta['schema'][c]]}" for c in meta["columns"])
-    )
-    r = SparkcodecReader({"path": out}, schema)
-    n_parts = len(completed_parts(out))
-    assert len(r.partitions()) == min(n_parts, 4 * spark.sparkContext.defaultParallelism)
+    spark.dataSource.register(SparkcodecDataSource)
+    ds = spark.read.format("sparkcodec").load(out)
+    want = min(len(completed_parts(out)), spark.sparkContext.defaultParallelism)
+    assert len(SparkcodecReader({"path": out}, ds.schema).partitions()) == want
+    assert ds.rdd.getNumPartitions() == want
+    assert decode_table(spark, out).rdd.getNumPartitions() == want
 
 
 def test_v3_records_to_full_sonata(spark, tmp_path):
