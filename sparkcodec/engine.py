@@ -2877,11 +2877,11 @@ def _resolve_snapshot_meta(
     snapshot_id: int | None,
     snaps: list[dict] | None = None,
 ) -> tuple[dict, int | None, list[dict]]:
-    """Overlay the schema recorded at the RESOLVED snapshot (explicit id,
-    else the tip) onto ``meta`` — the one place the
-    tip/explicit-id/pre-versioning-fallback rules live, shared by
-    decode_table, table_column_stats, and the DataSource schema().
-    Returns (meta, resolved_sid, snaps)."""
+    """Overlay the schema and field ids recorded at the RESOLVED snapshot
+    (explicit id, else the tip) onto ``meta`` — the one place the
+    tip/explicit-id/pre-versioning-fallback rules live, shared by every
+    read plan, the maintenance rewrites, table_column_stats and the
+    DataSource schema(). Returns (meta, resolved_sid, snaps)."""
     if snaps is None:
         snaps = snapshots(out_dir)
     sid = snapshot_id if snapshot_id is not None else (
@@ -2891,6 +2891,9 @@ def _resolve_snapshot_meta(
         ss = snapshot_schema(out_dir, sid, snaps=snaps)
         if ss is not None:
             meta = dict(meta, columns=ss[0], schema=ss[1])
+        fids = snapshot_field_ids(out_dir, sid, snaps=snaps)
+        if fids is not None:
+            meta = dict(meta, field_ids=fids)
     return meta, sid, snaps
 
 
@@ -3245,113 +3248,105 @@ def _part_row_count(out_dir: str, pid: int) -> int:
     return int(t.column("n_rows")[0].as_py())
 
 
-def _decode_part_batches(
-    out_dir: str, columns, arrow_schema: pa.Schema, pid: int,
+def _decode_part_batches_ranged(
+    out_dir: str, columns, arrow_schema: pa.Schema, pid: int, ranges=None,
     ghost_cols: frozenset = frozenset(),
     aliases: dict | None = None,
     fill: dict | None = None,
 ):
-    """Decode one part's requested columns into Arrow batches (the shared
-    unpruned path: every reader through :meth:`_ReadPlan.batches`, and
-    the maintenance rewrites, route through here). A column with no block file
-    for this part predates a schema evolution — it decodes as nulls.
-    ``ghost_cols`` are columns whose block files exist but belong to a
-    RETIRED field id (the name was dropped and re-added; see
-    :func:`_column_remap`) — they decode as nulls too, never as the dead
-    field's historical values. ``aliases`` maps a requested name to the
-    STORAGE name this part holds the field under (rename_column is
-    metadata-only; old parts keep their old block-file names). ``fill``
-    carries add_column initial DEFAULTS: they apply exactly where the
-    absent/ghosted column would otherwise yield NULL — rows written
-    after the add keep their stored values, including stored NULLs."""
-    per_col = {}
+    """Decode one part's requested columns into Arrow batches, restricted
+    to the given row ranges (None = all rows, [] = nothing) — the part
+    decoder of every reader and rewrite (:meth:`_ReadPlan.batches`).
+
+    - With ranges, only the blocks overlapping them are read and decoded
+      (:func:`_decode_column_ranges`); without, each column file is read
+      whole. Block grids are per column (the byte cap can split a wide
+      column finer than a narrow one), so each column reassembles
+      independently as a chunked array — zero-copy concat — and Arrow
+      re-slices aligned output batches.
+    - A column with no block file for this part predates a schema
+      evolution: it decodes as nulls. ``ghost_cols`` are columns whose
+      block files belong to a RETIRED field id (dropped and re-added; see
+      :func:`_column_remap`): nulls too, never the dead field's values.
+    - ``aliases`` maps a requested name to the STORAGE name this part
+      holds the field under (rename_column is metadata-only).
+    - ``fill`` carries add_column initial DEFAULTS: they apply exactly
+      where an absent or ghosted column would yield NULL — rows written
+      after the add keep their stored values, including stored NULLs."""
+    if ranges is not None and not ranges:
+        return  # every block of this part pruned
+    per_col = []
     for col in columns:
         target = arrow_schema.field(col).type
-        path = _part_file(out_dir, (aliases or {}).get(col, col), pid)
+        stored = (aliases or {}).get(col, col)
+        path = _part_file(out_dir, stored, pid)
         if col in ghost_cols or not _exists(path):
-            n = _part_row_count(out_dir, pid)
+            n = (
+                _part_row_count(out_dir, pid) if ranges is None
+                else sum(e - s for s, e in ranges)
+            )
             dv = (fill or {}).get(col)
             arr = (
                 pa.nulls(n, type=target) if dv is None
                 else pa.array([dv] * n, type=target)
             )
-            per_col[col] = pa.chunked_array([arr], type=target)
-            continue
-        t = _pq_read(path).sort_by("block_id")
-        chunks = [
-            _to_output_type(
-                decode_array(
-                    t.column("payload")[b].as_py(),
-                    json.loads(t.column("meta")[b].as_py()),
-                ),
-                target,
+            per_col.append(pa.chunked_array([arr], type=target))
+        elif ranges is not None:
+            per_col.append(
+                _decode_column_ranges(out_dir, stored, pid, target, ranges)
             )
-            for b in range(t.num_rows)
-        ]
-        per_col[col] = pa.chunked_array(chunks, type=target)
-    tbl = pa.Table.from_arrays([per_col[c] for c in columns], schema=arrow_schema)
+        else:
+            t = _pq_read(path).sort_by("block_id")
+            per_col.append(pa.chunked_array(
+                [
+                    _to_output_type(
+                        decode_array(
+                            t.column("payload")[b].as_py(),
+                            json.loads(t.column("meta")[b].as_py()),
+                        ),
+                        target,
+                    )
+                    for b in range(t.num_rows)
+                ],
+                type=target,
+            ))
+    tbl = pa.Table.from_arrays(per_col, schema=arrow_schema)
     yield from tbl.to_batches(max_chunksize=65536)
 
 
-def _decode_part_batches_ranged(
-    out_dir: str, columns, arrow_schema: pa.Schema, pid: int, ranges,
-    ghost_cols: frozenset = frozenset(),
-    aliases: dict | None = None,
-    fill: dict | None = None,
-):
-    """Decode one part restricted to the given row ranges (None = all
-    rows, [] = nothing). Block grids are per column (the byte cap can
-    split a wide column finer than a narrow one), so each column
-    reassembles independently as a chunked array — zero-copy concat —
-    and Arrow re-slices aligned output batches. The part decoder of
-    every reader (:meth:`_ReadPlan.batches`).
-    ``ghost_cols`` decode as nulls, ``aliases`` resolve renamed columns
-    to their storage names, ``fill`` applies add_column defaults (see
-    :func:`_decode_part_batches`)."""
-    if ranges is not None and not ranges:
-        return  # every block of this part pruned
-    if ranges is None:
-        yield from _decode_part_batches(
-            out_dir, columns, arrow_schema, pid, ghost_cols, aliases, fill
-        )
-        return
-    n_kept = sum(e - s for s, e in ranges)
+def _split_runs(n: int, slots: int) -> list[tuple[int, int]]:
+    """The task rule of every Python stage: ``min(n, slots)`` contiguous
+    ``[a, b)`` runs over ``range(n)``, in order (one run when n = 0).
+    Each Python task pays a fixed floor (~0.2-0.3 s measured at local[2]
+    on a 4-vCPU VM) before doing any work, so a second wave of tasks
+    costs a floor per slot for no parallelism."""
+    k = max(1, min(n, slots))
+    cuts = [i * n // k for i in range(k + 1)]
+    return list(zip(cuts, cuts[1:]))
 
-    def absent(col):
-        t = arrow_schema.field(col).type
-        dv = (fill or {}).get(col)
-        arr = (
-            pa.nulls(n_kept, type=t) if dv is None
-            else pa.array([dv] * n_kept, type=t)
-        )
-        return pa.chunked_array([arr], type=t)
 
-    per_col = {
-        col: (
-            absent(col)
-            if col in ghost_cols or not _exists(
-                _part_file(out_dir, (aliases or {}).get(col, col), pid)
-            )
-            else _decode_column_ranges(
-                out_dir, (aliases or {}).get(col, col), pid,
-                arrow_schema.field(col).type, ranges,
-            )
-        )
-        for col in columns
-    }
-    part_table = pa.Table.from_arrays(
-        [per_col[c] for c in columns], schema=arrow_schema
-    )
-    yield from part_table.to_batches(max_chunksize=65536)
+def _run_tasks(spark: SparkSession, tasks: list, fn, ddl: str) -> DataFrame:
+    """One Python task per entry of ``tasks``: ``fn(task)`` yields Arrow
+    record batches of schema ``ddl``. ``spark.range`` drives the kernel
+    (pure JVM) with the tasks in the kernel closure — a
+    ``createDataFrame(plan).repartition()`` driver table would add a
+    pickled-RDD Python scan plus an exchange to every job."""
+
+    def kernel(batches):
+        for batch in batches:
+            for idx in batch.column(0).to_pylist():
+                yield from fn(tasks[idx])
+
+    return spark.range(0, len(tasks), 1, len(tasks)).mapInArrow(kernel, ddl)
 
 
 @dataclasses.dataclass(frozen=True)
 class _ReadPlan:
     """One read, planned on the driver by :func:`_plan_read` and decoded
     on executors by :meth:`batches` — the single read path behind
-    ``decode_table``, ``format("sparkcodec")`` and its changefeed.
-    Picklable: it rides decode_table's ``mapInArrow`` closure and the
-    data sources' ``InputPartition`` values."""
+    ``decode_table``, ``format("sparkcodec")``, its changefeed and the
+    maintenance rewrites. Picklable: it rides the ``mapInArrow``
+    closures and the data sources' ``InputPartition`` values."""
 
     out_dir: str
     columns: list
@@ -3362,6 +3357,7 @@ class _ReadPlan:
     parts: list  # kept part ids, in part order
     remap: dict  # {part_id: (ghosts, aliases)} of kept parts
     field_metadata: dict
+    field_ids: dict  # {column: field id} at the planned snapshot
 
     @property
     def arrow_schema(self) -> pa.Schema:
@@ -3376,34 +3372,33 @@ class _ReadPlan:
         )
 
     def tasks(self, slots: int) -> list[_ReadPlan]:
-        """``min(len(parts), slots)`` sub-plans, as contiguous runs that
-        keep part order: each Python task pays a fixed floor (~0.2-0.3 s
-        measured at local[2] on a 4-vCPU VM) before decoding anything, so
-        a second wave of tasks costs a floor per slot for no parallelism."""
-        n = len(self.parts)
-        k = max(1, min(n, slots))
-        cuts = [i * n // k for i in range(k + 1)]
+        """Sub-plans, one per run of :func:`_split_runs` (part order
+        kept)."""
         return [
             dataclasses.replace(
                 self,
                 parts=self.parts[a:b],
                 remap={p: self.remap[p] for p in self.parts[a:b] if p in self.remap},
             )
-            for a, b in zip(cuts, cuts[1:])
+            for a, b in _split_runs(len(self.parts), slots)
         ]
 
+    def part_batches(self, pid: int):
+        """Decode one part: block ranges from the prunable predicates,
+        then only the surviving blocks of each column."""
+        gh, al = self.remap.get(pid, (frozenset(), {}))
+        ranges = _keep_row_ranges_dnf(
+            self.out_dir, pid, self.wheres, self.wheres_any, al, gh
+        )
+        yield from _decode_part_batches_ranged(
+            self.out_dir, self.columns, self.arrow_schema, pid, ranges, gh,
+            al, self.fill,
+        )
+
     def batches(self):
-        """Decode every part of the plan: block ranges from the prunable
-        predicates, then only the surviving blocks of each column."""
-        schema = self.arrow_schema
+        """Decode every part of the plan."""
         for pid in self.parts:
-            gh, al = self.remap.get(pid, (frozenset(), {}))
-            ranges = _keep_row_ranges_dnf(
-                self.out_dir, pid, self.wheres, self.wheres_any, al, gh
-            )
-            yield from _decode_part_batches_ranged(
-                self.out_dir, self.columns, schema, pid, ranges, gh, al, self.fill
-            )
+            yield from self.part_batches(pid)
 
 
 def _plan_read(
@@ -3468,6 +3463,7 @@ def _plan_read(
         if parts is None:
             parts = completed_parts(out_dir)
     parts = sorted({int(p) for p in parts})
+    fids = _field_ids_of(meta)[0]
     defaults = meta.get("defaults") or {}
     wheres = _prunable_preds(list(wheres), defaults)
     wheres_any = _prunable_dnf(wheres_any, defaults) or None
@@ -3508,6 +3504,7 @@ def _plan_read(
             c: md for c, md in (meta.get("field_metadata") or {}).items()
             if c in columns
         },
+        field_ids={c: fids[c] for c in columns if c in fids},
     )
 
 
@@ -3612,18 +3609,9 @@ def decode_table(
         wheres=_normalize_where(where),
         wheres_any=[_normalize_where(w) for w in (where_any or [])],
     )
-    # spark.range drives the kernel (pure JVM) with the sub-plans in the
-    # kernel closure — a createDataFrame(parts).repartition() driver table
-    # would add a pickled-RDD Python scan plus an exchange to every read
-    tasks = plan.tasks(spark.sparkContext.defaultParallelism)
-
-    def kernel(batches):
-        for batch in batches:
-            for idx in batch.column(0).to_pylist():
-                yield from tasks[idx].batches()
-
-    out = spark.range(0, len(tasks), 1, len(tasks)).mapInArrow(
-        kernel, plan.spark_ddl
+    out = _run_tasks(
+        spark, plan.tasks(spark.sparkContext.defaultParallelism),
+        _ReadPlan.batches, plan.spark_ddl,
     )
     for c, md in plan.field_metadata.items():
         out = out.withMetadata(c, md)
@@ -3755,6 +3743,113 @@ def watch_encode(out_dir: str, num_parts: int | None = None, interval: float = 1
 # ~8 MB — see BENCH.md)
 
 
+def _next_part_base(out_dir: str, live: list[int]) -> int:
+    """First id of a rewrite's new parts: above every live, completed
+    and reserved part id."""
+    return _base_above_reservations(
+        out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
+    )
+
+
+_REWRITE_DDL = "gi int, new_pid int, n_before long, n_after long, enc_bytes long"
+_REWRITE_SCHEMA = pa.schema([
+    ("gi", pa.int32()), ("new_pid", pa.int32()), ("n_before", pa.int64()),
+    ("n_after", pa.int64()), ("enc_bytes", pa.int64()),
+])
+
+
+def _rewrite_group(
+    plan: _ReadPlan, block_rows: int, gi: int, group: list[int],
+    new_pid: int, mask=None,
+) -> dict:
+    """Rewrite group ``gi`` (parts ``group``) into part ``new_pid``:
+    decode its parts through ``plan``, drop the rows ``mask`` marks (a
+    picklable callable: arrow Table -> boolean mask of rows to DELETE,
+    null-safe), and re-encode the rest through the standard part kernel
+    with a fresh codec selection. A masked group that loses no row is
+    not written (its part keeps its id), nor one that loses every row.
+    Returns the group's summary row (``new_pid`` -1 = nothing written)."""
+    import pyarrow.compute as pc
+
+    tbl = pa.Table.from_batches(
+        [b for pid in group for b in plan.part_batches(pid)],
+        schema=plan.arrow_schema,
+    )
+    n_before = tbl.num_rows
+    if mask is not None:
+        tbl = tbl.filter(pc.invert(mask(tbl)))
+    wrote, enc = -1, 0
+    if mask is None or 0 < tbl.num_rows < n_before:
+        r = _encode_one_part(
+            new_pid, tbl.to_batches(max_chunksize=65536), plan.columns,
+            plan.out_dir, block_rows, 32 << 20, set(), {},
+            field_ids=plan.field_ids,
+        )
+        wrote, enc = new_pid, r["enc_bytes"]
+    return {"gi": gi, "new_pid": wrote, "n_before": n_before,
+            "n_after": tbl.num_rows, "enc_bytes": enc}
+
+
+def _rewrite_summary(plan: _ReadPlan, groups: list[list[int]], rows) -> dict:
+    """What a rewrite did, from its summary rows: ``removed_parts``
+    (every part of a group that was written or lost rows),
+    ``new_parts``, ``rows_deleted``, the written ``n_rows`` and
+    ``enc_bytes``, plus the planned snapshot's ``columns``, ``schema``
+    and ``field_ids`` for the committed entry to stamp."""
+    return {
+        "removed_parts": sorted(
+            p for r in rows if r["new_pid"] >= 0 or r["n_after"] < r["n_before"]
+            for p in groups[r["gi"]]
+        ),
+        "new_parts": sorted(r["new_pid"] for r in rows if r["new_pid"] >= 0),
+        "rows_deleted": int(sum(r["n_before"] - r["n_after"] for r in rows)),
+        "n_rows": int(sum(r["n_after"] for r in rows if r["new_pid"] >= 0)),
+        "enc_bytes": int(sum(r["enc_bytes"] for r in rows)),
+        "columns": plan.columns,
+        "schema": plan.types,
+        "field_ids": plan.field_ids,
+    }
+
+
+def _rewrite_parts(
+    spark: SparkSession,
+    out_dir: str,
+    groups: list[list[int]],
+    base: int,
+    block_rows: int,
+    *,
+    snapshot_id: int | None = None,
+    mask=None,
+) -> dict:
+    """The part rewriter of compaction, row-level delete and merge: group
+    ``i`` of ``groups`` becomes part ``base + i`` (see
+    :func:`_rewrite_group`). Rewrites resolve the schema and field ids
+    at ``snapshot_id`` (default: the tip; delete and merge pass the
+    branch tip) through :func:`_plan_read`, exactly like readers do: the
+    snapshot's columns and types, add_column defaults, and per-part
+    ghosts and aliases. So a rollback or a branch that does not own
+    ``_table_meta.json`` rewrites under its own schema, and the new
+    parts carry that snapshot's field ids. One Spark job of
+    ``min(len(groups), slots)`` Python tasks on ``spark.range``.
+    Returns :func:`_rewrite_summary`."""
+    plan = _plan_read(
+        out_dir, snapshot_id=snapshot_id, parts=[p for g in groups for p in g]
+    )
+    jobs = [(gi, g, base + gi) for gi, g in enumerate(groups)]
+    tasks = [
+        jobs[a:b] for a, b in
+        _split_runs(len(jobs), spark.sparkContext.defaultParallelism)
+    ]
+
+    def run(task):
+        for gi, g, new_pid in task:
+            row = _rewrite_group(plan, block_rows, gi, g, new_pid, mask)
+            yield pa.RecordBatch.from_pylist([row], schema=_REWRITE_SCHEMA)
+
+    rows = _run_tasks(spark, tasks, run, _REWRITE_DDL).collect()
+    return _rewrite_summary(plan, groups, rows)
+
+
 @_with_concurrency("compact")
 def compact_table(
     spark: SparkSession,
@@ -3769,9 +3864,12 @@ def compact_table(
     time-travelable (Iceberg posture: compaction rewrites the live set,
     `expire_snapshots` reclaims bytes). Groups are consecutive live
     parts bin-packed to ``target_part_rows``; groups of one part are
-    left alone. One Spark job: each task decodes its group's parts and
-    re-encodes them through the standard part kernel (codec re-selection
-    included — merged parts may pick better codecs from fuller samples).
+    left alone. One Spark job (:func:`_rewrite_parts`): each task decodes
+    its groups' parts and re-encodes them through the standard part
+    kernel (codec re-selection included — merged parts may pick better
+    codecs from fuller samples). The rewrite resolves the schema and
+    field ids at the tip, like readers do, and the entry stamps them: a
+    rollback across a schema change compacts under the restored schema.
 
     ``concurrency="optimistic"``: the rewrite runs WITHOUT the table
     lock (new-part ids from a range reservation), and the commit is a
@@ -3824,72 +3922,20 @@ def compact_table(
         res = reserve_part_range(out_dir, len(groups), "compact")
         base = res["base"]
     else:
-        base = _base_above_reservations(
-            out_dir,
-            max(max(live), max(completed_parts(out_dir), default=0)) + 1,
-        )
-    columns = meta["columns"]
-    arrow_schema = pa.schema(
-        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
+        base = _next_part_base(out_dir, live)
+    rw = _rewrite_parts(
+        spark, out_dir, groups, base, meta.get("block_rows") or 65536
     )
-    block_rows = meta.get("block_rows") or 65536
-    # field-id identity through the rewrite: a dropped-and-re-added
-    # column's old parts decode as NULL here too (never resurrected into
-    # the merged copy), renamed columns resolve to their storage names,
-    # and the merged parts carry the CURRENT ids under the CURRENT names
-    cur_fids, _ = _field_ids_of(meta)
-    fill_d = meta.get("defaults") or None  # rewrites materialize defaults
-    snaps_g = snapshots(out_dir)
-    remap = (
-        _column_remap(out_dir, columns, [p for g in groups for p in g],
-                      cur_fids, snaps=snaps_g)
-        if _needs_remap(snaps_g) else {}
-    )
-    plan = [(base + i, json.dumps(g)) for i, g in enumerate(groups)]
-    plan_df = spark.createDataFrame(plan, "new_pid int, grp string").repartition(
-        max(1, min(len(plan), 4 * spark.sparkContext.defaultParallelism))
-    )
-
-    def kernel(batches):
-        for batch in batches:
-            for new_pid, grp in zip(
-                batch.column("new_pid").to_pylist(), batch.column("grp").to_pylist()
-            ):
-                merged = []
-                for pid in json.loads(grp):
-                    gh, al = remap.get(int(pid), (frozenset(), {}))
-                    merged.extend(
-                        _decode_part_batches(
-                            out_dir, columns, arrow_schema, pid, gh, al,
-                            fill_d,
-                        )
-                    )
-                r = _encode_one_part(
-                    new_pid, merged, columns, out_dir, block_rows, 32 << 20,
-                    set(), {}, field_ids=cur_fids,
-                )
-                yield pa.RecordBatch.from_pylist(
-                    [{k: r[k] for k in ("part_id", "n_rows", "raw_bytes", "enc_bytes")}],
-                    schema=pa.schema(
-                        [("part_id", pa.int32()), ("n_rows", pa.int64()),
-                         ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64())]
-                    ),
-                )
-
-    summary = plan_df.mapInArrow(
-        kernel, "part_id int, n_rows long, raw_bytes long, enc_bytes long"
-    ).collect()
-    removed = sorted(p for g in groups for p in g)
-    created = sorted(r["part_id"] for r in summary)
+    removed, created = rw["removed_parts"], rw["new_parts"]
     body = {
         "new_parts": created,
         "removed_parts": removed,
-        "n_rows": sum(r["n_rows"] for r in summary),
-        "enc_bytes": sum(r["enc_bytes"] for r in summary),
+        "n_rows": rw["n_rows"],
+        "enc_bytes": rw["enc_bytes"],
         "layout": meta.get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
-        "field_ids": cur_fids,
+        "columns": rw["columns"],
+        "schema": rw["schema"],
+        "field_ids": rw["field_ids"],
         "compaction": True,
         "ts": time.time(),
     }
@@ -3936,9 +3982,13 @@ def compact_table(
                 )
             # schema may have evolved concurrently (nullable widen by an
             # append); compaction never changes schema, so stamp the
-            # entry with the CURRENT meta, not the planning-time one
-            cur_meta = _read_json(_j(out_dir, "_table_meta.json"))
+            # entry with the CURRENT tip's schema and field ids, not the
+            # planning-time ones
             snaps = snapshots(out_dir)
+            cur_meta, _, _ = _resolve_snapshot_meta(
+                out_dir, _read_json(_j(out_dir, "_table_meta.json")), None,
+                snaps,
+            )
             # consolidated like the exclusive path, but against the
             # CURRENT tip's survivors (concurrent appends since planning
             # are covered too — their stats fold from their own fresh
@@ -3951,6 +4001,7 @@ def compact_table(
                 body,
                 columns=cur_meta["columns"],
                 schema=cur_meta["schema"],
+                field_ids=_field_ids_of(cur_meta)[0],
                 manifest=write_manifest(
                     out_dir,
                     cur_survivors + created,
@@ -4168,126 +4219,72 @@ def _copy_on_write_delete(
 
     ``commit=False`` skips the snapshot publish and returns the
     removed/created part ids under ``result["pending"]`` — the merge
-    path folds them with its append into one atomic entry."""
+    path folds them with its append into one atomic entry.
+
+    The rewrite (:func:`_rewrite_parts`) resolves the schema and field
+    ids at ``meta["snapshot_id"]`` (set by :func:`_load_live`: the tip or
+    the branch tip; absent = the tip), like readers do."""
     _ensure_snapshot_root(out_dir, live, meta)
-    base = _base_above_reservations(
-        out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
+    rw = _rewrite_parts(
+        spark, out_dir, [[int(p)] for p in affected],
+        _next_part_base(out_dir, live), meta.get("block_rows") or 65536,
+        snapshot_id=meta.get("snapshot_id"), mask=mask_fn,
     )
-    columns = meta["columns"]
-    arrow_schema = pa.schema(
-        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
-    )
-    block_rows = meta.get("block_rows") or 65536
-    # field-id identity through the rewrite (same rule as compaction):
-    # ghosted columns decode NULL, renamed columns resolve to their
-    # storage names, survivors re-encode under current ids and names
-    cur_fids, _ = _field_ids_of(meta)
-    fill_d = meta.get("defaults") or None  # rewrites materialize defaults
-    snaps_g = snapshots(out_dir)
-    remap = (
-        _column_remap(out_dir, columns, list(affected), cur_fids,
-                      snaps=snaps_g)
-        if _needs_remap(snaps_g) else {}
-    )
-    plan = [(base + i, int(p)) for i, p in enumerate(affected)]
-    plan_df = spark.createDataFrame(plan, "new_pid int, old_pid int").repartition(
-        max(1, min(len(plan), 4 * spark.sparkContext.defaultParallelism))
-    )
-
-    def kernel(batches):
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            for new_pid, old_pid in zip(
-                batch.column("new_pid").to_pylist(), batch.column("old_pid").to_pylist()
-            ):
-                gh, al = remap.get(int(old_pid), (frozenset(), {}))
-                tbl = pa.Table.from_batches(
-                    list(_decode_part_batches(
-                        out_dir, columns, arrow_schema, old_pid, gh, al,
-                        fill_d,
-                    )),
-                    schema=arrow_schema,
-                )
-                keep = tbl.filter(pc.invert(mask_fn(tbl)))
-                n_before, n_after = tbl.num_rows, keep.num_rows
-                wrote = -1
-                if n_after < n_before and n_after > 0:
-                    _encode_one_part(
-                        new_pid, keep.to_batches(max_chunksize=65536), columns,
-                        out_dir, block_rows, 32 << 20, set(), {},
-                        field_ids=cur_fids,
-                    )
-                    wrote = new_pid
-                yield pa.RecordBatch.from_pylist(
-                    [{"old_pid": old_pid, "new_pid": wrote,
-                      "n_before": n_before, "n_after": n_after}],
-                    schema=pa.schema(
-                        [("old_pid", pa.int32()), ("new_pid", pa.int32()),
-                         ("n_before", pa.int64()), ("n_after", pa.int64())]
-                    ),
-                )
-
-    summary = plan_df.mapInArrow(
-        kernel, "old_pid int, new_pid int, n_before long, n_after long"
-    ).collect()
-    removed = sorted(r["old_pid"] for r in summary if r["n_after"] < r["n_before"])
-    created = sorted(r["new_pid"] for r in summary if r["new_pid"] >= 0)
-    deleted = sum(r["n_before"] - r["n_after"] for r in summary)
-    out = {
-        "parts_scanned": len(affected),
-        "parts_rewritten": len(removed),
-        "rows_deleted": int(deleted),
-    }
-    if not removed:
-        if not commit:
-            out["pending"] = {"removed_parts": [], "new_parts": [], "rows_deleted": 0}
+    out = _delete_report(rw, len(affected))
+    if not commit:
         return out
-    entry = {
-        "new_parts": created,
-        "removed_parts": removed,
-        "n_rows": -deleted,
-        "enc_bytes": 0,
-        "layout": meta.get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
-        "field_ids": cur_fids,
-        "delete": tag,
-        "ts": time.time(),
-    }
-    if extra:
-        entry.update(extra)
-    if commit:
-        _commit_snapshot_entry(out_dir, entry, append=True, branch=branch)
-    else:
-        out["pending"] = {
-            "removed_parts": removed,
-            "new_parts": created,
-            "rows_deleted": int(deleted),
+    del out["pending"]
+    if rw["removed_parts"]:
+        entry = {
+            "new_parts": rw["new_parts"],
+            "removed_parts": rw["removed_parts"],
+            "n_rows": -rw["rows_deleted"],
+            "enc_bytes": 0,
+            "layout": meta.get("layout", "clustered"),
+            "columns": rw["columns"],
+            "schema": rw["schema"],
+            "field_ids": rw["field_ids"],
+            "delete": tag,
+            "ts": time.time(),
+            **(extra or {}),
         }
+        _commit_snapshot_entry(out_dir, entry, append=True, branch=branch)
     return out
+
+
+def _delete_report(rw: dict, n_scanned: int) -> dict:
+    """The result of a copy-on-write delete or merge rewrite; ``pending``
+    holds what its snapshot entry commits."""
+    return {
+        "parts_scanned": n_scanned,
+        "parts_rewritten": len(rw["removed_parts"]),
+        "rows_deleted": rw["rows_deleted"],
+        "pending": {
+            k: rw[k] for k in ("removed_parts", "new_parts", "rows_deleted")
+        },
+    }
 
 
 def _load_live(
     out_dir: str, col: str, branch: str | None = None
 ) -> tuple[dict, list[int]]:
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    if branch is not None:
-        # resolve against the BRANCH tip: its live set AND the schema in
-        # effect there (main may have evolved since the fork; rewriting
-        # branch parts against main's wider schema would smuggle the
-        # evolution onto the branch)
-        snaps = snapshots(out_dir)
-        sid = _branch_tip(out_dir, branch, snaps)
-        meta, _, _ = _resolve_snapshot_meta(out_dir, meta, sid, snaps=snaps)
-        live = snapshot_parts(out_dir, sid, snaps=snaps)
-    else:
-        live = snapshot_parts(out_dir)
-        if live is None:
-            live = sorted(completed_parts(out_dir))
+    """(meta, live) at the tip, or at ``branch``'s tip: the table meta
+    with the schema and field ids in effect there (main may have evolved
+    since a fork, and a rollback narrows the tip), the live part set,
+    and the resolved id under ``meta["snapshot_id"]`` (None for a table
+    without a snapshot log) — delete and merge rewrite at that snapshot."""
+    snaps = snapshots(out_dir)
+    bid = _branch_tip(out_dir, branch, snaps) if branch is not None else None
+    meta, sid, _ = _resolve_snapshot_meta(
+        out_dir, _read_json(_j(out_dir, "_table_meta.json")), bid, snaps
+    )
+    live = (
+        snapshot_parts(out_dir, sid, snaps=snaps) if sid is not None
+        else sorted(completed_parts(out_dir))
+    )
     if col not in meta["columns"]:
         raise ValueError(f"unknown column {col!r}; table has {meta['columns']}")
-    return meta, live
+    return dict(meta, snapshot_id=sid), live
 
 
 @_with_writer_lock("delete")
@@ -4315,7 +4312,10 @@ def delete_rows(
 
     Delete snapshots are flagged so the changefeed stream reader does not
     re-deliver the rewritten rows (the feed is append-only, like
-    compaction rewrites)."""
+    compaction rewrites). The rewrite resolves the schema and field ids
+    at the tip, or at ``branch``'s tip, like readers do: survivors keep
+    the values that snapshot reads, whatever ``_table_meta.json`` says
+    after a rollback or on another branch."""
     wheres = _normalize_where(where)
     if not wheres:
         raise ValueError("delete_rows needs at least one predicate")
@@ -4339,10 +4339,7 @@ def delete_rows(
         for w in wheres:
             v = tbl.column(w[0])
             if len(w) == 2:
-                mm = pc.and_kleene(
-                    pc.is_valid(v),
-                    pc.is_in(v, value_set=pa.array(list(w[1])).cast(v.type)),
-                )
+                mm = _in_set(v, list(w[1]))
             else:
                 _, lo, hi = w
                 # and_kleene: false AND null = false, so a NULL value
@@ -4385,51 +4382,34 @@ def _rewrite_parts_dropping_matched_keys(
        row count, not the incoming batch size — decodes the part, drops
        the matched rows, re-encodes under its pre-assigned new id.
 
-    Returns the same ``pending`` shape as
+    Steps 1 and 3 plan through :func:`_plan_read` at ``meta["snapshot_id"]``
+    (the tip or branch tip :func:`_load_live` resolved), and step 3 is
+    :func:`_rewrite_group`, the same per-group rewrite as compaction and
+    delete. Returns the same ``pending`` shape as
     ``_copy_on_write_delete(commit=False)``; the caller owns the commit.
     """
-    base = _base_above_reservations(
-        out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
-    )
-    mapping = {int(p): base + i for i, p in enumerate(affected)}
-    columns = meta["columns"]
-    arrow_schema = pa.schema(
-        [(c, _DECODE_ARROW_OF[meta["schema"][c]]) for c in columns]
-    )
-    key_arrow = _DECODE_ARROW_OF[meta["schema"][key_col]]
-    key_spark = _SPARK_TYPE_OF[meta["schema"][key_col]]
-    key_schema = pa.schema([(key_col, key_arrow)])
+    base = _next_part_base(out_dir, live)
+    groups = [[int(p)] for p in affected]
+    gi_of = {p: gi for gi, (p,) in enumerate(groups)}
+    sid = meta.get("snapshot_id")
+    plan = _plan_read(out_dir, snapshot_id=sid, parts=affected)
+    key_plan = _plan_read(out_dir, [key_col], snapshot_id=sid, parts=affected)
+    key_spark = _SPARK_TYPE_OF[key_plan.types[key_col]]
     block_rows = meta.get("block_rows") or 65536
-    # field-id identity through the merge rewrite (same rule as compaction)
-    cur_fids, _ = _field_ids_of(meta)
-    fill_d = meta.get("defaults") or None  # rewrites materialize defaults
-    snaps_g = snapshots(out_dir)
-    remap = (
-        _column_remap(out_dir, columns, list(affected), cur_fids,
-                      snaps=snaps_g)
-        if _needs_remap(snaps_g) else {}
+
+    def part_keys_of(sub):
+        for pid in sub.parts:
+            for b in sub.part_batches(pid):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.full(b.num_rows, pid, dtype=np.int32)),
+                     b.column(0)],
+                    names=["old_pid", "__k"],
+                )
+
+    part_keys = _run_tasks(
+        spark, key_plan.tasks(spark.sparkContext.defaultParallelism),
+        part_keys_of, f"old_pid int, __k {key_spark}",
     )
-
-    plan_df = spark.createDataFrame(
-        [(int(p),) for p in affected], "old_pid int"
-    ).repartition(max(1, min(len(affected), 4 * spark.sparkContext.defaultParallelism)))
-
-    def key_kernel(batches):
-        for batch in batches:
-            for pid in batch.column("old_pid").to_pylist():
-                gh, al = remap.get(int(pid), (frozenset(), {}))
-                for b in _decode_part_batches(
-                    out_dir, [key_col], key_schema, pid, gh, al
-                ):
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array([pid] * b.num_rows, type=pa.int32()),
-                            b.column(0),
-                        ],
-                        names=["old_pid", "__k"],
-                    )
-
-    part_keys = plan_df.mapInArrow(key_kernel, f"old_pid int, __k {key_spark}")
     incoming = (
         df.select(F.col(key_col).cast(key_spark).alias("__k"))
         .where(F.col("__k").isNotNull())
@@ -4441,53 +4421,25 @@ def _rewrite_parts_dropping_matched_keys(
 
     def rewrite(pdf):
         import pandas as pd
-        import pyarrow.compute as pc
 
-        old_pid = int(pdf["old_pid"].iloc[0])
-        keys = pa.Array.from_pandas(pdf["__k"]).cast(key_arrow)
-        gh, al = remap.get(int(old_pid), (frozenset(), {}))
-        tbl = pa.Table.from_batches(
-            list(_decode_part_batches(
-                out_dir, columns, arrow_schema, old_pid, gh, al,
-                fill_d,
-            )),
-            schema=arrow_schema,
+        gi = gi_of[int(pdf["old_pid"].iloc[0])]
+        row = _rewrite_group(
+            plan, block_rows, gi, groups[gi], base + gi,
+            lambda tbl: _in_set(tbl.column(key_col), pdf["__k"]),
         )
-        v = tbl.column(key_col)
-        m = pc.and_kleene(pc.is_valid(v), pc.is_in(v, value_set=keys))
-        keep = tbl.filter(pc.invert(m))
-        n_before, n_after = tbl.num_rows, keep.num_rows
-        wrote = -1
-        if n_after < n_before and n_after > 0:
-            _encode_one_part(
-                mapping[old_pid], keep.to_batches(max_chunksize=65536), columns,
-                out_dir, block_rows, 32 << 20, set(), {},
-                field_ids=cur_fids,
-            )
-            wrote = mapping[old_pid]
-        return pd.DataFrame(
-            [{"old_pid": old_pid, "new_pid": wrote,
-              "n_before": n_before, "n_after": n_after}]
-        )
+        return pd.DataFrame([row])
 
-    summary = (
-        matched.groupBy("old_pid")
-        .applyInPandas(rewrite, "old_pid int, new_pid int, n_before long, n_after long")
-        .collect()
+    rows = matched.groupBy("old_pid").applyInPandas(rewrite, _REWRITE_DDL).collect()
+    return _delete_report(_rewrite_summary(plan, groups, rows), len(affected))
+
+
+def _in_set(v, values):
+    """Null-safe membership mask: NULL never matches (SQL semantics)."""
+    import pyarrow.compute as pc
+
+    return pc.and_kleene(
+        pc.is_valid(v), pc.is_in(v, value_set=pa.array(values).cast(v.type))
     )
-    removed = sorted(r["old_pid"] for r in summary if r["n_after"] < r["n_before"])
-    created = sorted(r["new_pid"] for r in summary if r["new_pid"] >= 0)
-    deleted = sum(r["n_before"] - r["n_after"] for r in summary)
-    return {
-        "parts_scanned": len(affected),
-        "parts_rewritten": len(removed),
-        "rows_deleted": int(deleted),
-        "pending": {
-            "removed_parts": removed,
-            "new_parts": created,
-            "rows_deleted": int(deleted),
-        },
-    }
 
 
 @_with_writer_lock("merge")
@@ -4514,7 +4466,9 @@ def upsert_rows(
        refutation); above that the mask becomes a distributed
        key-column join (:func:`_rewrite_parts_dropping_matched_keys`)
        and the keys never visit the driver — no key-count ceiling;
-       unchanged parts keep their ids with no write;
+       unchanged parts keep their ids with no write. Either way the
+       rewrite resolves the schema and field ids at the tip, or at
+       ``branch``'s tip, like readers do (:func:`_rewrite_parts`);
     3. ``df`` appends under new part ids with the snapshot publish
        DEFERRED (``encode_table(commit=False)``), then ONE combined
        entry carrying ``removed_parts`` (rewrites) + ``new_parts``
@@ -4586,13 +4540,7 @@ def _upsert_rows_inner(
                 key_bc = spark.sparkContext.broadcast(keys)
 
                 def mask(tbl):
-                    import pyarrow.compute as pc
-
-                    v = tbl.column(key_col)
-                    return pc.and_kleene(
-                        pc.is_valid(v),
-                        pc.is_in(v, value_set=pa.array(key_bc.value).cast(v.type)),
-                    )
+                    return _in_set(tbl.column(key_col), key_bc.value)
 
                 rep = _copy_on_write_delete(
                     spark, out_dir, affected, live, meta, mask,
@@ -4978,8 +4926,8 @@ def _part_key_counts(
 
     chunks = [
         b.column(0)
-        for b in _decode_part_batches(
-            out_dir, [key_col], key_schema, pid, ghost_cols, aliases
+        for b in _decode_part_batches_ranged(
+            out_dir, [key_col], key_schema, pid, None, ghost_cols, aliases
         )
     ]
     if not chunks:
@@ -4991,12 +4939,12 @@ def _part_key_counts(
 
 
 def _cdc_key_kernel(out_dir: str, key_col: str, key_arrow, remap=None):
-    """mapInArrow kernel: (sid, pid, w, ch) plan rows -> per-part
-    PRE-AGGREGATED (snapshot_id, key, ch, n) counts (map-side combine:
-    the shuffle ships one row per distinct key per part, never raw
-    rows). Decodes ONLY the key column; the key path is vectorized
-    (``_part_key_counts`` — the only Python loop here is over plan rows,
-    i.e. O(#changed parts), never over data rows). ``remap`` carries
+    """Task kernel (:func:`_run_tasks`): a run of (sid, pid, w, ch) plan
+    rows -> per-part PRE-AGGREGATED (snapshot_id, key, ch, n) counts
+    (map-side combine: the shuffle ships one row per distinct key per
+    part, never raw rows). Decodes ONLY the key column; the key path is
+    vectorized (``_part_key_counts`` — the only Python loop here is over
+    plan rows, i.e. O(#changed parts), never over data rows). ``remap`` carries
     field-id resolution for a renamed/re-added key column."""
     import numpy as np
     import pyarrow.compute as pc
@@ -5007,26 +4955,23 @@ def _cdc_key_kernel(out_dir: str, key_col: str, key_arrow, remap=None):
         ("ch", pa.string()), ("n", pa.int64()),
     ])
 
-    def kernel(batches):
-        for batch in batches:
-            for row in batch.to_pylist():  # O(#plan rows) = parts
-                gh, al = (remap or {}).get(int(row["pid"]), (frozenset(), {}))
-                res = _part_key_counts(
-                    out_dir, key_col, key_schema, row["pid"], gh, al
-                )
-                if res is None:
-                    continue
-                values, counts = res
-                n = len(values)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.full(n, row["sid"], dtype=np.int64)),
-                        values,
-                        pc.fill_null(pa.nulls(n, pa.string()), row["ch"]),
-                        pc.multiply(counts, pa.scalar(row["w"], pa.int64())),
-                    ],
-                    schema=out_schema,
-                )
+    def kernel(rows):
+        for sid, pid, w, ch in rows:  # O(#plan rows) = parts
+            gh, al = (remap or {}).get(int(pid), (frozenset(), {}))
+            res = _part_key_counts(out_dir, key_col, key_schema, pid, gh, al)
+            if res is None:
+                continue
+            values, counts = res
+            n = len(values)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.full(n, sid, dtype=np.int64)),
+                    values,
+                    pc.fill_null(pa.nulls(n, pa.string()), ch),
+                    pc.multiply(counts, pa.scalar(w, pa.int64())),
+                ],
+                schema=out_schema,
+            )
 
     return kernel
 
@@ -5070,13 +5015,12 @@ def table_changes(
     # its storage name in pre-rename parts; a dropped-and-re-added key
     # diffs as NULL there (the dead field's keys never resurrect)
     remap = _plan_read(out_dir, [key_col], parts=[p[1] for p in plan]).remap
-    plan_df = spark.createDataFrame(
-        plan, "sid long, pid int, w int, ch string"
-    ).repartition(
-        max(1, min(len(plan), 4 * spark.sparkContext.defaultParallelism))
-    )
-    per_part = plan_df.mapInArrow(
-        _cdc_key_kernel(out_dir, key_col, key_arrow, remap=remap),
+    tasks = [
+        plan[a:b]
+        for a, b in _split_runs(len(plan), spark.sparkContext.defaultParallelism)
+    ]
+    per_part = _run_tasks(
+        spark, tasks, _cdc_key_kernel(out_dir, key_col, key_arrow, remap=remap),
         f"snapshot_id long, __k {key_spark}, ch string, n long",
     )
     agg = per_part.groupBy("snapshot_id", "__k", "ch").agg(

@@ -3492,6 +3492,98 @@ def test_field_id_identity_survives_rewrites_and_expire(spark, tmp_path):
     assert d.where("id < 300 AND v IS NOT NULL").count() == 0
 
 
+@pytest.mark.parametrize(
+    "history",
+    [
+        "rollback_add_default_compact",
+        "rollback_readd_compact",
+        "rollback_readd_delete",
+        "branch_readd_delete",
+    ],
+)
+def test_rewrite_keeps_rows_after_evolution(spark, tmp_path, history):
+    """Compaction and delete rewrite under the schema and field ids the
+    tip (or branch tip) reads, not under ``_table_meta.json``. After a
+    rollback across ``add_column(default=)`` or across a drop + re-add,
+    and on a branch forked before main dropped and re-added a column,
+    the rows read after the rewrite are the rows read before it (minus
+    the deleted one) and the tip schema does not change."""
+    from pyspark.sql import functions as F
+
+    from sparkcodec.engine import (
+        add_column,
+        compact_table,
+        create_branch,
+        delete_rows,
+        drop_column,
+        rollback_table,
+        snapshots,
+    )
+
+    out = str(tmp_path / "t")
+    df = spark.range(40).select(F.col("id"), (F.col("id") * 3).alias("v"))
+    encode_table(spark, df, out, num_parts=2, resume=False)
+    s0 = snapshots(out)[-1]["id"]
+    branch = None
+    if history == "rollback_add_default_compact":
+        add_column(out, "w", "i64", default=7)
+    else:
+        if history == "branch_readd_delete":
+            branch = "dev"
+            create_branch(out, branch)
+        drop_column(out, "v")
+        add_column(out, "v", "i64")
+    if branch is None:
+        rollback_table(out, s0)
+
+    def read():
+        d = decode_table(spark, out, ref=branch)
+        return d.columns, sorted(tuple(r) for r in d.collect())
+
+    cols, before = read()
+    assert cols == ["id", "v"] and len(before) == 40
+    assert all(v == 3 * i for i, v in before)
+    if history.endswith("compact"):
+        assert compact_table(spark, out)["parts_created"] == 1
+        expect = before
+    else:
+        r = delete_rows(spark, out, ("id", 0, 0), branch=branch)
+        assert r["rows_deleted"] == 1
+        expect = [row for row in before if row[0] != 0]
+    assert read() == (["id", "v"], expect)
+
+
+def test_compaction_runs_one_rewrite_task_per_slot(spark, tmp_path):
+    """More merge groups than slots: the rewrite is one Spark stage of
+    ``min(groups, slots)`` Python tasks driven by ``spark.range`` — no
+    driver-table scan stage, no second wave of tasks."""
+    from pyspark.sql import functions as F
+
+    from sparkcodec.engine import compact_table, snapshot_parts
+
+    out = str(tmp_path / "t")
+    df = spark.range(2000).select(F.col("id"), (F.col("id") * 3).alias("v"))
+    encode_table(spark, df, out, num_parts=20, resume=False)
+    assert len(snapshot_parts(out)) == 20
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    group = f"compact-{os.path.basename(str(tmp_path))}"
+    sc.setJobGroup(group, group)
+    try:
+        rep = compact_table(spark, out, target_part_rows=250)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rep["groups"] > slots
+    st = sc.statusTracker()
+    n_tasks = [
+        st.getStageInfo(s).numTasks
+        for j in st.getJobIdsForGroup(group)
+        for s in st.getJobInfo(j).stageIds
+    ]
+    assert n_tasks == [slots]
+    assert decode_table(spark, out).count() == 2000
+
+
 def test_delete_rows_conjunction_and_in(spark, tmp_path):
     """delete_rows takes decode_table's predicate algebra: a conjunction
     of a range and an IN-list deletes exactly the AND of both; a

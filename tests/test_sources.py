@@ -941,6 +941,11 @@ def test_table_changes_and_cdc_stream(spark, tmp_path):
     # preimage delete for the replaced key ONLY — key 200 was new, and
     # the rewrite's carried-through keys (rest of 5's part) cancel out
     assert sorted(k for (s, o, k) in ev if s == 3 and o == "delete") == [5]
+    # one Python task per slot over spark.range, no pickled driver table
+    plan = str(
+        table_changes(spark, out, "id")._jdf.queryExecution().executedPlan()
+    )
+    assert "Range" in plan and "Scan ExistingRDD" not in plan
     # start/end bounds
     assert all(
         r["snapshot_id"] == 3
