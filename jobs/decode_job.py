@@ -86,11 +86,9 @@ def main() -> int:
         args.snapshot_id = snapshot_id_as_of(args.input, args.as_of)
     wheres = []
     if args.where or args.where_in:
-        import json as _json
-        import os as _os
+        from sparkcodec.engine import _resolve_snapshot_meta
 
-        with open(_os.path.join(args.input, "_table_meta.json")) as fh:
-            schema = _json.load(fh)["schema"]
+        schema = _resolve_snapshot_meta(args.input, args.snapshot_id)[0]["schema"]
         for spec in args.where or []:
             col, lo, hi = spec.split(":", 2)
             tname = schema[col]

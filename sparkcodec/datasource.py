@@ -3,9 +3,9 @@ the encoded blocks table, with filter pushdown driving the zone maps.
 
 The reader surface (Spark 4.1 Python DataSource API):
 
-* ``schema()`` comes from ``_table_meta.json`` (the table's authoritative
-  schema, SURVEY §2 S6), overlaid with the schema recorded at the read
-  snapshot.
+* ``schema()`` is the schema recorded at the read snapshot (the tip, or
+  the ``snapshot_id`` / ``as_of`` / ``ref`` option), resolved by
+  ``engine._resolve_snapshot_meta`` like every other reader and writer.
 * ``pushFilters`` turns comparison, IN, prefix and null filters into the
   normalized predicates ``decode_table(where=...)`` takes. Pruning is
   *conservative* (a kept part/block may still hold non-matching rows), so
@@ -50,12 +50,6 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
-
-
-def _load_meta(path: str) -> dict:
-    from .engine import _j, _read_json
-
-    return _read_json(_j(path, "_table_meta.json"))
 
 
 def _resolve_sid_option(options, out_dir: str) -> int | None:
@@ -278,6 +272,12 @@ class SparkcodecCDCStreamReader(DataSourceStreamReader):
         self.key_col = options.get("key")
         if not self.key_col:
             raise ValueError('cdc mode requires .option("key", "<column>")')
+        from .engine import _resolve_snapshot_meta
+
+        # a key column's storage type never changes (retyping is refused)
+        self.key_type = _resolve_snapshot_meta(self.out_dir)[0]["schema"][
+            self.key_col
+        ]
 
     def initialOffset(self):
         return {"snapshot": 0}
@@ -313,8 +313,7 @@ class SparkcodecCDCStreamReader(DataSourceStreamReader):
 
         if not partition.value:
             return
-        meta = _load_meta(self.out_dir)
-        key_arrow = _DECODE_ARROW_OF[meta["schema"][self.key_col]]
+        key_arrow = _DECODE_ARROW_OF[self.key_type]
         key_schema = pa.schema([(self.key_col, key_arrow)])
         out_schema = pa.schema([
             (self.key_col, key_arrow), ("_op", pa.string()),
@@ -381,7 +380,8 @@ class SparkcodecWriter(DataSourceArrowWriter):
     are durable. Clustering/salting/skew-fanout need a job-level
     exchange a per-task writer cannot express — use
     ``engine.encode_table`` for those. Single writer at a time (part
-    ids are assigned from a driver-side base)."""
+    ids are assigned from a driver-side base, above every optimistic
+    writer's reserved range)."""
 
     def __init__(self, options, schema, overwrite):
         if overwrite:
@@ -397,38 +397,43 @@ class SparkcodecWriter(DataSourceArrowWriter):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         from .codecs import type_name
-        from .engine import _acquire_writer_lock, _exists, _j, completed_parts
+        from .engine import (
+            _acquire_writer_lock,
+            _base_above_reservations,
+            _exists,
+            _j,
+            _new_table_state,
+            _release_writer_lock,
+            _resolve_snapshot_meta,
+            completed_parts,
+            evolve_schema,
+        )
 
         arrow = to_arrow_schema(schema)
         self.columns = [f.name for f in arrow]
         self.type_names = {f.name: type_name(f.type) for f in arrow}
-        # field-id identity: tasks stamp each part's {col: id} into its
-        # checkpoint lineage, so the mapping must be resolved up front —
-        # inherited from the table for existing columns, and (for an
-        # evolving write) pre-merged through the same engine helper
-        # commit() will apply, which is pure and deterministic
-        self.field_ids = {c: i + 1 for i, c in enumerate(self.columns)}
-        if _exists(_j(self.out_dir, "_table_meta.json")):
-            prev = _load_meta(self.out_dir)
-            if prev["schema"] != self.type_names:
-                # add-column evolution, same rule as encode_table (shared
-                # engine helper); commit() merges the meta
-                from .engine import check_schema_evolution, merge_evolved_meta
-
-                check_schema_evolution(prev, self.type_names, self.columns)
-                self.field_ids = merge_evolved_meta(
-                    prev, self.type_names, self.columns
-                )["field_ids"]
-            else:
-                from .engine import _field_ids_of
-
-                self.field_ids = _field_ids_of(prev)[0]
         # single-writer lease held from planning (driver-side __init__)
-        # through commit()/abort(); part ids are assigned from a
-        # driver-side base, so a concurrent writer would collide
+        # through commit()/abort(): part ids are assigned from a
+        # driver-side base, so a concurrent exclusive writer would collide
         self._lock_owner = _acquire_writer_lock(self.out_dir, "ds-write")
-        existing = completed_parts(self.out_dir)
-        self.base = (max(existing) + 1) if existing else 0
+        try:
+            # field-id identity: tasks stamp each part's {col: id} into
+            # its checkpoint lineage, so the schema state this append
+            # commits is resolved up front — evolved from the tip's, the
+            # same rule as encode_table, or a new table's
+            self.state = _new_table_state(self.columns, self.type_names)
+            if _exists(_j(self.out_dir, "_table_meta.json")):
+                self.state = evolve_schema(
+                    _resolve_snapshot_meta(self.out_dir)[0],
+                    self.type_names, self.columns,
+                )
+            existing = completed_parts(self.out_dir)
+            self.base = _base_above_reservations(
+                self.out_dir, (max(existing) + 1) if existing else 0
+            )
+        except BaseException:
+            _release_writer_lock(self.out_dir, self._lock_owner)
+            raise
 
     def write(self, iterator):
         from pyspark import TaskContext
@@ -442,41 +447,28 @@ class SparkcodecWriter(DataSourceArrowWriter):
         r = _encode_one_part(
             pid, batches, self.columns, self.out_dir,
             self.block_rows, self.block_bytes, set(), {},
-            field_ids=self.field_ids,
+            field_ids=self.state["field_ids"],
         )
         return _PartCommit(pid, r["n_rows"], r["raw_bytes"], r["enc_bytes"])
 
     def commit(self, messages):
-        import time
-
         from .engine import (
+            _append_entry,
             _atomic_write_json,
+            _commit_snapshot_entry,
             _exists,
             _j,
             _release_writer_lock,
-            _snapshot_log_append,
+            legacy_root_parts,
             snapshots,
         )
 
         try:
             parts = sorted(m.part_id for m in messages if m and m.part_id >= 0)
             meta_path = _j(self.out_dir, "_table_meta.json")
-            if _exists(meta_path):
-                prev = _load_meta(self.out_dir)
-                if prev["schema"] != self.type_names:
-                    # add-column evolution validated in __init__: merge meta
-                    # through the shared engine helper so readers see the
-                    # union (old parts decode the new columns as nulls) and
-                    # existing field metadata survives
-                    from .engine import merge_evolved_meta
-
-                    _atomic_write_json(
-                        meta_path,
-                        merge_evolved_meta(prev, self.type_names, self.columns),
-                    )
             if not _exists(meta_path):
-                meta = {
-                    "schema": self.type_names,
+                _atomic_write_json(meta_path, {
+                    "schema": self.state["schema"],
                     "columns": self.columns,
                     "num_parts": -1,
                     "layout": "aligned",
@@ -486,44 +478,23 @@ class SparkcodecWriter(DataSourceArrowWriter):
                     "block_rows": self.block_rows,
                     "target_part_rows": None,
                     "field_metadata": {},
-                    "field_ids": self.field_ids,
-                    "next_field_id": max(self.field_ids.values(), default=0) + 1,
+                    "field_ids": self.state["field_ids"],
+                    "next_field_id": self.state["next_field_id"],
                     "engine_version": "0.1.0",
-                }
-                _atomic_write_json(meta_path, meta)
-            snaps = snapshots(self.out_dir)
-            if not snaps:
+                })
+            if not snapshots(self.out_dir):
                 # pre-snapshot table (parts exist but no log): this entry
                 # becomes the root snapshot (shared engine rule)
-                from .engine import legacy_root_parts
-
                 parts = legacy_root_parts(self.out_dir, parts, self.base)
-            cur = _load_meta(self.out_dir)
-            from .engine import write_manifest
-
-            from .engine import _tip_entry
-
-            entry = {
-                # ids are log-sequence; the parent is the MAIN tip (a
-                # trailing branch commit is a bystander to this sink)
-                "id": (snaps[-1]["id"] + 1) if snaps else 1,
-                "parent": _tip_entry(snaps)["id"] if snaps else 0,
-                "new_parts": parts,
-                # pruning manifest (O(#snapshots) metadata reads for
-                # every future pruned read); O(this commit's parts)
-                # checkpoint reads here, amortized like the engine path
-                "manifest": write_manifest(self.out_dir, parts),
-                "n_rows": sum(m.n_rows for m in messages if m),
-                "enc_bytes": sum(m.enc_bytes for m in messages if m),
-                "layout": "aligned",
-                # schema versioned per snapshot (time travel reads the
-                # schema in effect at commit time, engine.snapshot_schema)
-                "columns": cur["columns"],
-                "schema": cur["schema"],
-                "field_ids": self.field_ids,
-                "ts": time.time(),
-            }
-            _snapshot_log_append(self.out_dir, entry)
+            _commit_snapshot_entry(
+                self.out_dir,
+                _append_entry(
+                    self.state, parts,
+                    sum(m.n_rows for m in messages if m),
+                    sum(m.enc_bytes for m in messages if m), "aligned",
+                ),
+                append=True,
+            )
         finally:
             _release_writer_lock(self.out_dir, self._lock_owner)
 
@@ -594,7 +565,7 @@ class SparkcodecDataSource(DataSource):
             key = self.options.get("key")
             if not key:
                 raise ValueError('cdc mode requires .option("key", "<column>")')
-            meta = _load_meta(self.options.get("path"))
+            meta = _resolve_snapshot_meta(self.options.get("path"))[0]
             if key not in meta["schema"]:
                 raise ValueError(
                     f"cdc key {key!r} not in table columns {meta['columns']}"
@@ -611,13 +582,13 @@ class SparkcodecDataSource(DataSource):
             meta, cols = cached
         else:
             path = self.options.get("path")
-            meta = _load_meta(path)
             # schema as recorded at the resolved snapshot (explicit
             # snapshot_id option, else the tip): matches decode_table — a
             # rollback across an add-column evolution narrows the DS read
             # schema back too
-            sid = _resolve_sid_option(self.options, path)
-            meta, _sid, _snaps = _resolve_snapshot_meta(path, meta, sid)
+            meta = _resolve_snapshot_meta(
+                path, _resolve_sid_option(self.options, path)
+            )[0]
             cols = meta["columns"]
             self._schema_cache = (meta, cols)
         sel = self.options.get("columns")

@@ -2,7 +2,9 @@
 
 Physical layout of an encoded table at ``out_dir``:
 
-    _table_meta.json                     # schema, config, key columns
+    _table_meta.json                     # layout config; create-time schema
+    _snapshots.jsonl                     # snapshot log: parts + schema state
+                                         # (object stores: _snapshots.d/)
     blocks/col=<column>/part_<id>.parquet   # one blocks file per (column, part)
     blocks/col=_checkpoint/part_<id>.parquet# lineage row, written LAST per part
 
@@ -821,48 +823,6 @@ def legacy_root_parts(out_dir: str, parts: list[int], base: int) -> list[int]:
     the entry must carry the legacy parts below ``base`` too, or
     snapshot-resolving readers silently drop every pre-existing row."""
     return sorted(set(parts) | {p for p in completed_parts(out_dir) if p < base})
-
-
-def check_schema_evolution(prev: dict, schema: dict[str, str], columns: list[str]):
-    """Validate an append's schema against the existing table meta under
-    the add-column evolution rule: shared columns must keep their storage
-    type; one-sided columns are optional (absent block files decode as
-    NULL). Raises on retyping."""
-    shared = [c for c in prev["columns"] if c in columns]
-    if not all(prev["schema"][c] == schema[c] for c in shared):
-        raise ValueError(
-            "append refused: shared columns change storage type "
-            f"({prev['schema']} vs {schema})"
-        )
-
-
-def merge_evolved_meta(
-    prev: dict, schema: dict[str, str], columns: list[str],
-    field_metadata: dict | None = None,
-) -> dict:
-    """Union an append's schema into the existing table meta (validated
-    by :func:`check_schema_evolution`): old column order is preserved,
-    new columns append, field metadata from both sides merges."""
-    new_cols = [c for c in columns if c not in prev["columns"]]
-    merged_schema = {**prev["schema"], **schema}
-    out = dict(prev)
-    out["columns"] = prev["columns"] + new_cols
-    out["schema"] = {c: merged_schema[c] for c in out["columns"]}
-    out["field_metadata"] = {
-        **(prev.get("field_metadata") or {}),
-        **(field_metadata or {}),
-    }
-    # field-id identity: added columns get FRESH ids — including a name
-    # that previously existed and was dropped (its retired id is never
-    # reused, so old parts decode the re-added name as NULL, not as the
-    # dead field's historical values)
-    fids, nxt = _field_ids_of(prev)
-    for c in new_cols:
-        fids[c] = nxt
-        nxt += 1
-    out["field_ids"] = fids
-    out["next_field_id"] = nxt
-    return out
 
 
 def _encode_one_part(
@@ -1837,22 +1797,19 @@ def _commit_snapshot_entry(
     entry: dict,
     *,
     append: bool,
-    evolved_meta: dict | None = None,
     pm: dict | None = None,
     branch: str | None = None,
     branch_parent: int | None = None,
 ) -> dict:
-    """Publish a prepared snapshot entry: write the (possibly evolved)
-    table meta and the entry's pruning MANIFEST first, then append the
-    entry with id/parent assigned from the current log tip. The
-    single-line log append is the atomic publish point — everything
-    written before it (parts, evolved meta, manifest) is either
-    invisible (orphans) or benign (an extra nullable column) until the
-    entry lands. Deferring the evolved-meta write to here closes the
-    window where a failed or refused append permanently widened the
-    schema. ``pm`` forwards already-in-hand per-part metadata to
-    :func:`write_manifest` so the encode hot path never re-reads its own
-    checkpoints.
+    """Publish a prepared snapshot entry: write the entry's pruning
+    MANIFEST first, then append the entry with id/parent assigned from
+    the current log tip. The single-line log append is the atomic
+    publish point — everything written before it (parts, manifest) is
+    an invisible orphan until the entry lands, and the schema state the
+    entry stamps takes effect with it, so a failed or refused append
+    never widens the schema. ``pm`` forwards already-in-hand per-part
+    metadata to :func:`write_manifest` so the encode hot path never
+    re-reads its own checkpoints.
 
     AUTO-CONSOLIDATION: once every :data:`_CONSOLIDATE_EVERY` main-chain
     commits since the last full-coverage manifest, the entry's manifest
@@ -1863,8 +1820,6 @@ def _commit_snapshot_entry(
     consolidate eagerly anyway). Amortized cost: one O(#live) metadata
     fold per _CONSOLIDATE_EVERY commits, read from the manifests
     already in hand."""
-    if evolved_meta is not None:
-        _atomic_write_json(_j(out_dir, "_table_meta.json"), evolved_meta)
     e = dict(entry)
     snaps = snapshots(out_dir)
     if (
@@ -1920,59 +1875,47 @@ def _commit_optimistic_append(
 ) -> dict:
     """The short validated critical section of an optimistic append: take
     the writer lease (waiting out other committers), re-resolve the
-    table meta AT THE COMMIT POINT — a concurrent writer may have
-    evolved it since this run planned, so evolution is re-checked and
-    re-merged against the CURRENT meta (never the stale one this run
-    started from, which would clobber a concurrent widen) — publish the
-    entry on the current tip, then release the lease and the part-range
-    reservation. An append adds only its reserved parts, so it never
-    conflicts on data; the only refusal is a genuine schema conflict
-    (retyped shared column), surfaced by check_schema_evolution."""
+    schema state AT THE COMMIT POINT — a concurrent writer may have
+    evolved it since this run planned, so the run's ``columns`` /
+    ``schema`` evolve onto the CURRENT tip state (never the stale one
+    this run started from, which would hide a concurrent widen) and the
+    entry stamps the result — publish the entry on the current tip,
+    then release the lease and the part-range reservation. An append
+    adds only its reserved parts, so it never conflicts on data; it
+    refuses only a genuine schema conflict (a retyped shared column,
+    from :func:`evolve_schema`) or re-assigned field ids."""
     tok = _acquire_writer_lock_blocking(out_dir, "commit")
     try:
-        cur = _read_json(_j(out_dir, "_table_meta.json"))
-        evolved = None
-        if cur["schema"] != meta["schema"] or cur["columns"] != meta["columns"]:
-            check_schema_evolution(cur, meta["schema"], meta["columns"])
-            evolved = merge_evolved_meta(
-                cur, meta["schema"], meta["columns"],
-                meta.get("field_metadata"),
+        evolved = evolve_schema(
+            _resolve_snapshot_meta(out_dir)[0], meta["schema"],
+            meta["columns"], meta.get("field_metadata"),
+        )
+        # the PARTS of this run stamped planning-time field ids into
+        # their checkpoints (and `pm`, about to become the manifest).
+        # If the commit-time evolution assigns any of this run's columns
+        # a DIFFERENT id — two concurrent writers each adding a column
+        # both allocate the same next_field_id — committing would
+        # persist conflicting identities: once a later drop/rename
+        # activates the remap, _column_remap would resolve by the stale
+        # per-part ids and could alias one column's reads onto another's
+        # blocks or falsely ghost it. Refuse loudly; the reservation
+        # keeps the orphan parts protected until vacuum.
+        stale = {
+            c: (meta["field_ids"].get(c), evolved["field_ids"].get(c))
+            for c in meta["columns"]
+            if meta["field_ids"].get(c) != evolved["field_ids"].get(c)
+        }
+        if stale:
+            raise ConcurrentWriterError(
+                "optimistic append refused: a concurrent schema "
+                "change re-assigned field ids this run already "
+                f"stamped into its parts ({stale}); re-run the "
+                "append with the default exclusive concurrency — "
+                "its parts stay protected behind the reservation "
+                "until vacuum reclaims them"
             )
-            # the entry becomes the TIP, and default reads overlay the
-            # tip entry's schema — stamping the planning-time schema
-            # would hide a column a CONCURRENT commit added (its rows
-            # would become unreadable at this tip); stamp the merged
-            # union instead (same rule as compact's optimistic commit)
-            entry = dict(
-                entry, columns=evolved["columns"], schema=evolved["schema"],
-                field_ids=evolved["field_ids"],
-            )
-            # the PARTS of this run stamped planning-time field ids into
-            # their checkpoints (and `pm`, about to become the manifest).
-            # If the re-merge assigned any of this run's columns a
-            # DIFFERENT id — two concurrent writers each adding a column
-            # both allocate the same next_field_id — committing would
-            # persist conflicting identities: once a later drop/rename
-            # activates the remap, _column_remap would resolve by the
-            # stale per-part ids and could alias one column's reads onto
-            # another's blocks or falsely ghost it. Refuse loudly; the
-            # reservation keeps the orphan parts protected until vacuum.
-            stale = {
-                c: (meta["field_ids"].get(c), evolved["field_ids"].get(c))
-                for c in meta["columns"]
-                if meta["field_ids"].get(c) != evolved["field_ids"].get(c)
-            }
-            if stale:
-                raise ConcurrentWriterError(
-                    "optimistic append refused: a concurrent schema "
-                    "change re-assigned field ids this run already "
-                    f"stamped into its parts ({stale}); re-run the "
-                    "append with the default exclusive concurrency — "
-                    "its parts stay protected behind the reservation "
-                    "until vacuum reclaims them"
-                )
         e = _commit_snapshot_entry(
-            out_dir, entry, append=True, evolved_meta=evolved, pm=pm
+            out_dir, dict(entry, **_schema_stamp(evolved)), append=True, pm=pm
         )
     finally:
         _release_writer_lock(out_dir, tok)
@@ -1980,7 +1923,7 @@ def _commit_optimistic_append(
     return e
 
 
-def _ensure_snapshot_root(out_dir: str, live: list[int], meta: dict) -> None:
+def _ensure_snapshot_root(out_dir: str, live: list[int]) -> None:
     """Root the snapshot log of a pre-snapshot (legacy) table with its
     current live set BEFORE any copy-on-write rewrite is written: from
     that moment readers resolve the log, so rewritten parts stay
@@ -1988,21 +1931,39 @@ def _ensure_snapshot_root(out_dir: str, live: list[int], meta: dict) -> None:
     completed_parts fallback would show survivor rows twice."""
     if snapshots(out_dir):
         return
+    state = _resolve_snapshot_meta(out_dir, snaps=[])[0]
     root = {
         "id": 1,
         "parent": 0,
         "new_parts": sorted(live),
         "n_rows": 0,
         "enc_bytes": 0,
-        "layout": meta.get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
+        "layout": _read_json(_j(out_dir, "_table_meta.json")).get(
+            "layout", "clustered"
+        ),
+        **_schema_stamp(state),
         # one-time O(live) checkpoint fold: every pruned read of this
         # legacy table afterwards is O(#manifests)
         "manifest": write_manifest(out_dir, sorted(live)),
         "ts": time.time(),
     }
     _snapshot_log_append(out_dir, root)
+
+
+def _append_entry(
+    state: dict, new_parts: list[int], n_rows: int, enc_bytes: int, layout: str
+) -> dict:
+    """The snapshot entry of a plain append: its parts, and the schema
+    state it commits (versioned per snapshot: time travel to a
+    pre-evolution snapshot reads the schema in effect then)."""
+    return {
+        "new_parts": new_parts,
+        "n_rows": n_rows,
+        "enc_bytes": enc_bytes,
+        "layout": layout,
+        **_schema_stamp(state),
+        "ts": time.time(),
+    }
 
 
 def completed_parts(out_dir: str) -> set[int]:
@@ -2081,11 +2042,13 @@ def encode_table(
     run locality are somewhat weaker than a dedicated single-key sort.
 
     ``commit=False`` runs the full encode but defers the snapshot
-    publish: the prepared entry (and any evolved table meta) comes back
-    under ``result["pending_commit"]`` for the caller to publish via
-    ``_commit_snapshot_entry`` — this is how ``upsert_rows`` folds an
-    append and a copy-on-write delete into ONE atomic snapshot. Until
-    the caller commits, the written parts are invisible orphans.
+    publish: the prepared entry (stamped with the schema state evolved
+    at the tip, or at ``branch``'s tip) comes back under
+    ``result["pending_commit"]`` for the caller to publish via
+    ``_commit_snapshot_entry`` onto the same chain — this is how
+    ``upsert_rows`` folds an append and a copy-on-write delete into ONE
+    atomic snapshot. Until the caller commits, the written parts are
+    invisible orphans.
 
     ``concurrency="optimistic"`` (append-only, clustered/z-order
     layouts, snapshot-logged tables): the encode runs WITHOUT the
@@ -2111,11 +2074,6 @@ def encode_table(
                 "branch commits take the table lock (the ref move and the "
                 "log append publish together); use the default exclusive "
                 "concurrency"
-            )
-        if not commit:
-            raise ValueError(
-                "branch= with commit=False would drop the branch: the "
-                "deferred committer owns the branch placement"
             )
     cols = df.columns
     zb_shift = 0
@@ -2259,8 +2217,16 @@ def encode_table(
         # progress cache's immutability premise no longer holds here
         _PROGRESS_CACHE.pop(out_dir, None)
     fs.makedirs(out_dir)
+    state = _new_table_state(
+        cols,
+        {c: type_name(f) for c, f in _spark_schema_arrow(df).items()},
+        # P7 metadata routing: field-level metadata (e.g. Spark's
+        # enumeration_values, the reference's sonata_writer.cpp:97-128
+        # concern) rides the schema state and is reattached on decode
+        {f.name: f.metadata for f in df.schema.fields if f.metadata},
+    )
     meta = {
-        "schema": {c: type_name(f) for c, f in _spark_schema_arrow(df).items()},
+        "schema": state["schema"],
         "columns": cols,
         "num_parts": num_parts,
         "layout": layout,
@@ -2273,17 +2239,11 @@ def encode_table(
         "zorder_bounds": zbounds,
         "block_rows": block_rows,
         "target_part_rows": target_part_rows,
-        # P7 metadata routing: field-level metadata (e.g. Spark's
-        # enumeration_values, the reference's sonata_writer.cpp:97-128
-        # concern) rides the table meta and is reattached on decode
-        "field_metadata": {
-            f.name: f.metadata for f in df.schema.fields if f.metadata
-        },
+        "field_metadata": state["field_metadata"],
         # field-id column identity (Iceberg posture): ids assigned at
-        # CREATE in column order; appends inherit the table's mapping
-        # below, evolution allocates fresh ids in merge_evolved_meta
-        "field_ids": {c: i + 1 for i, c in enumerate(cols)},
-        "next_field_id": len(cols) + 1,
+        # CREATE in column order; appends evolve the resolved state below
+        "field_ids": state["field_ids"],
+        "next_field_id": state["next_field_id"],
         "engine_version": "0.1.0",
     }
     # part ids are only meaningful under the partitioning config that
@@ -2300,28 +2260,21 @@ def encode_table(
         part_keys = part_keys + ("target_part_rows",)
     run_config = {k: meta[k] for k in part_keys}
     base = 0
-    evolved_meta = None
     if append and fs.exists(meta_path):
-        prev = _read_json(meta_path)
-        # inherit the TABLE's field-id mapping (never this run's
-        # positional one — column order or past drops would skew it);
-        # evolution below re-merges and allocates for genuinely new cols
-        meta["field_ids"], meta["next_field_id"] = _field_ids_of(prev)
-        if prev["schema"] != meta["schema"] or prev["columns"] != cols:
-            # schema evolution (Iceberg add-column posture): columns the
-            # two schemas share must have identical storage types; columns
-            # in only one side are optional — parts that lack a column's
-            # block file decode it as NULL, in both directions (old parts
-            # for added columns, new parts for omitted ones). Retyping a
-            # shared column is refused. The merged meta is NOT written
-            # here: it publishes at the snapshot-commit point, so a
-            # failed or refused append never widens the schema.
-            check_schema_evolution(prev, meta["schema"], cols)
-            merged = merge_evolved_meta(
-                prev, meta["schema"], cols, meta["field_metadata"]
-            )
-            meta.update(merged)
-            evolved_meta = meta
+        # evolve the state resolved at the snapshot this append commits
+        # onto (the tip, or the branch tip): its field ids, defaults and
+        # columns, never a copy a rollback or a branch does not own. The
+        # evolved state publishes with the entry, so a failed or refused
+        # append never widens the schema.
+        snaps = snapshots(out_dir)
+        state = evolve_schema(
+            _resolve_snapshot_meta(
+                out_dir,
+                _branch_tip(out_dir, branch, snaps) if branch else None,
+                snaps,
+            )[0],
+            state["schema"], cols, state["field_metadata"],
+        )
         existing = completed_parts(out_dir)
         if optimistic:
             # lock-free: disjointness by reservation, not by lock-held
@@ -2444,15 +2397,8 @@ def encode_table(
             # — comparable to the whole encode after the native kernel)
             work = spark.range(0, len(desc), 1, max(1, len(desc)))
         else:
-            work = src.withColumn(
-                PART_COL, (F.spark_partition_id() + F.lit(base)).cast("int")
-            )
-            if done:
-                done_df = spark.createDataFrame(
-                    [(int(p),) for p in sorted(done)], f"{PART_COL} int"
-                )
-                work = work.join(F.broadcast(done_df), on=PART_COL, how="left_anti")
-        # no exchange: rows stay in scan order within each split
+            # no exchange: rows stay in scan order within each split
+            work = src.withColumn(PART_COL, F.spark_partition_id())
     elif zrange_parts:
         # balanced CONTIGUOUS z-range part assignment: count rows per
         # coarse z-bucket (<= ~4*num_parts buckets — a tiny driver list),
@@ -2482,24 +2428,10 @@ def encode_table(
             )
             .drop("__sc_zpart")
         )
-        if base:
-            work = work.withColumn(PART_COL, (F.col(PART_COL) + F.lit(base)).cast("int"))
-        if done:
-            done_df = spark.createDataFrame(
-                [(int(p),) for p in sorted(done)], f"{PART_COL} int"
-            )
-            work = work.join(F.broadcast(done_df), on=PART_COL, how="left_anti")
-        if shuffle_tasks is None:
-            par = spark.sparkContext.defaultParallelism
-            # scale-adaptive: ~8 logical parts per task amortizes the
-            # per-task Python handoff and codec selection, floored at one
-            # wave of the cluster, capped at 4 waves for balance headroom
-            shuffle_tasks = max(1, min(num_parts, 4 * par, max(par, num_parts // 8)))
-        work = work.repartition(shuffle_tasks, PART_COL).sortWithinPartitions(
-            PART_COL, *sort_by
-        )
     else:
         work = assign_partitions(src, num_parts, cluster_by, salt_by, target_part_rows)
+    if aligned_direct is None:
+        # this run's part ids start at its base; resumed parts drop out
         if base:
             work = work.withColumn(PART_COL, (F.col(PART_COL) + F.lit(base)).cast("int"))
         if done:
@@ -2507,6 +2439,7 @@ def encode_table(
                 [(int(p),) for p in sorted(done)], f"{PART_COL} int"
             )
             work = work.join(F.broadcast(done_df), on=PART_COL, how="left_anti")
+    if layout != "aligned":
         # logical parts (checkpoint/resume granularity) are decoupled from
         # shuffle tasks (scheduling granularity): each task handles several
         # parts sequentially — 1000 tiny tasks cost more in Python handoff
@@ -2525,12 +2458,12 @@ def encode_table(
     if aligned_direct is not None:
         kernel = _make_aligned_scan_kernel(
             cols, out_dir, block_rows, block_bytes,
-            field_ids=meta["field_ids"], arrow_types=_spark_schema_arrow(df),
+            field_ids=state["field_ids"], arrow_types=_spark_schema_arrow(df),
             descriptors=desc,
         )
     else:
         kernel = _make_encode_kernel(cols, out_dir, block_rows, block_bytes,
-                                     field_ids=meta["field_ids"])
+                                     field_ids=state["field_ids"])
     t0 = time.time()
     summary = work.mapInArrow(kernel, SUMMARY_SPARK_SCHEMA).collect()
     wall = time.time() - t0
@@ -2560,18 +2493,10 @@ def encode_table(
     # resume); create: commit when work happened or no snapshot exists yet
     entry = None
     if (rows or done) if append else (rows or not snaps):
-        entry = {
-            "new_parts": new_parts,
-            "n_rows": sum(r["n_rows"] for r in rows),
-            "enc_bytes": sum(r["enc_bytes"] for r in rows),
-            "layout": layout,
-            # schema versioned per snapshot: time travel to a
-            # pre-evolution snapshot reads the schema in effect then
-            "columns": meta["columns"],
-            "schema": meta["schema"],
-            "field_ids": meta["field_ids"],
-            "ts": time.time(),
-        }
+        entry = _append_entry(
+            state, new_parts, sum(r["n_rows"] for r in rows),
+            sum(r["enc_bytes"] for r in rows), layout,
+        )
         if snapshot_extra:
             # caller-scoped identity keys (e.g. encode_stream's
             # (checkpoint, batch_id) tag) ride the committed entry so
@@ -2587,12 +2512,11 @@ def encode_table(
         if commit:
             if optimistic:
                 committed = _commit_optimistic_append(
-                    out_dir, entry, meta, pm_new, res
+                    out_dir, entry, state, pm_new, res
                 )
             else:
                 committed = _commit_snapshot_entry(
-                    out_dir, entry, append=append, evolved_meta=evolved_meta,
-                    pm=pm_new, branch=branch,
+                    out_dir, entry, append=append, pm=pm_new, branch=branch,
                 )
     elif optimistic:
         # a no-op optimistic run (empty df) committed nothing: release
@@ -2628,8 +2552,7 @@ def encode_table(
         result["snapshot_id"] = committed.get("id")
     if not commit:
         result["pending_commit"] = (
-            {"entry": entry, "evolved_meta": evolved_meta, "pm": pm_new}
-            if entry else None
+            {"entry": entry, "pm": pm_new} if entry else None
         )
     return result
 
@@ -2759,26 +2682,6 @@ def snapshot_parts(
     return sorted(live)
 
 
-def snapshot_schema(
-    out_dir: str, snapshot_id: int, snaps: list[dict] | None = None
-) -> tuple[list, dict] | None:
-    """(columns, schema) in effect at ``snapshot_id``: the nearest entry
-    in its parent chain that recorded one (commits stamp the schema since
-    schema-per-snapshot versioning landed). None for chains written
-    entirely by older engines — callers fall back to the current table
-    meta, the pre-versioning behavior. Pass ``snaps`` when the log is
-    already in hand (avoids a re-read on the decode planning path)."""
-    if snaps is None:
-        snaps = snapshots(out_dir)
-    by_id = {s["id"]: s for s in snaps}
-    cur = by_id.get(snapshot_id)
-    while cur:
-        if "schema" in cur:
-            return cur.get("columns") or list(cur["schema"]), cur["schema"]
-        cur = by_id.get(cur["parent"])
-    return None
-
-
 def _field_ids_of(meta: dict) -> tuple[dict[str, int], int]:
     """(field_ids, next_field_id) of a table meta, synthesizing the
     identity mapping {col: position+1} for tables written before field
@@ -2791,23 +2694,6 @@ def _field_ids_of(meta: dict) -> tuple[dict[str, int], int]:
     if nxt is None:
         nxt = (max(fids.values()) + 1) if fids else 1
     return dict(fids), int(nxt)
-
-
-def snapshot_field_ids(
-    out_dir: str, snapshot_id: int, snaps: list[dict] | None = None
-) -> dict[str, int] | None:
-    """The {column: field_id} mapping in effect AT a snapshot (walks the
-    parent chain like :func:`snapshot_schema`); None for chains written
-    before field-id stamping — those read under name identity."""
-    if snaps is None:
-        snaps = snapshots(out_dir)
-    by_id = {s["id"]: s for s in snaps}
-    cur = by_id.get(snapshot_id)
-    while cur:
-        if "field_ids" in cur:
-            return cur["field_ids"]
-        cur = by_id.get(cur["parent"])
-    return None
 
 
 def _needs_remap(snaps) -> bool:
@@ -2873,28 +2759,140 @@ def _column_remap(
 
 def _resolve_snapshot_meta(
     out_dir: str,
-    meta: dict,
-    snapshot_id: int | None,
+    snapshot_id: int | None = None,
     snaps: list[dict] | None = None,
 ) -> tuple[dict, int | None, list[dict]]:
-    """Overlay the schema and field ids recorded at the RESOLVED snapshot
-    (explicit id, else the tip) onto ``meta`` — the one place the
-    tip/explicit-id/pre-versioning-fallback rules live, shared by every
-    read plan, the maintenance rewrites, table_column_stats and the
-    DataSource schema(). Returns (meta, resolved_sid, snaps)."""
+    """The schema state at a snapshot (explicit id or branch tip, else
+    the main tip) — the one schema authority every reader, rewriter,
+    writer and DDL goes through. Returns ``(state, sid, snaps)`` with
+    ``state`` = ``columns``, ``schema``, ``field_ids``, ``defaults``,
+    ``field_metadata`` and ``next_field_id``.
+
+    The state is the one stamped on the nearest entry of the snapshot's
+    parent chain that records a schema (entries stamp ``defaults`` and
+    ``field_metadata`` only when non-empty). ``next_field_id`` is one
+    past the highest field id anywhere in the log — every chain, every
+    rolled-back entry, and the ``last_field_id`` an expire squash
+    keeps — so a retired id is never handed out again.
+
+    Legacy fallback, and the only schema read of ``_table_meta.json``:
+    chains older than per-snapshot stamps (or tables without a log)
+    read the whole state from it; entries older than per-snapshot
+    defaults and field metadata take the file's values for the columns
+    whose field id still matches."""
     if snaps is None:
         snaps = snapshots(out_dir)
     sid = snapshot_id if snapshot_id is not None else (
         _tip_entry(snaps)["id"] if snaps else None
     )
-    if sid is not None:
-        ss = snapshot_schema(out_dir, sid, snaps=snaps)
-        if ss is not None:
-            meta = dict(meta, columns=ss[0], schema=ss[1])
-        fids = snapshot_field_ids(out_dir, sid, snaps=snaps)
-        if fids is not None:
-            meta = dict(meta, field_ids=fids)
-    return meta, sid, snaps
+    tm = _read_json(_j(out_dir, "_table_meta.json"))
+    by_id = {s["id"]: s for s in snaps}
+    src = by_id.get(sid)
+    while src is not None and "schema" not in src:
+        src = by_id.get(src["parent"])
+    if src is None:
+        src = tm
+    columns = src.get("columns") or list(src["schema"])
+    fids = src.get("field_ids")
+    if fids is None:
+        fids = {
+            c: f for c, f in _field_ids_of(dict(tm, columns=columns))[0].items()
+            if c in columns
+        }
+    tm_fids, tm_next = _field_ids_of(tm)
+
+    def stamped(key):
+        if key in src:
+            return dict(src[key])
+        return {
+            c: v for c, v in (tm.get(key) or {}).items()
+            if c in fids and tm_fids.get(c) == fids[c]
+        }
+
+    state = {
+        "columns": list(columns),
+        "schema": dict(src["schema"]),
+        "field_ids": dict(fids),
+        "defaults": stamped("defaults"),
+        "field_metadata": stamped("field_metadata"),
+        "next_field_id": max(tm_next, _max_field_id(snaps) + 1),
+    }
+    return state, sid, snaps
+
+
+def _max_field_id(snaps: list[dict]) -> int:
+    """The highest field id the entries name, in their mappings or in
+    the ``last_field_id`` an expire squash keeps."""
+    return max(
+        [0]
+        + [f for s in snaps for f in (s.get("field_ids") or {}).values()]
+        + [s.get("last_field_id", 0) for s in snaps]
+    )
+
+
+def _schema_stamp(state: dict) -> dict:
+    """The entry keys that record a schema state: always the columns,
+    types and field ids; defaults and field metadata only when
+    non-empty, so plain tables' log entries carry nothing new."""
+    out = {k: state[k] for k in ("columns", "schema", "field_ids")}
+    for k in ("defaults", "field_metadata"):
+        if state.get(k):
+            out[k] = state[k]
+    return out
+
+
+def _new_table_state(
+    columns: list[str], schema: dict, field_metadata: dict | None = None
+) -> dict:
+    """The schema state of a table being created: field ids assigned in
+    column order (Iceberg posture)."""
+    return {
+        "columns": list(columns),
+        "schema": {c: schema[c] for c in columns},
+        "field_ids": {c: i + 1 for i, c in enumerate(columns)},
+        "defaults": {},
+        "field_metadata": dict(field_metadata or {}),
+        "next_field_id": len(columns) + 1,
+    }
+
+
+def evolve_schema(
+    state: dict, schema: dict[str, str], columns: list[str],
+    field_metadata: dict | None = None,
+) -> dict:
+    """The schema state an append of ``columns`` / ``schema`` commits
+    onto ``state`` (the Iceberg add-column rule). Columns both sides
+    have must keep their storage type — retyping raises. Columns on one
+    side only are optional: parts without a column's block file decode
+    it as NULL, in both directions. Old column order is kept, new
+    columns follow under FRESH field ids from ``next_field_id`` (a
+    re-added name never gets its retired id back, so old parts read it
+    as NULL, not as the dead field's values), and field metadata from
+    both sides merges. Pure: returns ``state`` itself when nothing
+    changes."""
+    if state["schema"] == schema and state["columns"] == columns:
+        return state
+    if any(state["schema"][c] != schema[c] for c in columns if c in state["schema"]):
+        raise ValueError(
+            "append refused: shared columns change storage type "
+            f"({state['schema']} vs {schema})"
+        )
+    new_cols = [c for c in columns if c not in state["schema"]]
+    fids = dict(state["field_ids"])
+    nxt = state["next_field_id"]
+    for c in new_cols:
+        fids[c] = nxt
+        nxt += 1
+    cols = state["columns"] + new_cols
+    merged = {**state["schema"], **schema}
+    return dict(
+        state,
+        columns=cols,
+        schema={c: merged[c] for c in cols},
+        field_ids=fids,
+        next_field_id=nxt,
+        field_metadata={**state["field_metadata"], **(field_metadata or {})},
+    )
 
 
 def _spark_schema_arrow(df: DataFrame) -> dict:
@@ -3440,12 +3438,11 @@ def _plan_read(
         snapshot_id = snapshot_id_as_of(out_dir, as_of, snaps=snaps)
     if ref is not None:
         snapshot_id = resolve_ref(out_dir, ref)
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
     # the read schema is the one recorded AT the resolved snapshot — for
     # time travel a later add-column evolution must not leak into the
     # past, and for latest reads a rollback across an evolution narrows
     # back to the restored snapshot's columns
-    meta, sid, snaps = _resolve_snapshot_meta(out_dir, meta, snapshot_id, snaps)
+    meta, sid, snaps = _resolve_snapshot_meta(out_dir, snapshot_id, snaps)
     columns = list(columns or meta["columns"])
     unknown = sorted(set(columns) - set(meta["schema"]))
     if unknown:
@@ -3463,8 +3460,8 @@ def _plan_read(
         if parts is None:
             parts = completed_parts(out_dir)
     parts = sorted({int(p) for p in parts})
-    fids = _field_ids_of(meta)[0]
-    defaults = meta.get("defaults") or {}
+    fids = meta["field_ids"]
+    defaults = meta["defaults"]
     wheres = _prunable_preds(list(wheres), defaults)
     wheres_any = _prunable_dnf(wheres_any, defaults) or None
     need_remap = _needs_remap(snaps) and sid is not None
@@ -3480,7 +3477,7 @@ def _plan_read(
         pred_cols = {w[0] for conj in [wheres, *(wheres_any or [])] for w in conj}
         remap = _column_remap(
             out_dir, [*columns, *sorted(pred_cols - set(columns))], parts,
-            snapshot_field_ids(out_dir, sid, snaps=snaps), snaps=snaps, pm=pm,
+            fids, snaps=snaps, pm=pm,
         )
     ghosts = {p: gh for p, (gh, _al) in remap.items()}
     if wheres:
@@ -3501,8 +3498,7 @@ def _plan_read(
         parts=parts,
         remap={p: remap[p] for p in parts if p in remap},
         field_metadata={
-            c: md for c, md in (meta.get("field_metadata") or {}).items()
-            if c in columns
+            c: md for c, md in meta["field_metadata"].items() if c in columns
         },
         field_ids={c: fids[c] for c in columns if c in fids},
     )
@@ -3794,8 +3790,8 @@ def _rewrite_summary(plan: _ReadPlan, groups: list[list[int]], rows) -> dict:
     """What a rewrite did, from its summary rows: ``removed_parts``
     (every part of a group that was written or lost rows),
     ``new_parts``, ``rows_deleted``, the written ``n_rows`` and
-    ``enc_bytes``, plus the planned snapshot's ``columns``, ``schema``
-    and ``field_ids`` for the committed entry to stamp."""
+    ``enc_bytes``, plus the planned snapshot's schema state under
+    ``stamp`` for the committed entry to carry."""
     return {
         "removed_parts": sorted(
             p for r in rows if r["new_pid"] >= 0 or r["n_after"] < r["n_before"]
@@ -3805,9 +3801,11 @@ def _rewrite_summary(plan: _ReadPlan, groups: list[list[int]], rows) -> dict:
         "rows_deleted": int(sum(r["n_before"] - r["n_after"] for r in rows)),
         "n_rows": int(sum(r["n_after"] for r in rows if r["new_pid"] >= 0)),
         "enc_bytes": int(sum(r["enc_bytes"] for r in rows)),
-        "columns": plan.columns,
-        "schema": plan.types,
-        "field_ids": plan.field_ids,
+        "stamp": _schema_stamp({
+            "columns": plan.columns, "schema": plan.types,
+            "field_ids": plan.field_ids, "defaults": plan.fill,
+            "field_metadata": plan.field_metadata,
+        }),
     }
 
 
@@ -3827,9 +3825,9 @@ def _rewrite_parts(
     at ``snapshot_id`` (default: the tip; delete and merge pass the
     branch tip) through :func:`_plan_read`, exactly like readers do: the
     snapshot's columns and types, add_column defaults, and per-part
-    ghosts and aliases. So a rollback or a branch that does not own
-    ``_table_meta.json`` rewrites under its own schema, and the new
-    parts carry that snapshot's field ids. One Spark job of
+    ghosts and aliases. So a rollback or a branch rewrites under its own
+    schema, and the new parts carry that snapshot's field ids. One Spark
+    job of
     ``min(len(groups), slots)`` Python tasks on ``spark.range``.
     Returns :func:`_rewrite_summary`."""
     plan = _plan_read(
@@ -3883,7 +3881,7 @@ def compact_table(
     just before the critical section (deterministic interleaving).
     """
     optimistic = concurrency == "optimistic"
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
+    layout = _read_json(_j(out_dir, "_table_meta.json"))
     live = snapshot_parts(out_dir)
     if live is None:
         if optimistic:
@@ -3896,7 +3894,7 @@ def compact_table(
     # live set BEFORE any merged part lands — otherwise readers on the
     # completed_parts fallback would see originals AND merged copies
     # (duplicate rows), permanently if the job crashed before the commit
-    _ensure_snapshot_root(out_dir, live, meta)
+    _ensure_snapshot_root(out_dir, live)
     rows_of = {p: d["n_rows"] for p, d in part_meta(out_dir, parts=live).items()}
     groups: list[list[int]] = []
     cur: list[int] = []
@@ -3924,42 +3922,40 @@ def compact_table(
     else:
         base = _next_part_base(out_dir, live)
     rw = _rewrite_parts(
-        spark, out_dir, groups, base, meta.get("block_rows") or 65536
+        spark, out_dir, groups, base, layout.get("block_rows") or 65536
     )
     removed, created = rw["removed_parts"], rw["new_parts"]
-    body = {
-        "new_parts": created,
-        "removed_parts": removed,
-        "n_rows": rw["n_rows"],
-        "enc_bytes": rw["enc_bytes"],
-        "layout": meta.get("layout", "clustered"),
-        "columns": rw["columns"],
-        "schema": rw["schema"],
-        "field_ids": rw["field_ids"],
-        "compaction": True,
-        "ts": time.time(),
-    }
-    if not optimistic:
+
+    def entry(stamp: dict, survivors: list[int], pm: dict) -> dict:
         # CONSOLIDATED manifest: cover the full post-compaction live set
         # (survivors folded from the older manifests + the merged parts
         # from their fresh checkpoints), so part_meta's newest-first
         # early exit satisfies any later pruned read from THIS one file —
         # a 10k-commit table stops paying a 10k-manifest cold-driver read
         # at its next compaction (the Iceberg rewrite_manifests idiom).
-        # The exclusive path holds the writer lease, so vacuum/expire
-        # (also lease holders) cannot sweep the not-yet-referenced file.
-        # The OPTIMISTIC path defers this into its critical section
-        # below: written lock-free it would sit unreferenced while a
-        # concurrent vacuum runs, get swept, and every future pruned
-        # read of this entry would fall back to O(parts) checkpoints.
+        return {
+            "new_parts": created,
+            "removed_parts": removed,
+            "n_rows": rw["n_rows"],
+            "enc_bytes": rw["enc_bytes"],
+            "layout": layout.get("layout", "clustered"),
+            **stamp,
+            "compaction": True,
+            "ts": time.time(),
+            "manifest": write_manifest(out_dir, survivors + created, pm=pm),
+            "manifest_full": True,
+        }
+
+    if not optimistic:
+        # the exclusive path holds the writer lease, so vacuum/expire
+        # (also lease holders) cannot sweep the not-yet-referenced
+        # manifest before the entry lands
         survivors = sorted(set(live) - set(removed))
-        body["manifest"] = write_manifest(
-            out_dir,
-            survivors + created,
-            pm=part_meta(out_dir, parts=survivors),
+        _commit_snapshot_entry(
+            out_dir, entry(rw["stamp"], survivors, part_meta(out_dir, parts=survivors)),
+            append=True,
         )
-        body["manifest_full"] = True
-    if optimistic:
+    else:
         if _pre_commit_hook is not None:
             _pre_commit_hook()
         tok = _acquire_writer_lock_blocking(out_dir, "commit")
@@ -3981,44 +3977,26 @@ def compact_table(
                     f"expires) — re-run the compaction on the new tip"
                 )
             # schema may have evolved concurrently (nullable widen by an
-            # append); compaction never changes schema, so stamp the
-            # entry with the CURRENT tip's schema and field ids, not the
-            # planning-time ones
-            snaps = snapshots(out_dir)
-            cur_meta, _, _ = _resolve_snapshot_meta(
-                out_dir, _read_json(_j(out_dir, "_table_meta.json")), None,
-                snaps,
-            )
-            # consolidated like the exclusive path, but against the
-            # CURRENT tip's survivors (concurrent appends since planning
-            # are covered too — their stats fold from their own fresh
-            # manifests); written INSIDE the lease: vacuum/expire also
-            # hold it, so the file can never sit unreferenced in front
-            # of a concurrent sweep (it becomes referenced by the log
-            # append below, atomically w.r.t. them)
+            # append); compaction never changes schema, so the entry
+            # stamps the CURRENT tip's schema state, not the planning-time
+            # one. The manifest covers the CURRENT tip's survivors
+            # (concurrent appends since planning fold from their own
+            # fresh manifests) and is written INSIDE the lease: written
+            # lock-free it could sit unreferenced in front of a
+            # concurrent vacuum/expire sweep
+            cur_state, _, snaps = _resolve_snapshot_meta(out_dir)
             cur_survivors = sorted(cur_live - set(removed))
-            entry = dict(
-                body,
-                columns=cur_meta["columns"],
-                schema=cur_meta["schema"],
-                field_ids=_field_ids_of(cur_meta)[0],
-                manifest=write_manifest(
-                    out_dir,
-                    cur_survivors + created,
-                    pm=part_meta(out_dir, parts=cur_survivors, snaps=snaps),
+            _commit_snapshot_entry(
+                out_dir,
+                entry(
+                    _schema_stamp(cur_state), cur_survivors,
+                    part_meta(out_dir, parts=cur_survivors, snaps=snaps),
                 ),
-                manifest_full=True,
-                id=snaps[-1]["id"] + 1,
-                parent=_tip_entry(snaps)["id"],
+                append=True,
             )
-            _snapshot_log_append(out_dir, entry)
         finally:
             _release_writer_lock(out_dir, tok)
         release_part_range(out_dir, res)
-    else:
-        snaps = snapshots(out_dir)  # never empty: rooted above
-        entry = dict(body, id=snaps[-1]["id"] + 1, parent=_tip_entry(snaps)["id"])
-        _snapshot_log_append(out_dir, entry)
     return {
         "groups": len(groups),
         "parts_removed": len(removed),
@@ -4090,13 +4068,13 @@ def optimize_table(
     The decoded source is persisted for the rewrite's multiple passes
     (z-bounds agg, rank dictionaries, encode) — one decode, not three.
     """
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
+    state = _resolve_snapshot_meta(out_dir)[0]
     # fail FAST (before the decode + z-bounds jobs) on storage types the
     # decode->Spark->encode loop cannot preserve: u8/u16/u32 widen to
     # signed, u64 is an int64 bit view, lstr/lbin relax to str/bin — the
     # re-encode would then trip the schema-evolution type guard anyway
     bad = {
-        c: s for c, s in meta["schema"].items() if not _storage_roundtrips(s)
+        c: s for c, s in state["schema"].items() if not _storage_roundtrips(s)
     }
     if bad:
         raise ValueError(
@@ -4116,11 +4094,11 @@ def optimize_table(
         # unknown — right for reads, but here it would silently escalate
         # a bounded rewrite into the whole-table rewrite the WHERE
         # exists to avoid (a typo'd column name = 100 TB of I/O)
-        bad_cols = sorted({w[0] for w in wheres} - set(meta["schema"]))
+        bad_cols = sorted({w[0] for w in wheres} - set(state["schema"]))
         if bad_cols:
             raise ValueError(
                 f"optimize where references unknown columns {bad_cols}; "
-                f"table has {meta['columns']}"
+                f"table has {state['columns']}"
             )
         affected = _prune_parts_conj(
             out_dir, wheres, live, part_meta(out_dir, parts=live)
@@ -4129,7 +4107,9 @@ def optimize_table(
             return {"parts_removed": 0, "parts_created": 0, "n_rows": 0}
     # legacy (pre-snapshot-log) tables: root the log BEFORE rewrite parts
     # land, or completed_parts-fallback readers would double-count rows
-    _ensure_snapshot_root(out_dir, live, meta)
+    _ensure_snapshot_root(out_dir, live)
+    meta_path = _j(out_dir, "_table_meta.json")
+    meta = _read_json(meta_path)
     src = decode_table(spark, out_dir, _parts=affected).persist()
     try:
         rep = encode_table(
@@ -4166,20 +4146,19 @@ def optimize_table(
     # table meta tracks the NEW clustering (informational + resume
     # identity) — but only for a FULL rewrite: a partial optimize leaves
     # a mixed layout, so the table-level clustering claim must not change
-    new_meta = pend["evolved_meta"]
     if where is None:
-        new_meta = dict(pend["evolved_meta"] or meta)
-        new_meta.update({
-            "zorder_by": zorder_by, "sort_by": sort_by,
-            "cluster_by": cluster_by, "salt_by": salt_by,
-            "target_part_rows": target_part_rows,
+        _atomic_write_json(meta_path, dict(
+            meta,
+            zorder_by=zorder_by, sort_by=sort_by,
+            cluster_by=cluster_by, salt_by=salt_by,
+            target_part_rows=target_part_rows,
             # the rewrite's ACTUAL layout: without this the pre-rewrite
             # part count would survive and misdescribe the live table
             # (encode_progress totals, resume identity)
-            "num_parts": len(entry["new_parts"]),
-        })
+            num_parts=len(entry["new_parts"]),
+        ))
     committed = _commit_snapshot_entry(
-        out_dir, entry, append=True, evolved_meta=new_meta, pm=pend.get("pm")
+        out_dir, entry, append=True, pm=pend.get("pm")
     )
     return {
         "parts_removed": len(affected),
@@ -4224,7 +4203,7 @@ def _copy_on_write_delete(
     The rewrite (:func:`_rewrite_parts`) resolves the schema and field
     ids at ``meta["snapshot_id"]`` (set by :func:`_load_live`: the tip or
     the branch tip; absent = the tip), like readers do."""
-    _ensure_snapshot_root(out_dir, live, meta)
+    _ensure_snapshot_root(out_dir, live)
     rw = _rewrite_parts(
         spark, out_dir, [[int(p)] for p in affected],
         _next_part_base(out_dir, live), meta.get("block_rows") or 65536,
@@ -4241,9 +4220,7 @@ def _copy_on_write_delete(
             "n_rows": -rw["rows_deleted"],
             "enc_bytes": 0,
             "layout": meta.get("layout", "clustered"),
-            "columns": rw["columns"],
-            "schema": rw["schema"],
-            "field_ids": rw["field_ids"],
+            **rw["stamp"],
             "delete": tag,
             "ts": time.time(),
             **(extra or {}),
@@ -4268,23 +4245,26 @@ def _delete_report(rw: dict, n_scanned: int) -> dict:
 def _load_live(
     out_dir: str, col: str, branch: str | None = None
 ) -> tuple[dict, list[int]]:
-    """(meta, live) at the tip, or at ``branch``'s tip: the table meta
-    with the schema and field ids in effect there (main may have evolved
-    since a fork, and a rollback narrows the tip), the live part set,
-    and the resolved id under ``meta["snapshot_id"]`` (None for a table
-    without a snapshot log) — delete and merge rewrite at that snapshot."""
+    """(meta, live) at the tip, or at ``branch``'s tip: the schema state
+    in effect there (main may have evolved since a fork, and a rollback
+    narrows the tip) with the table's ``layout`` and ``block_rows``, the
+    live part set, and the resolved id under ``meta["snapshot_id"]``
+    (None for a table without a snapshot log) — delete and merge rewrite
+    at that snapshot."""
     snaps = snapshots(out_dir)
     bid = _branch_tip(out_dir, branch, snaps) if branch is not None else None
-    meta, sid, _ = _resolve_snapshot_meta(
-        out_dir, _read_json(_j(out_dir, "_table_meta.json")), bid, snaps
-    )
+    meta, sid, _ = _resolve_snapshot_meta(out_dir, bid, snaps)
+    layout = _read_json(_j(out_dir, "_table_meta.json"))
     live = (
         snapshot_parts(out_dir, sid, snaps=snaps) if sid is not None
         else sorted(completed_parts(out_dir))
     )
     if col not in meta["columns"]:
         raise ValueError(f"unknown column {col!r}; table has {meta['columns']}")
-    return dict(meta, snapshot_id=sid), live
+    return dict(
+        meta, layout=layout.get("layout", "clustered"),
+        block_rows=layout.get("block_rows"), snapshot_id=sid,
+    ), live
 
 
 @_with_writer_lock("delete")
@@ -4314,8 +4294,7 @@ def delete_rows(
     re-deliver the rewritten rows (the feed is append-only, like
     compaction rewrites). The rewrite resolves the schema and field ids
     at the tip, or at ``branch``'s tip, like readers do: survivors keep
-    the values that snapshot reads, whatever ``_table_meta.json`` says
-    after a rollback or on another branch."""
+    the values that snapshot reads, after a rollback or on a branch."""
     wheres = _normalize_where(where)
     if not wheres:
         raise ValueError("delete_rows needs at least one predicate")
@@ -4520,7 +4499,7 @@ def _upsert_rows_inner(
         if affected:
             # legacy tables root the log BEFORE any rewrite lands, so the
             # rewrites stay invisible until the combined entry commits
-            _ensure_snapshot_root(out_dir, live, meta)
+            _ensure_snapshot_root(out_dir, live)
             head = (
                 df.select(key_col).where(F.col(key_col).isNotNull())
                 .distinct().limit(broadcast_keys + 1).collect()
@@ -4563,7 +4542,7 @@ def _upsert_rows_inner(
     encode_kwargs.pop("resume", None)
     app = encode_table(
         spark, df, out_dir, append=True, commit=False, resume=False,
-        **encode_kwargs,
+        branch=branch, **encode_kwargs,
     )
     pend_app = app.get("pending_commit")
     append_parts = pend_app["entry"]["new_parts"] if pend_app else []
@@ -4572,10 +4551,8 @@ def _upsert_rows_inner(
     base_entry = pend_app["entry"] if pend_app else {
         "n_rows": 0,
         "enc_bytes": 0,
-        "layout": (meta or {}).get("layout", "clustered"),
-        "columns": meta["columns"],
-        "schema": meta["schema"],
-        "field_ids": _field_ids_of(meta)[0],
+        "layout": meta["layout"],
+        **_schema_stamp(meta),
     }
     # start from the append's prepared entry so caller-scoped identity
     # keys (snapshot_extra, e.g. a stream replay tag) survive into the
@@ -4596,7 +4573,6 @@ def _upsert_rows_inner(
     })
     _commit_snapshot_entry(
         out_dir, entry, append=True,
-        evolved_meta=pend_app["evolved_meta"] if pend_app else None,
         # append parts' metadata rode the encode summary; rewrite parts
         # fall back to their checkpoints inside write_manifest
         pm=pend_app.get("pm") if pend_app else None,
@@ -4609,67 +4585,68 @@ def _upsert_rows_inner(
     }
 
 
-@_with_writer_lock("evolve")
-def drop_column(out_dir: str, col: str) -> dict:
-    """DROP COLUMN as a metadata-only snapshot (the Iceberg posture): no
-    part file is touched — the committed entry carries the narrowed
-    schema, so reads at the new tip stop decoding the column while time
-    travel (id / timestamp / tag) to any pre-drop snapshot still
-    reconstructs it (schema is versioned per snapshot). The table meta
-    narrows too, so future appends are validated against the post-drop
-    shape. Columns are identified by Iceberg-style FIELD ID, not name:
-    the drop retires the column's id, and an append that re-introduces
-    the name is ADD-COLUMN evolution under a FRESH id — old parts decode
-    the re-added name as NULL (their block files hold the retired
-    field's bytes, which never resurrect; see :func:`_column_remap`). The
-    dropped bytes are reclaimed only when the pre-drop snapshots expire
-    and a compaction or optimize rewrites the old parts."""
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    if col not in meta["columns"]:
-        raise ValueError(f"unknown column {col!r}; table has {meta['columns']}")
-    if len(meta["columns"]) == 1:
-        raise ValueError(f"cannot drop {col!r}: it is the table's only column")
-    snaps = snapshots(out_dir)
-    live = snapshot_parts(out_dir, snaps=snaps)
+def _commit_schema_change(out_dir: str, change: dict, state: dict) -> dict:
+    """Commit a metadata-only DDL (drop, add or rename a column) as one
+    snapshot on the main tip: no part file is touched, the entry records
+    ``change`` and stamps the new schema ``state``. A pre-snapshot
+    (legacy) table gets its log rooted first."""
+    live = snapshot_parts(out_dir)
     if live is None:
         live = sorted(completed_parts(out_dir))
-    _ensure_snapshot_root(out_dir, live, meta)
-    new_meta = dict(meta)
-    new_meta["columns"] = [c for c in meta["columns"] if c != col]
-    new_meta["schema"] = {
-        c: meta["schema"][c] for c in new_meta["columns"]
-    }
-    fm = dict(meta.get("field_metadata") or {})
-    fm.pop(col, None)
-    new_meta["field_metadata"] = fm
-    # RETIRE the field id: it leaves the mapping and is never reused
-    # (next_field_id only grows), so re-adding the name later allocates
-    # a fresh id and old parts decode it as NULL — no resurrection
-    fids, nxt = _field_ids_of(meta)
-    fids.pop(col, None)
-    new_meta["field_ids"] = fids
-    new_meta["next_field_id"] = nxt
-    if (meta.get("defaults") or {}).get(col) is not None:
-        d = dict(meta["defaults"])
-        d.pop(col, None)
-        new_meta["defaults"] = d
+    _ensure_snapshot_root(out_dir, live)
     entry = {
         "new_parts": [],
         "removed_parts": [],
         "n_rows": 0,
         "enc_bytes": 0,
-        "layout": meta.get("layout", "clustered"),
-        "drop_column": col,
-        "columns": new_meta["columns"],
-        "schema": new_meta["schema"],
-        "field_ids": fids,
+        "layout": _read_json(_j(out_dir, "_table_meta.json")).get(
+            "layout", "clustered"
+        ),
+        **change,
+        **_schema_stamp(state),
         "ts": time.time(),
     }
-    e = _commit_snapshot_entry(
-        out_dir, entry, append=True, evolved_meta=new_meta
-    )
-    return {"snapshot_id": e["id"], "dropped": col,
-            "columns": new_meta["columns"]}
+    return _commit_snapshot_entry(out_dir, entry, append=True)
+
+
+def _renamed(d: dict, old: str, new: str | None) -> dict:
+    """``d`` with key ``old`` renamed to ``new`` (dropped when None),
+    keeping key order."""
+    return {
+        (new if k == old else k): v for k, v in d.items()
+        if k != old or new is not None
+    }
+
+
+@_with_writer_lock("evolve")
+def drop_column(out_dir: str, col: str) -> dict:
+    """DROP COLUMN as a metadata-only snapshot (the Iceberg posture): no
+    part file is touched — the committed entry carries the narrowed
+    schema, so reads at the new tip stop decoding the column, later
+    appends and DDL evolve the post-drop shape, and time travel (id /
+    timestamp / tag) to any pre-drop snapshot still reconstructs it
+    (schema is versioned per snapshot). Columns are identified by
+    Iceberg-style FIELD ID, not name: the drop retires the column's id,
+    and an append that re-introduces the name is ADD-COLUMN evolution
+    under a FRESH id — old parts decode the re-added name as NULL (their
+    block files hold the retired field's bytes, which never resurrect;
+    see :func:`_column_remap`). The dropped bytes are reclaimed only
+    when the pre-drop snapshots expire and a compaction or optimize
+    rewrites the old parts."""
+    state = _resolve_snapshot_meta(out_dir)[0]
+    if col not in state["columns"]:
+        raise ValueError(f"unknown column {col!r}; table has {state['columns']}")
+    if len(state["columns"]) == 1:
+        raise ValueError(f"cannot drop {col!r}: it is the table's only column")
+    # the field id leaves the mapping for good: ids are allocated above
+    # the log's high-water mark, so re-adding the name gets a fresh id
+    new = {
+        k: _renamed(state[k], col, None)
+        for k in ("schema", "field_ids", "defaults", "field_metadata")
+    }
+    new["columns"] = [c for c in state["columns"] if c != col]
+    e = _commit_schema_change(out_dir, {"drop_column": col}, new)
+    return {"snapshot_id": e["id"], "dropped": col, "columns": new["columns"]}
 
 
 @_with_writer_lock("evolve")
@@ -4687,8 +4664,8 @@ def add_column(
     evolving append (a wider DataFrame) remains the implicit add with
     NULL backfill — this is the explicit form for when a real default
     is wanted."""
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    if col in meta["columns"]:
+    state = _resolve_snapshot_meta(out_dir)[0]
+    if col in state["columns"]:
         raise ValueError(f"column {col!r} already exists")
     if storage_type not in _DECODE_ARROW_OF:
         raise ValueError(
@@ -4698,36 +4675,13 @@ def add_column(
     if default is not None:
         # validate NOW: a bad default must fail the DDL, not every read
         pa.scalar(default, type=_DECODE_ARROW_OF[storage_type])
-    snaps = snapshots(out_dir)
-    live = snapshot_parts(out_dir, snaps=snaps)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
-    _ensure_snapshot_root(out_dir, live, meta)
-    new_meta = dict(meta)
-    new_meta["columns"] = meta["columns"] + [col]
-    new_meta["schema"] = {**meta["schema"], col: storage_type}
-    fids, nxt = _field_ids_of(meta)
-    fids[col] = nxt
-    new_meta["field_ids"] = fids
-    new_meta["next_field_id"] = nxt + 1
-    defaults = dict(meta.get("defaults") or {})
+    new = evolve_schema(
+        state, {**state["schema"], col: storage_type}, state["columns"] + [col]
+    )
     if default is not None:
-        defaults[col] = default
-        new_meta["defaults"] = defaults
-    entry = {
-        "new_parts": [],
-        "removed_parts": [],
-        "n_rows": 0,
-        "enc_bytes": 0,
-        "layout": meta.get("layout", "clustered"),
-        "add_column": [col, storage_type],
-        "columns": new_meta["columns"],
-        "schema": new_meta["schema"],
-        "field_ids": fids,
-        "ts": time.time(),
-    }
-    e = _commit_snapshot_entry(
-        out_dir, entry, append=True, evolved_meta=new_meta
+        new = dict(new, defaults={**new["defaults"], col: default})
+    e = _commit_schema_change(
+        out_dir, {"add_column": [col, storage_type]}, new
     )
     return {"snapshot_id": e["id"], "added": col,
             "type": storage_type, "default": default}
@@ -4746,56 +4700,33 @@ def rename_column(out_dir: str, old: str, new: str) -> dict:
     snapshot reads the old name (schema is versioned per snapshot).
     Refuses a name already in the schema; renaming onto a previously
     DROPPED name is fine (that name's id was retired, this one's id
-    moves with the rename)."""
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    if old not in meta["columns"]:
-        raise ValueError(f"unknown column {old!r}; table has {meta['columns']}")
-    if new in meta["columns"]:
+    moves with the rename). The clustering keys recorded in
+    ``_table_meta.json`` follow the rename."""
+    state = _resolve_snapshot_meta(out_dir)[0]
+    if old not in state["columns"]:
+        raise ValueError(f"unknown column {old!r}; table has {state['columns']}")
+    if new in state["columns"]:
         raise ValueError(f"column {new!r} already exists; drop it first")
     if old == new:
         raise ValueError("old and new names are identical")
-    snaps = snapshots(out_dir)
-    live = snapshot_parts(out_dir, snaps=snaps)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
-    _ensure_snapshot_root(out_dir, live, meta)
-    new_meta = dict(meta)
-    new_meta["columns"] = [new if c == old else c for c in meta["columns"]]
-    new_meta["schema"] = {
-        (new if c == old else c): t for c, t in meta["schema"].items()
+    # the ID is the identity; the name moves
+    renamed = {
+        k: _renamed(state[k], old, new)
+        for k in ("schema", "field_ids", "defaults", "field_metadata")
     }
-    fm = dict(meta.get("field_metadata") or {})
-    if old in fm:
-        fm[new] = fm.pop(old)
-    new_meta["field_metadata"] = fm
-    fids, nxt = _field_ids_of(meta)
-    fids[new] = fids.pop(old)  # the ID is the identity; the name moves
-    new_meta["field_ids"] = fids
-    new_meta["next_field_id"] = nxt
-    if (meta.get("defaults") or {}).get(old) is not None:
-        d = dict(meta["defaults"])
-        d[new] = d.pop(old)
-        new_meta["defaults"] = d
-    for k in ("cluster_by", "salt_by", "sort_by", "zorder_by"):
-        if new_meta.get(k):
-            new_meta[k] = [new if c == old else c for c in new_meta[k]]
-    entry = {
-        "new_parts": [],
-        "removed_parts": [],
-        "n_rows": 0,
-        "enc_bytes": 0,
-        "layout": meta.get("layout", "clustered"),
-        "rename_column": [old, new],
-        "columns": new_meta["columns"],
-        "schema": new_meta["schema"],
-        "field_ids": fids,
-        "ts": time.time(),
+    renamed["columns"] = [new if c == old else c for c in state["columns"]]
+    meta_path = _j(out_dir, "_table_meta.json")
+    meta = _read_json(meta_path)
+    keys = {
+        k: [new if c == old else c for c in meta[k]]
+        for k in ("cluster_by", "salt_by", "sort_by", "zorder_by")
+        if old in (meta.get(k) or [])
     }
-    e = _commit_snapshot_entry(
-        out_dir, entry, append=True, evolved_meta=new_meta
-    )
+    if keys:
+        _atomic_write_json(meta_path, dict(meta, **keys))
+    e = _commit_schema_change(out_dir, {"rename_column": [old, new]}, renamed)
     return {"snapshot_id": e["id"], "renamed": [old, new],
-            "columns": new_meta["columns"]}
+            "columns": renamed["columns"]}
 
 
 @_with_writer_lock("rollback")
@@ -4805,10 +4736,11 @@ def rollback_table(out_dir: str, snapshot_id: int) -> dict:
     rewriting). The entry's live set is exactly the target snapshot's;
     no part file moves — parts added after the target become orphans of
     the new tip (still reachable by time travel until
-    ``expire_snapshots``). The entry restores the target's schema, so a
-    rollback across an add-column evolution also narrows the read
-    schema back; the current table meta keeps the union (harmless: the
-    extra columns simply aren't in the rolled-back entry's schema)."""
+    ``expire_snapshots``). The entry stamps the target's whole schema
+    state (:func:`_resolve_snapshot_meta`: columns, types, field ids,
+    defaults, field metadata), so a rollback across a schema change
+    restores the read schema too, and later writers and DDL evolve the
+    restored state. Field ids allocated after the target stay retired."""
     snaps = snapshots(out_dir)
     if not snaps:
         raise ValueError(f"table at {out_dir} has no snapshot log")
@@ -4821,14 +4753,10 @@ def rollback_table(out_dir: str, snapshot_id: int) -> dict:
         )
     target_parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)  # validates
     cur = snapshot_parts(out_dir, snaps=snaps)
-    ss = snapshot_schema(out_dir, snapshot_id, snaps=snaps)
-    if ss is None:
-        # target predates schema-per-snapshot versioning: its schema is
-        # unknowable, so stamp the current table meta (the union) — the
-        # chain walk must stop HERE, not drift past the rollback to some
-        # newer evolved entry's schema
-        m = _read_json(_j(out_dir, "_table_meta.json"))
-        ss = (m["columns"], m["schema"])
+    # a target older than per-snapshot schemas resolves to the legacy
+    # fallback — stamped HERE, so the chain walk never drifts past the
+    # rollback to some newer evolved entry's schema
+    state = _resolve_snapshot_meta(out_dir, snapshot_id, snaps)[0]
     # real row delta for the history audit: visible rows after - before
     # (one O(#parts) metadata read; this is a maintenance op). Refuse to
     # guess when any involved part's meta is unreadable — same posture
@@ -4851,13 +4779,9 @@ def rollback_table(out_dir: str, snapshot_id: int) -> dict:
         # first-class flag: the changefeed must not replay the restored
         # parts (consumers already received them)
         "rollback_of": snapshot_id,
-        "columns": ss[0],
-        "schema": ss[1],
+        **_schema_stamp(state),
         "ts": time.time(),
     }
-    rf = snapshot_field_ids(out_dir, snapshot_id, snaps=snaps)
-    if rf is not None:
-        entry["field_ids"] = rf  # restored state reads under ITS mapping
     # pm already covers every restored part — the rollback entry's
     # manifest writes without re-reading a single checkpoint
     e = _commit_snapshot_entry(out_dir, entry, append=True, pm=pm)
@@ -4997,12 +4921,11 @@ def table_changes(
     without a full re-read — the append-only changefeed cannot express
     them. Rollback snapshots emit nothing (consumers that must follow a
     rollback should resync from the restored snapshot)."""
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
+    meta, _sid, snaps = _resolve_snapshot_meta(out_dir)
     if key_col not in meta["columns"]:
         raise ValueError(
             f"unknown key column {key_col!r}; table has {meta['columns']}"
         )
-    snaps = snapshots(out_dir)
     plan = _cdc_plan(snaps, start_snapshot, end_snapshot)
     key_arrow = _DECODE_ARROW_OF[meta["schema"][key_col]]
     key_spark = _SPARK_TYPE_OF[meta["schema"][key_col]]
@@ -5059,8 +4982,7 @@ def table_column_stats(out_dir: str, snapshot_id: int | None = None) -> dict:
     ``snapshot_id``, else the tip) — consistent with ``decode_table``:
     after a rollback across an add-column evolution, narrowed-away
     columns are not reported."""
-    meta = _read_json(_j(out_dir, "_table_meta.json"))
-    meta, _sid, snaps = _resolve_snapshot_meta(out_dir, meta, snapshot_id)
+    meta, _sid, snaps = _resolve_snapshot_meta(out_dir, snapshot_id)
     parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)
     if parts is None:
         parts = sorted(completed_parts(out_dir))
@@ -5072,8 +4994,7 @@ def table_column_stats(out_dir: str, snapshot_id: int | None = None) -> dict:
     remap = (
         _column_remap(
             out_dir, meta["columns"], parts,
-            snapshot_field_ids(out_dir, _sid, snaps=snaps)
-            if _sid is not None else None,
+            meta["field_ids"] if _sid is not None else None,
             snaps=snaps, pm=pm,
         )
         if _needs_remap(snaps) else {}
@@ -5423,10 +5344,6 @@ def fast_forward(out_dir: str, name: str) -> dict:
     appended = _branch_appended(walked, live_b, added)
     pm = part_meta(out_dir, parts=sorted(set(added) | set(removed)), snaps=snaps)
     delta = _rows_delta(pm, added, removed, f"fast_forward({name!r})")
-    ss = snapshot_schema(out_dir, btip, snaps=snaps)
-    if ss is None:
-        m = _read_json(_j(out_dir, "_table_meta.json"))
-        ss = (m["columns"], m["schema"])
     entry = {
         "new_parts": added,
         "removed_parts": removed,
@@ -5436,13 +5353,10 @@ def fast_forward(out_dir: str, name: str) -> dict:
         "layout": by_id[btip].get("layout", "clustered"),
         "fast_forward_of": name,
         "ff_from": btip,
-        "columns": ss[0],
-        "schema": ss[1],
+        # the branch's schema state becomes main's
+        **_schema_stamp(_resolve_snapshot_meta(out_dir, btip, snaps)[0]),
         "ts": time.time(),
     }
-    bf = snapshot_field_ids(out_dir, btip, snaps=snaps)
-    if bf is not None:
-        entry["field_ids"] = bf  # the branch's mapping becomes main's
     e = _commit_snapshot_entry(out_dir, entry, append=True, pm=pm)
     return {"fast_forwarded": True, "snapshot_id": e["id"],
             "branch_tip": btip, "parts_added": len(added),
@@ -5675,10 +5589,6 @@ def rebase_branch(out_dir: str, name: str, spark: SparkSession | None = None) ->
     pm = part_meta(out_dir, parts=sorted(set(added) | set(removed)),
                    snaps=snaps)
     delta = _rows_delta(pm, added, removed, f"rebase_branch({name!r})")
-    ss = snapshot_schema(out_dir, btip, snaps=snaps)
-    if ss is None:
-        m = _read_json(_j(out_dir, "_table_meta.json"))
-        ss = (m["columns"], m["schema"])
     entry = {
         "new_parts": added,
         "removed_parts": removed,
@@ -5687,13 +5597,10 @@ def rebase_branch(out_dir: str, name: str, spark: SparkSession | None = None) ->
         "enc_bytes": 0,
         "layout": by_id[btip].get("layout", "clustered"),
         "rebase_of": btip,
-        "columns": ss[0],
-        "schema": ss[1],
+        # the rebased chain keeps the branch's schema state
+        **_schema_stamp(_resolve_snapshot_meta(out_dir, btip, snaps)[0]),
         "ts": time.time(),
     }
-    bf = snapshot_field_ids(out_dir, btip, snaps=snaps)
-    if bf is not None:
-        entry["field_ids"] = bf  # rebased chain keeps the branch's mapping
     e = _commit_snapshot_entry(
         out_dir, entry, append=True, pm=pm,
         branch=name, branch_parent=main["id"],
@@ -5896,6 +5803,12 @@ def expire_snapshots(out_dir: str, keep_last: int = 1) -> dict:
         t["manifest"] = write_manifest(out_dir, t["new_parts"], pm=pm_all)
         tag_roots.append(t)
     squashed = sorted(tag_roots + [first], key=lambda s: s["id"]) + kept[1:]
+    if _max_field_id(snaps) > _max_field_id(squashed):
+        # the dropped entries named a field id no retained one does (a
+        # dropped column's): keep the high-water mark, so the id is never
+        # handed out again and old parts never alias a new column onto
+        # the dead field's bytes
+        first["last_field_id"] = _max_field_id(snaps)
     body = "".join(
         json.dumps(s, separators=(",", ":")) + "\n" for s in squashed
     ).encode()

@@ -1446,47 +1446,47 @@ def test_upsert_unbounded_keys_join_path(spark, tmp_path):
 
 def test_failed_evolution_append_does_not_widen_schema(spark, tmp_path):
     """A refused append (retyped column) and an interrupted evolved
-    append (commit never reached) both leave _table_meta.json unchanged;
-    the merged meta publishes only at the snapshot commit."""
-    import json as _json
-    import os as _os
-
+    append (commit never reached) both leave the tip schema unchanged;
+    the widened schema state publishes only with the snapshot commit."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from sparkcodec.engine import _commit_snapshot_entry, decode_table, encode_table
+    from sparkcodec.engine import (
+        _commit_snapshot_entry,
+        _resolve_snapshot_meta,
+        decode_table,
+        encode_table,
+    )
 
     out = str(tmp_path / "evo_defer")
     d1 = spark.range(200).select(F.col("id"), (F.col("id") * 2).alias("v"))
     encode_table(spark, d1, out, cluster_by=["id"], salt_by=["v"], num_parts=2,
                  target_part_rows=100, resume=False)
-    meta_path = _os.path.join(out, "_table_meta.json")
-    before = _json.load(open(meta_path))
+    before = _resolve_snapshot_meta(out)[0]
 
-    # refused: retyping v -> string must not touch the meta
+    # refused: retyping v -> string must not touch the schema
     bad = spark.range(200, 250).select(
         F.col("id"), F.concat(F.lit("x"), F.col("id")).alias("v")
     )
     with _pytest.raises(ValueError):
         encode_table(spark, bad, out, cluster_by=["id"], salt_by=["v"], num_parts=1,
                      append=True)
-    assert _json.load(open(meta_path)) == before
+    assert _resolve_snapshot_meta(out)[0] == before
 
     # interrupted: evolved append with commit=False writes parts but NOT
-    # the widened meta; the helper publishes both at commit time
+    # the widened schema; the entry publishes it at commit time
     d2 = spark.range(200, 300).select(
         F.col("id"), (F.col("id") * 2).alias("v"),
         F.concat(F.lit("n"), F.col("id")).alias("note"),
     )
     res = encode_table(spark, d2, out, cluster_by=["id"], salt_by=["v"], num_parts=1,
                        target_part_rows=100, append=True, commit=False)
-    assert _json.load(open(meta_path)) == before  # crash here: no widening
+    assert _resolve_snapshot_meta(out)[0] == before  # crash here: no widening
     assert decode_table(spark, out).columns == ["id", "v"]
     pend = res["pending_commit"]
-    assert pend and pend["evolved_meta"] is not None
-    _commit_snapshot_entry(out, pend["entry"], append=True,
-                           evolved_meta=pend["evolved_meta"])
-    assert _json.load(open(meta_path))["columns"] == ["id", "v", "note"]
+    assert pend and pend["entry"]["columns"] == ["id", "v", "note"]
+    _commit_snapshot_entry(out, pend["entry"], append=True)
+    assert _resolve_snapshot_meta(out)[0]["columns"] == ["id", "v", "note"]
     dec = decode_table(spark, out)
     assert dec.columns == ["id", "v", "note"]
     assert dec.count() == 300
@@ -2272,10 +2272,13 @@ def test_optimize_refuses_non_roundtrip_storage_types(spark, tmp_path):
     df = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("g"))
     encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
                  num_parts=1, resume=False)
-    meta_path = str(tmp_path / "u32t" / "_table_meta.json")
-    meta = _json.load(open(meta_path))
-    meta["schema"]["id"] = "u32"  # simulate an unsigned-stored column
-    _json.dump(meta, open(meta_path, "w"))
+    # simulate an unsigned-stored column in the schema the tip entry
+    # stamps (the schema optimize resolves)
+    log_path = str(tmp_path / "u32t" / "_snapshots.jsonl")
+    entries = [_json.loads(line) for line in open(log_path)]
+    entries[-1]["schema"]["id"] = "u32"
+    with open(log_path, "w") as fh:
+        fh.write("".join(_json.dumps(e) + "\n" for e in entries))
     with _pytest.raises(ValueError, match="round-trip"):
         optimize_table(spark, out, zorder_by=["g"])
 
@@ -3275,6 +3278,33 @@ def test_reservation_floors_exclusive_base(spark, tmp_path):
     assert engine.decode_table(spark, out).count() == 250
 
 
+def test_datasource_append_skips_reserved_part_ids(spark, tmp_path):
+    """``.write.format("sparkcodec")`` takes its first part id above every
+    unexpired reservation, like an exclusive encode_table append: an
+    in-flight optimistic writer's reserved ids have no checkpoints on
+    disk yet, so max(completed) + 1 cannot see them."""
+    from pyspark.sql import functions as F
+
+    from sparkcodec import engine
+    from sparkcodec.datasource import SparkcodecDataSource
+
+    spark.dataSource.register(SparkcodecDataSource)
+    out = str(tmp_path / "resv_ds")
+    df = spark.range(200).select(F.col("id"), (F.col("id") % 3).alias("g"))
+    engine.encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
+                        num_parts=2, target_part_rows=100, resume=False)
+    res = engine.reserve_part_range(out, 4, "encode")
+    reserved = engine.reserved_parts(out)
+    assert reserved == {2, 3, 4, 5}
+    more = spark.range(200, 260).select(F.col("id"), (F.col("id") % 3).alias("g"))
+    more.repartition(2).write.format("sparkcodec").mode("append").save(out)
+    written = set(engine.snapshots(out)[-1]["new_parts"])
+    assert len(written) == 2 and not written & reserved, written
+    assert min(written) >= 6
+    engine.release_part_range(out, res)
+    assert engine.decode_table(spark, out).count() == 260
+
+
 def test_reservation_respects_crashed_pending_append(spark, tmp_path):
     """reserve_part_range must not hand out ids inside a crashed
     exclusive append's planned range (its parts may have no checkpoints
@@ -3551,6 +3581,164 @@ def test_rewrite_keeps_rows_after_evolution(spark, tmp_path, history):
         assert r["rows_deleted"] == 1
         expect = [row for row in before if row[0] != 0]
     assert read() == (["id", "v"], expect)
+
+
+_HISTORIES = [
+    "rollback_readd_append",
+    "rollback_readd_datasource_append",
+    "rollback_readd_optimistic_append",
+    "rollback_readd_upsert",
+    "branch_readd_append",
+    "branch_readd_upsert",
+    "rollback_add_default_append",
+    "rollback_add_then_add",
+    "rollback_drop_then_drop",
+    "rollback_rename_then_rename",
+    "time_travel_default_then_drop",
+    "time_travel_default_then_rename",
+    "rollback_to_default_after_drop",
+]
+
+
+@pytest.mark.parametrize("history", _HISTORIES)
+def test_writers_evolve_the_resolved_schema(spark, tmp_path, history):
+    """Every writer and DDL evolves the schema resolved at the snapshot
+    it commits onto (the tip, or the branch tip), and time travel reads
+    the state recorded at its snapshot: field ids, add_column defaults
+    and column names come from the snapshot log, never from a second
+    copy that a rollback or a branch does not own. The table is 40
+    ``(id, v = 3 * id)`` rows in two parts; appends add ids 40-59 and
+    upserts rewrite id 0."""
+    from pyspark.sql import functions as F
+
+    from sparkcodec.datasource import SparkcodecDataSource
+    from sparkcodec.engine import (
+        add_column,
+        create_branch,
+        drop_column,
+        rename_column,
+        rollback_table,
+        snapshots,
+        upsert_rows,
+    )
+
+    out = str(tmp_path / "t")
+    df = spark.range(40).select(F.col("id"), (F.col("id") * 3).alias("v"))
+    encode_table(spark, df, out, num_parts=2, resume=False)
+    s0 = snapshots(out)[-1]["id"]
+    more = spark.range(40, 60).select(F.col("id"), (F.col("id") * 3).alias("v"))
+
+    def read(**kw):
+        d = decode_table(spark, out, **kw)
+        return d.columns, sorted(tuple(r) for r in d.collect())
+
+    rows40 = [(i, 3 * i) for i in range(40)]
+    rows60 = [(i, 3 * i) for i in range(60)]
+    ref = None
+    if history.startswith("rollback_readd"):
+        drop_column(out, "v")
+        add_column(out, "v", "i64")
+        rollback_table(out, s0)
+        kind = history[len("rollback_readd_"):]
+        if kind == "append":
+            encode_table(spark, more, out, append=True, num_parts=1)
+        elif kind == "datasource_append":
+            spark.dataSource.register(SparkcodecDataSource)
+            more.repartition(2).write.format("sparkcodec").mode(
+                "append").save(out)
+        elif kind == "optimistic_append":
+            encode_table(spark, more, out, append=True, num_parts=1,
+                         concurrency="optimistic")
+        else:
+            upsert_rows(spark, df.where("id = 0"), out, "id", num_parts=1)
+        want = (["id", "v"], rows40 if kind == "upsert" else rows60)
+    elif history.startswith("branch_readd"):
+        ref = "dev"
+        create_branch(out, ref)
+        drop_column(out, "v")
+        add_column(out, "v", "i64")
+        if history.endswith("append"):
+            encode_table(spark, more, out, append=True, num_parts=1, branch=ref)
+            want = (["id", "v"], rows60)
+        else:
+            upsert_rows(spark, df.where("id = 0"), out, "id", num_parts=1,
+                        branch=ref)
+            want = (["id", "v"], rows40)
+    elif history == "rollback_add_default_append":
+        add_column(out, "w", "i64", default=4)
+        rollback_table(out, s0)
+        encode_table(spark, more, out, append=True, num_parts=1)
+        want = (["id", "v"], rows60)
+    elif history == "rollback_add_then_add":
+        add_column(out, "w", "i64")
+        rollback_table(out, s0)
+        add_column(out, "w", "i64")
+        want = (["id", "v", "w"], [(i, v, None) for i, v in rows40])
+    elif history == "rollback_drop_then_drop":
+        drop_column(out, "v")
+        rollback_table(out, s0)
+        drop_column(out, "v")
+        want = (["id"], [(i,) for i in range(40)])
+    elif history == "rollback_rename_then_rename":
+        rename_column(out, "v", "v2")
+        rollback_table(out, s0)
+        rename_column(out, "v", "v3")
+        want = (["id", "v3"], rows40)
+    else:
+        s = add_column(out, "w", "i64", default=7)["snapshot_id"]
+        at_s = (["id", "v", "w"], [(i, v, 7) for i, v in rows40])
+        assert read(snapshot_id=s) == at_s
+        if history == "time_travel_default_then_rename":
+            rename_column(out, "w", "w2")
+        else:
+            drop_column(out, "w")
+        assert read(snapshot_id=s) == at_s  # history is not rewritten
+        if history == "rollback_to_default_after_drop":
+            rollback_table(out, s)
+            want = at_s
+        elif history == "time_travel_default_then_rename":
+            want = (["id", "v", "w2"], at_s[1])
+        else:
+            want = (["id", "v"], rows40)
+    assert read(ref=ref) == want
+
+
+@pytest.mark.parametrize("then", ["rollback", "expire"])
+def test_field_ids_only_grow(spark, tmp_path, then):
+    """A field id is never reused: after a column is added, written and
+    dropped, a rollback to before the add or an expire that squashes
+    every entry naming the dropped id still leaves the next added column
+    a FRESH id, so parts holding the dropped field's bytes read the new
+    column as NULL, never as the dead field's values."""
+    from pyspark.sql import functions as F
+
+    from sparkcodec.engine import (
+        add_column,
+        drop_column,
+        expire_snapshots,
+        rollback_table,
+        snapshots,
+    )
+
+    out = str(tmp_path / "t")
+    df = spark.range(40).select(F.col("id"), (F.col("id") * 3).alias("v"))
+    encode_table(spark, df, out, num_parts=2, resume=False)
+    s0 = snapshots(out)[-1]["id"]
+    wide = spark.range(40, 60).select(
+        F.col("id"), (F.col("id") * 3).alias("v"), (F.col("id") + 100).alias("w")
+    )
+    encode_table(spark, wide, out, append=True, num_parts=1)
+    w_id = snapshots(out)[-1]["field_ids"]["w"]
+    drop_column(out, "w")
+    if then == "rollback":
+        rollback_table(out, s0)
+    else:
+        expire_snapshots(out, keep_last=1)
+    add_column(out, "x", "i64")
+    assert snapshots(out)[-1]["field_ids"]["x"] > w_id
+    d = decode_table(spark, out)
+    assert d.count() == (40 if then == "rollback" else 60)
+    assert d.where("x IS NOT NULL").count() == 0
 
 
 def test_compaction_runs_one_rewrite_task_per_slot(spark, tmp_path):
