@@ -536,32 +536,13 @@ def _release_writer_lock(out_dir: str, owner: str | None) -> None:
 
 def _with_writer_lock(op: str):
     """Decorator enforcing the single-writer contract on a mutating
-    table operation (the function must take ``out_dir``)."""
-    import functools
-    import inspect
+    table operation (the function must take ``out_dir``).
 
-    def deco(fn):
-        sig = inspect.signature(fn)
-
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            out_dir = sig.bind_partial(*args, **kwargs).arguments["out_dir"]
-            tok = _acquire_writer_lock(out_dir, op)
-            try:
-                return fn(*args, **kwargs)
-            finally:
-                _release_writer_lock(out_dir, tok)
-
-        return wrapper
-
-    return deco
-
-
-def _with_concurrency(op: str):
-    """Decorator for mutating ops that support BOTH concurrency modes:
+    Ops with a ``concurrency`` parameter (encode, compact) support both
+    modes; every other op always takes the lease:
 
     - ``concurrency="exclusive"`` (default): hold the single-writer
-      lease for the whole operation — every prior round's behavior.
+      lease for the whole operation.
     - ``concurrency="optimistic"``: run the heavy work (encode /
       rewrite) WITHOUT the table lock — the Iceberg optimistic-commit
       shape. Disjointness of the written files is guaranteed up front by
@@ -580,7 +561,8 @@ def _with_concurrency(op: str):
 
         @functools.wraps(fn)
         def wrapper(*args, **kwargs):
-            mode = kwargs.get("concurrency", "exclusive")
+            bound = sig.bind_partial(*args, **kwargs).arguments
+            mode = bound.get("concurrency", "exclusive")
             if mode not in ("exclusive", "optimistic"):
                 raise ValueError(
                     f"concurrency must be 'exclusive' or 'optimistic', "
@@ -588,12 +570,11 @@ def _with_concurrency(op: str):
                 )
             if mode == "optimistic":
                 return fn(*args, **kwargs)
-            out_dir = sig.bind_partial(*args, **kwargs).arguments["out_dir"]
-            tok = _acquire_writer_lock(out_dir, op)
+            tok = _acquire_writer_lock(bound["out_dir"], op)
             try:
                 return fn(*args, **kwargs)
             finally:
-                _release_writer_lock(out_dir, tok)
+                _release_writer_lock(bound["out_dir"], tok)
 
         return wrapper
 
@@ -1197,8 +1178,6 @@ def _part_col_stats(arr: pa.Array):
     stays conservative. NaN-bearing float parts get no stats (NaN breaks
     ordering); string bounds are stored only when exact and short.
     """
-    import math
-
     import pyarrow.compute as pc
 
     if len(arr) == 0 or arr.null_count == len(arr):
@@ -1223,11 +1202,13 @@ def _part_col_stats(arr: pa.Array):
         # long-text columns (content) skip the O(chars) string min_max
         if pc.max(pc.binary_length(arr)).as_py() > _STATS_MAX_STR:
             return None
+    if pa.types.is_floating(t) and pc.any(pc.is_nan(arr)).as_py():
+        # min_max skips NaN, yet SQL orders NaN above every number (Spark,
+        # DuckDB): bounds without it would refute ``x >= lo`` wrongly
+        return None
     mm = pc.min_max(arr)
     mn, mx = mm["min"].as_py(), mm["max"].as_py()
     if mn is None or mx is None:
-        return None
-    if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
         return None
     return [mn, mx]
 
@@ -1235,32 +1216,20 @@ def _part_col_stats(arr: pa.Array):
 _VSET_MAX = 64  # exact value sets recorded only for low-cardinality parts
 
 
-def _part_col_vset(arr: pa.Array):
-    """Sorted distinct distinct values of a low-cardinality column, or None.
-
-    Recorded only when the column already qualifies for zone maps (so
-    values are short, orderable, JSON-safe) AND the part holds at most
-    _VSET_MAX distinct non-null values — the categorical case (lang,
-    status flags) where equality predicates want EXACT membership:
-    a part whose [min, max] spans the probe value may still not contain
-    it, and the value set proves that."""
-    import pyarrow.compute as pc
-
-    # cheap gate: a 4k-row head already exceeding the cap means the
-    # column is not categorical — skip the full O(n) unique pass
-    if len(pc.unique(arr.slice(0, 4096).drop_null())) > _VSET_MAX:
-        return None
-    vals = pc.unique(arr.drop_null())
-    if len(vals) > _VSET_MAX:
-        return None
-    return sorted(vals.to_pylist())
-
-
 def _part_col_value_index(arr: pa.Array):
     """One distinct-values pass yielding (vset, bloom) for a part column
-    — at most one of the two is non-None. Folds the separate
-    ``_part_col_vset`` + ``_part_col_bloom`` calls the encode kernel used
-    to make (each re-ran its own head-gate and full unique pass)."""
+    — at most one of the two is non-None.
+
+    - vset: the sorted distinct non-null values of a low-cardinality
+      column (at most _VSET_MAX; the categorical case — lang, status
+      flags — where a part whose [min, max] spans a probe may still not
+      hold it, and the exact set proves that).
+    - bloom: {"kinds": [...], "b64": z} over the distinct values of a
+      MID-cardinality column (above _VSET_MAX, at most
+      _BLOOM_MAX_DISTINCT), for point lookups where spans are wide.
+
+    A 4k-row head that is (near-)unique skips the full unique pass:
+    neither index would help there."""
     import pyarrow.compute as pc
 
     head = pc.unique(arr.slice(0, 4096).drop_null())
@@ -1318,27 +1287,6 @@ def _bloom_positions(v):
     ]
 
 
-def _part_col_bloom(arr: pa.Array):
-    """Bloom filter over a part's distinct values for MID-cardinality
-    columns (above the exact value-set cap, below _BLOOM_MAX_DISTINCT) —
-    the point-lookup pruner for columns where [min, max] spans are wide
-    and value sets would be too big. Returns {"kinds": [...], "b64": z}
-    or None. High-cardinality columns are skipped via the same head
-    gate as value sets (a full-unique pass there buys nothing)."""
-    import base64
-    import zlib
-
-    import pyarrow.compute as pc
-
-    head = pc.unique(arr.slice(0, 4096).drop_null())
-    if len(head) >= 4096:
-        return None  # (near-)unique column: bloom would saturate
-    vals = pc.unique(arr.drop_null())
-    if not (_VSET_MAX < len(vals) <= _BLOOM_MAX_DISTINCT):
-        return None  # small cards use the exact value set instead
-    return _bloom_of_values(vals.to_pylist())
-
-
 def _bloom_of_values(values: list):
     import base64
     import hashlib
@@ -1369,29 +1317,13 @@ def prune_parts_bloom(
     probe value misses its bloom. Probes whose kind the bloom never saw
     keep the part (cross-type equality goes through Spark casts the
     bloom can't model); parts without a bloom are kept."""
-    import base64
-    import zlib
-
     if blooms is None:
         blooms = {p: d["bloom"] for p, d in part_meta(out_dir).items()}
-    probes = [(_bloom_key(v)[0], _bloom_positions(v)) for v in values]
-    keep = []
-    for p in parts:
-        rec = (blooms.get(p) or {}).get(col)
-        if rec is not None:
-            kinds = set(rec["kinds"])
-            if all(k in kinds for k, _ in probes):
-                bits = np.frombuffer(
-                    zlib.decompress(base64.b64decode(rec["b64"])), dtype=np.uint8
-                )
-                hit = any(
-                    all(bits[pos >> 3] & (1 << (pos & 7)) for pos in poss)
-                    for _, poss in probes
-                )
-                if not hit:
-                    continue
-        keep.append(p)
-    return keep
+    refuted = _refutes((col, tuple(values)))
+    return [
+        p for p in parts
+        if not refuted({"bloom": (blooms.get(p) or {}).get(col)})
+    ]
 
 
 MANIFESTDIR = "_manifests"
@@ -1578,33 +1510,14 @@ def prune_parts_eq(
 ) -> list[int]:
     """Exact-membership part pruning for equality/IN predicates: keep a
     part only if its recorded value set intersects ``values``; parts
-    without a value set for the column are kept (conservative)."""
+    without a value set for the column, and probes of a kind the set
+    does not hold, are kept (conservative)."""
     if vstats is None:
         vstats = part_vsets(out_dir)
-    probe = set(values)
-
-    def _kind(x):
-        # bool before int (bool is an int subclass); int/float unify so
-        # probe 3 matches stored 3.0 the same way set equality does
-        if isinstance(x, bool):
-            return "bool"
-        if isinstance(x, (int, float)):
-            return "num"
-        return type(x).__name__
-
-    probe_kinds = {_kind(v) for v in probe}
-    keep = []
-    for p in parts:
-        vs = vstats.get(p, {}).get(col)
-        if vs is not None:
-            # a type-mismatched probe (e.g. string "3" against an int
-            # value set) must KEEP the part — set intersection would just
-            # come back empty and silently prune matching data, unlike
-            # the range path where the comparison raises TypeError
-            if probe_kinds <= {_kind(x) for x in vs} and not probe & set(vs):
-                continue
-        keep.append(p)
-    return keep
+    refuted = _refutes((col, tuple(values)))
+    return [
+        p for p in parts if not refuted({"vset": vstats.get(p, {}).get(col)})
+    ]
 
 
 def part_stats(out_dir: str, meta: dict | None = None) -> dict[int, dict]:
@@ -1623,21 +1536,12 @@ def prune_parts(
     conservative, exactly like parquet row-group pruning; rows inside
     kept parts are NOT filtered, so compose with ``df.filter`` for exact
     results."""
-    col, lo, hi = where
     if stats is None:
         stats = part_stats(out_dir)
-    keep = []
-    for p in parts:
-        st = stats.get(p, {}).get(col)
-        if st is not None:
-            mn, mx = st
-            try:
-                if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                    continue
-            except TypeError:
-                pass  # bound/stat type mismatch: keep (conservative)
-        keep.append(p)
-    return keep
+    refuted = _refutes(tuple(where))
+    return [
+        p for p in parts if not refuted({"mm": stats.get(p, {}).get(where[0])})
+    ]
 
 
 def part_null_stats(out_dir: str, meta: dict | None = None) -> dict[int, dict]:
@@ -1656,61 +1560,153 @@ def _null_kind(w: tuple) -> str | None:
     return w[1] if len(w) == 2 and isinstance(w[1], str) else None
 
 
-def _prune_parts_conj(
-    out_dir: str, wheres: list[tuple], parts: list[int], pm: dict,
-    ghosts: dict[int, frozenset] | None = None,
-) -> list[int]:
-    """Part pruning for one CONJUNCTION of normalized predicates through
-    every dimension: zone-map span for ranges; span + exact value-set +
-    bloom membership for point and IN-list predicates; null counts for
-    null tests.
+def _value_kind(x) -> str:
+    # bool before int (bool is an int subclass); int/float unify so
+    # probe 3 matches stored 3.0 the same way set equality does
+    if isinstance(x, bool):
+        return "bool"
+    if isinstance(x, (int, float)):
+        return "num"
+    return type(x).__name__
 
-    ``ghosts`` ({part_id: ghosted columns}) names columns a part stores
-    under a RETIRED field id: they read all-NULL there, so only IS NULL
-    can match and the dead field's stats judge nothing — such a part is
-    kept by an IS NULL test on the column and dropped by any other."""
-    for w in wheres:
-        gh = {p for p in parts if w[0] in (ghosts or {}).get(p, ())}
-        if gh:
-            kept = set(_prune_parts_conj(
-                out_dir, [w], [p for p in parts if p not in gh], pm
-            ))
-            if _null_kind(w) == "isnull":
-                kept |= gh
-            parts = [p for p in parts if p in kept]
-            continue
-        if _null_kind(w):
-            parts = prune_parts_nulls(
-                out_dir, w[0], w[1], parts, part_null_stats(out_dir, pm)
-            )
-            continue
-        if len(w) == 2:
-            # IN-list: zone-map span + exact value-set + bloom membership
-            # (prune_parts_eq/_bloom already take lists)
-            col, vals = w
+
+_NAN = object()
+
+
+def _eq_key(v):
+    """Equality key under SQL semantics: NaN equals NaN (Spark, DuckDB,
+    Arrow's ``is_in``), unlike Python floats."""
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _refutes(w: tuple):
+    """The one pruning test: ``_refutes(w)(zone)`` is True only when the
+    zone provably holds no row matching the normalized predicate ``w``.
+
+    A *zone* is what pruning knows about one column over a run of rows —
+    a part (:func:`_part_zone`) or a block (:func:`_block_zones`): ``n``
+    rows, ``nc`` nulls, ``mm`` = [min, max] of the non-null values,
+    ``vset`` = the exact distinct values, ``bloom``. Any may be absent
+    (unknown), which never refutes. The rules:
+
+    - IS [NOT] NULL is decided from ``nc`` and ``n``;
+    - an all-NULL zone refutes every other predicate (NULL matches no
+      range and no IN-list);
+    - a range is refuted when it misses [min, max];
+    - a point or IN predicate is refuted when no probe lies in
+      [min, max], when the value set holds no probe, or when the bloom
+      misses every probe.
+
+    Comparisons that raise TypeError, value sets holding other kinds
+    than the probes, and blooms that never saw a probe's kind keep the
+    zone. Probe sets and bloom hashes are computed once per predicate,
+    not per zone."""
+    import base64
+    import zlib
+
+    kind = _null_kind(w)
+    probes = None
+    if len(w) == 3:
+        _, lo, hi = w
+        if lo is not None and lo == hi:
+            probes = [lo]  # a point: exact membership can refute parts
+            # whose [min, max] merely spans the value
+    elif not kind:
+        probes = list(w[1])
+    if probes is not None:
+        keys = {_eq_key(v) for v in probes}
+        kinds = {_value_kind(v) for v in probes}
+    positions = None  # bloom probes, hashed at the first bloom met
+
+    def refuted(z: dict) -> bool:
+        nonlocal positions
+        n, nc = z.get("n"), z.get("nc")
+        if kind == "isnull":
+            return bool(n) and nc == 0
+        if n and nc == n:
+            return True
+        if kind:
+            return False
+        mm = z.get("mm")
+        if mm is not None:
+            mn, mx = mm
             try:
-                span = (col, min(vals), max(vals))
+                if len(w) == 3:
+                    if (hi is not None and mn > hi) or (lo is not None and mx < lo):
+                        return True
+                elif not any(mn <= v <= mx for v in probes):
+                    return True
             except TypeError:
-                span = None  # mixed-type values: no orderable span
-            if span is not None:
-                parts = prune_parts(out_dir, span, parts, stats=part_stats(out_dir, pm))
-            probes = list(vals)
-        elif w[1] is not None and w[1] == w[2]:
-            parts = prune_parts(out_dir, w, parts, stats=part_stats(out_dir, pm))
-            probes = [w[1]]  # point predicate: exact membership can
-            # refute parts whose [min, max] range merely spans the value
-        else:
-            parts = prune_parts(out_dir, w, parts, stats=part_stats(out_dir, pm))
-            probes = None
-        if probes is not None:
-            parts = prune_parts_eq(
-                out_dir, w[0], probes, parts, part_vsets(out_dir, pm)
+                pass  # bound/stat type mismatch: keep (conservative)
+        if probes is None:
+            return False
+        vs = z.get("vset")
+        # a probe of another kind (string "3" against an int value set)
+        # keeps the zone: membership would just come back empty
+        if vs is not None and kinds <= {_value_kind(x) for x in vs}:
+            if not any(_eq_key(x) in keys for x in vs):
+                return True
+        bl = z.get("bloom")
+        if bl is not None and positions is None:
+            positions = [(_bloom_key(v)[0], _bloom_positions(v)) for v in probes]
+        if bl is not None and all(k in bl["kinds"] for k, _ in positions):
+            bits = np.frombuffer(
+                zlib.decompress(base64.b64decode(bl["b64"])), dtype=np.uint8
             )
-            parts = prune_parts_bloom(
-                out_dir, w[0], probes, parts,
-                {p: d["bloom"] for p, d in pm.items()},
-            )
-    return parts
+            if not any(
+                all(bits[pos >> 3] & (1 << (pos & 7)) for pos in poss)
+                for _, poss in positions
+            ):
+                return True
+        return False
+
+    return refuted
+
+
+# A column the part does not hold (added after it was written, or stored
+# under a retired field id) reads NULL in every row: one all-NULL zone
+# over the whole part, kept or refuted whole, so its size decides nothing.
+_ALL_NULL = {"n": 1, "nc": 1}
+
+
+def _part_zone(d: dict | None, col: str, remap: tuple | None = None) -> dict:
+    """The zone of ``col`` in one part, from its :func:`part_meta`
+    record ``d`` (None: no metadata, nothing known). ``remap`` is the
+    part's ``(ghosts, aliases)`` (:func:`_column_remap`): the column is
+    looked up under the part's storage name, and a ghost, or a name the
+    part's null accounting does not list, is the all-NULL zone."""
+    if d is None:
+        return {}
+    ghosts, aliases = remap or (frozenset(), {})
+    c = aliases.get(col, col)
+    if col in ghosts or (d["nulls"] and c not in d["nulls"]):
+        return _ALL_NULL
+    return {
+        "n": d["n_rows"],
+        "nc": d["nulls"].get(c),
+        "mm": d["stats"].get(c),
+        "vset": d["vset"].get(c),
+        "bloom": d["bloom"].get(c),
+    }
+
+
+def _prune_parts_conj(
+    wheres: list[tuple], parts: list[int], pm: dict, remap: dict | None = None,
+) -> list[int]:
+    """Part pruning for one CONJUNCTION of normalized predicates: keep
+    the parts whose zone no predicate refutes (:func:`_refutes`). ``pm``
+    is :func:`part_meta` over ``parts``; ``remap`` ({part_id: (ghosts,
+    aliases)}, :func:`_column_remap`) resolves each predicate column to
+    the part's storage name, or to the all-NULL zone."""
+    tests = [(w[0], _refutes(w)) for w in wheres]
+    remap = remap or {}
+    return [
+        p for p in parts
+        if not any(
+            refuted(_part_zone(pm.get(p), col, remap.get(p)))
+            for col, refuted in tests
+        )
+    ]
 
 
 def prune_parts_nulls(
@@ -1724,47 +1720,14 @@ def prune_parts_nulls(
         raise ValueError(f"kind must be 'isnull' or 'notnull', got {kind!r}")
     if nstats is None:
         nstats = part_null_stats(out_dir)
-    keep = []
-    for p in parts:
-        st = nstats.get(p)
-        if st is not None and col in st["nulls"]:
-            nc, n = st["nulls"][col], st["n_rows"]
-            if kind == "notnull" and n > 0 and nc == n:
-                continue  # every row null: IS NOT NULL matches nothing
-            if kind == "isnull" and nc == 0 and n > 0:
-                continue  # no nulls at all: IS NULL matches nothing
-        keep.append(p)
-    return keep
+    refuted = _refutes((col, kind))
 
+    def zone(st):
+        if st is None or col not in st["nulls"]:
+            return {}
+        return {"n": st["n_rows"], "nc": st["nulls"][col]}
 
-def _keep_row_ranges_nulls(out_dir: str, pid: int, col: str, kind: str):
-    """Block-level twin of :func:`prune_parts_nulls`: row ranges of one
-    part whose blocks can satisfy the null predicate, from the per-block
-    ``nc`` meta (payloads never read). None = nothing pruned. A column
-    missing for this part (pre-evolution) is all-NULL: IS NOT NULL prunes
-    the whole part, IS NULL keeps it all."""
-    path = _part_file(out_dir, col, pid)
-    if not _exists(path):
-        return [] if kind == "notnull" else None
-    t = _pq_read(path, columns=["block_id", "n_rows", "meta"]).sort_by("block_id")
-    ranges: list[list[int]] = []
-    off = 0
-    pruned_any = False
-    for b in range(t.num_rows):
-        n = t.column("n_rows")[b].as_py()
-        nc = json.loads(t.column("meta")[b].as_py()).get("nc")
-        keep = True
-        if nc is not None and n:
-            if (kind == "notnull" and nc == n) or (kind == "isnull" and nc == 0):
-                keep = False
-                pruned_any = True
-        if keep and n:
-            if ranges and ranges[-1][1] == off:
-                ranges[-1][1] = off + n
-            else:
-                ranges.append([off, off + n])
-        off += n
-    return ranges if pruned_any else None
+    return [p for p in parts if not refuted(zone(nstats.get(p)))]
 
 
 # commits between automatic full-coverage manifests (the metadata-read
@@ -1975,7 +1938,7 @@ def completed_parts(out_dir: str) -> set[int]:
     return out
 
 
-@_with_concurrency("encode")
+@_with_writer_lock("encode")
 def encode_table(
     spark: SparkSession,
     df: DataFrame,
@@ -3003,39 +2966,66 @@ def _prunable_dnf(wheres_any, defaults):
     return out
 
 
+def _block_zones(out_dir: str, pid: int, col: str) -> list[dict] | None:
+    """The zone of each block of one stored column of a part, in block
+    order, from the blocks' meta JSON and row counts (payloads are never
+    read): ``{"n", "nc", "mm"}``. None when the part has no block file
+    for the column."""
+    path = _part_file(out_dir, col, pid)
+    if not _exists(path):
+        return None
+    t = _pq_read(path, columns=["block_id", "n_rows", "meta"]).sort_by("block_id")
+    out = []
+    for n, meta in zip(t.column("n_rows").to_pylist(), t.column("meta").to_pylist()):
+        m = json.loads(meta)
+        out.append({"n": n, "nc": m.get("nc"), "mm": m.get("mm")})
+    return out
+
+
 def _keep_row_ranges_multi(
     out_dir: str, pid: int, wheres: list[tuple], aliases: dict | None = None,
-    ghosts: frozenset = frozenset(),
+    ghosts: frozenset = frozenset(), zones: dict | None = None,
 ):
-    """Block-level row ranges of one part surviving ALL predicates
-    (conjunction): per-column ranges intersect. None = nothing pruned.
-    ``aliases`` resolve predicate columns a rename moved to their
-    storage names in this part — WITHOUT it a predicate on a renamed
-    column would find no block file and wrongly prune every row.
-    ``ghosts`` read all-NULL here whatever their dead blocks say: IS NULL
-    keeps every row, any other test none (see _prune_parts_conj)."""
-    ranges = None
-    pruned = False
+    """Row ranges of one part whose blocks no predicate of the
+    conjunction refutes (:func:`_refutes`), merged and sorted; None =
+    nothing pruned. Each predicate column's block zones are read once
+    (``zones`` caches them across calls for one part), under the part's
+    storage name: ``aliases`` map a renamed column to it. A ghost, or a
+    column without a block file, is one all-NULL zone over the part."""
     al = aliases or {}
-    for w in wheres:
-        kind = _null_kind(w)
-        if w[0] in ghosts:
-            if kind == "isnull":
-                continue
-            return []
-        c = al.get(w[0], w[0])
-        if kind:
-            r = _keep_row_ranges_nulls(out_dir, pid, c, kind)
-        elif len(w) == 2:
-            r = _keep_row_ranges_in(out_dir, pid, c, w[1])
+    zones = {} if zones is None else zones
+    ranges = None
+    for col in dict.fromkeys(w[0] for w in wheres):
+        tests = [_refutes(w) for w in wheres if w[0] == col]
+        if col in ghosts:
+            blocks = None
         else:
-            r = _keep_row_ranges(out_dir, pid, (c,) + tuple(w[1:]))
-        if r is not None:
-            pruned = True
-            ranges = r if ranges is None else _intersect_ranges(ranges, r)
+            c = al.get(col, col)
+            if c not in zones:
+                zones[c] = _block_zones(out_dir, pid, c)
+            blocks = zones[c]
+        if blocks is None:
+            if any(t(_ALL_NULL) for t in tests):
+                return []
+            continue
+        kept: list[list[int]] = []
+        off = 0
+        cut = False
+        for z in blocks:
+            n = z["n"]
+            if any(t(z) for t in tests):
+                cut = True
+            elif n:
+                if kept and kept[-1][1] == off:
+                    kept[-1][1] = off + n
+                else:
+                    kept.append([off, off + n])
+            off += n
+        if cut:
+            ranges = kept if ranges is None else _intersect_ranges(ranges, kept)
             if not ranges:
                 return []
-    return ranges if pruned else None
+    return ranges
 
 
 def _keep_row_ranges_dnf(
@@ -3047,95 +3037,21 @@ def _keep_row_ranges_dnf(
     UNION (a row matching any disjunct must be read), the result
     intersects the conjunctive side. None = nothing pruned. ``aliases``
     and ``ghosts`` resolve field ids (see _keep_row_ranges_multi)."""
+    zones: dict = {}
     ranges = (
-        _keep_row_ranges_multi(out_dir, pid, wheres, aliases, ghosts)
+        _keep_row_ranges_multi(out_dir, pid, wheres, aliases, ghosts, zones)
         if wheres else None
     )
     if wheres_any:
         u = None
-        unpruned = False
         for conj in wheres_any:
-            r = _keep_row_ranges_multi(out_dir, pid, conj, aliases, ghosts)
+            r = _keep_row_ranges_multi(out_dir, pid, conj, aliases, ghosts, zones)
             if r is None:
-                unpruned = True  # this disjunct keeps everything
-                break
+                break  # this disjunct keeps everything
             u = r if u is None else _union_ranges(u, r)
-        if not unpruned:
+        else:
             ranges = u if ranges is None else _intersect_ranges(ranges, u)
     return ranges
-
-
-def _keep_row_ranges_in(out_dir: str, pid: int, col: str, values):
-    """IN-list twin of :func:`_keep_row_ranges`: a block survives when at
-    least one probe value falls inside its [min, max] zone map (exact
-    membership isn't knowable at block level — conservative, like every
-    pruning dimension). A column missing for this part (pre-evolution) is
-    all-NULL and NULL never matches IN."""
-    path = _part_file(out_dir, col, pid)
-    if not _exists(path):
-        return []
-    t = _pq_read(path, columns=["block_id", "n_rows", "meta"]).sort_by("block_id")
-    ranges: list[list[int]] = []
-    off = 0
-    pruned_any = False
-    for b in range(t.num_rows):
-        n = t.column("n_rows")[b].as_py()
-        mm = json.loads(t.column("meta")[b].as_py()).get("mm")
-        keep = True
-        if mm is not None:
-            mn, mx = mm
-            try:
-                if not any(mn <= v <= mx for v in values):
-                    keep = False
-                    pruned_any = True
-            except TypeError:
-                pass  # probe/stat type mismatch: keep (conservative)
-        if keep and n:
-            if ranges and ranges[-1][1] == off:
-                ranges[-1][1] = off + n
-            else:
-                ranges.append([off, off + n])
-        off += n
-    return ranges if pruned_any else None
-
-
-def _keep_row_ranges(out_dir: str, pid: int, where: tuple):
-    """Row ranges of one part that survive block-level zone-map pruning.
-
-    Reads ONLY the predicate column's block metadata (meta JSON + row
-    counts — payloads of excluded blocks are never decoded), maps each
-    qualifying block to its row span within the part, and merges adjacent
-    spans. Blocks without a zone map qualify (conservative). Returns None
-    when nothing can be pruned (decode everything); a column missing for
-    this part (pre-evolution) is all-NULL, and NULL never matches a range
-    predicate — every block is prunable."""
-    col, lo, hi = where
-    path = _part_file(out_dir, col, pid)
-    if not _exists(path):
-        return []  # schema-evolved column: all NULL, range matches nothing
-    t = _pq_read(path, columns=["block_id", "n_rows", "meta"]).sort_by("block_id")
-    ranges: list[list[int]] = []
-    off = 0
-    pruned_any = False
-    for b in range(t.num_rows):
-        n = t.column("n_rows")[b].as_py()
-        mm = json.loads(t.column("meta")[b].as_py()).get("mm")
-        keep = True
-        if mm is not None:
-            mn, mx = mm
-            try:
-                if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                    keep = False
-                    pruned_any = True
-            except TypeError:
-                pass  # bound/stat type mismatch: keep (conservative, like prune_parts)
-        if keep and n:
-            if ranges and ranges[-1][1] == off:
-                ranges[-1][1] = off + n
-            else:
-                ranges.append([off, off + n])
-        off += n
-    return ranges if pruned_any else None
 
 
 # per-process I/O accounting for the pruned-decode path (tests assert that
@@ -3421,11 +3337,16 @@ def _plan_read(
       the pruning sets. Their pre-add parts carry no stats and no block
       file yet READ as the default, so every pruning structure would
       misjudge them.
-    - Part pruning per conjunction and DNF disjunct, through zone maps,
-      value sets, blooms and null counts, with field-id resolution
-      (ghosts and aliases, after a drop_column / rename_column) computed
-      first: a ghosted column only matches IS NULL.
-    - Block ranges and decoding happen per part in
+    - Field-id resolution (ghosts and aliases, after a drop_column /
+      rename_column) is computed next, for the decoded and the predicate
+      columns.
+    - Part pruning per conjunction and DNF disjunct, by the zone rule
+      (:func:`_refutes`): a part is dropped when some predicate refutes
+      its zone — the part's null count, [min, max], value set and bloom
+      for the column, looked up under the part's storage name; a ghost
+      or a column the part does not hold is all-NULL.
+    - Block ranges (the same rule over each block's zone,
+      :func:`_keep_row_ranges_dnf`) and decoding happen per part in
       :meth:`_ReadPlan.batches`; :meth:`_ReadPlan.tasks` splits the plan.
 
     ``wheres`` / ``wheres_any`` are normalized predicates
@@ -3479,14 +3400,13 @@ def _plan_read(
             out_dir, [*columns, *sorted(pred_cols - set(columns))], parts,
             fids, snaps=snaps, pm=pm,
         )
-    ghosts = {p: gh for p, (gh, _al) in remap.items()}
     if wheres:
-        parts = _prune_parts_conj(out_dir, wheres, parts, pm, ghosts)
+        parts = _prune_parts_conj(wheres, parts, pm, remap)
     if wheres_any:
         # DNF: a part survives if ANY disjunct keeps it
         keep: set = set()
         for conj in wheres_any:
-            keep |= set(_prune_parts_conj(out_dir, conj, parts, pm, ghosts))
+            keep |= set(_prune_parts_conj(conj, parts, pm, remap))
         parts = [p for p in parts if p in keep]
     return _ReadPlan(
         out_dir=out_dir,
@@ -3848,7 +3768,7 @@ def _rewrite_parts(
     return _rewrite_summary(plan, groups, rows)
 
 
-@_with_concurrency("compact")
+@_with_writer_lock("compact")
 def compact_table(
     spark: SparkSession,
     out_dir: str,
@@ -4100,9 +4020,7 @@ def optimize_table(
                 f"optimize where references unknown columns {bad_cols}; "
                 f"table has {state['columns']}"
             )
-        affected = _prune_parts_conj(
-            out_dir, wheres, live, part_meta(out_dir, parts=live)
-        )
+        affected = _plan_read(out_dir, parts=live, wheres=wheres).parts
         if not affected:
             return {"parts_removed": 0, "parts_created": 0, "n_rows": 0}
     # legacy (pre-snapshot-log) tables: root the log BEFORE rewrite parts
@@ -4280,10 +4198,9 @@ def delete_rows(
     predicate or a list of them (a conjunction). Forms: ``(col, lo,
     hi)`` — range, either bound None for half-open — and ``(col, [v1,
     v2, ...])`` — IN-list membership. A row is deleted when it matches
-    EVERY predicate; NULL never matches (SQL semantics). Pruning runs
-    through every dimension before any task is scheduled — zone-map
-    spans for ranges, spans + exact value sets + bloom filters for
-    IN-lists — so parts refuted by any predicate are untouched;
+    EVERY predicate; NULL never matches (SQL semantics). The parts to
+    rewrite are the read plan's (:func:`_plan_read`, the zone rule of
+    :func:`_refutes`), so parts refuted by any predicate are untouched;
     surviving (or stat-less) parts are decoded, filtered exactly, and
     re-encoded under new part ids in one Spark job. A rewritten part
     that turns out unchanged keeps its original id (no write). Earlier
@@ -4306,8 +4223,9 @@ def delete_rows(
             )
     if not live:
         return {"parts_scanned": 0, "parts_rewritten": 0, "rows_deleted": 0}
-    pm = part_meta(out_dir, parts=live)
-    affected = _prune_parts_conj(out_dir, wheres, live, pm)
+    affected = _plan_read(
+        out_dir, snapshot_id=meta["snapshot_id"], parts=live, wheres=wheres
+    ).parts
     if not affected:
         return {"parts_scanned": 0, "parts_rewritten": 0, "rows_deleted": 0}
 
@@ -4436,13 +4354,13 @@ def upsert_rows(
     replace existing rows with the same ``key_col`` value; new keys
     append. Copy-on-write like :func:`delete_rows`:
 
-    1. zone maps bound the delete side — only live parts whose
-       ``key_col`` [min, max] overlaps the incoming key span are
-       scanned (one tiny min/max aggregation over the batch);
+    1. the zone rule (:func:`_refutes`) bounds the delete side — only
+       live parts whose ``key_col`` zone the incoming key span does not
+       refute are scanned (one tiny min/max aggregation over the batch);
     2. affected parts are rewritten without the incoming keys, exact
        set membership: at most ``broadcast_keys`` distinct keys ride a
-       driver broadcast into the mask (plus value-set/bloom part
-       refutation); above that the mask becomes a distributed
+       driver broadcast into the mask (after an IN-list of them prunes
+       the parts again); above that the mask becomes a distributed
        key-column join (:func:`_rewrite_parts_dropping_matched_keys`)
        and the keys never visit the driver — no key-count ceiling;
        unchanged parts keep their ids with no write. Either way the
@@ -4491,11 +4409,22 @@ def _upsert_rows_inner(
         span = df.agg(
             F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
         ).first()
-        affected = (
-            prune_parts(out_dir, (key_col, span["lo"], span["hi"]), live)
-            if span["lo"] is not None and live
-            else []
-        )
+        affected = []
+        if span["lo"] is not None and live:
+            # the read planner's rule at the resolved snapshot: storage
+            # names and ghosts from the field ids, no pruning on defaults
+            pm = part_meta(out_dir, parts=live)
+            remap = (
+                _column_remap(out_dir, [key_col], live, meta["field_ids"], pm=pm)
+                if meta["snapshot_id"] is not None else {}
+            )
+
+            def prune(w, parts):
+                return _prune_parts_conj(
+                    _prunable_preds([w], meta["defaults"]), parts, pm, remap
+                )
+
+            affected = prune((key_col, span["lo"], span["hi"]), live)
         if affected:
             # legacy tables root the log BEFORE any rewrite lands, so the
             # rewrites stay invisible until the combined entry commits
@@ -4507,14 +4436,7 @@ def _upsert_rows_inner(
             if len(head) <= broadcast_keys:
                 keys = sorted(r[0] for r in head)
                 # exact membership can refute parts the range merely spans
-                pm = part_meta(out_dir, parts=affected)
-                affected = prune_parts_eq(
-                    out_dir, key_col, keys, affected, part_vsets(out_dir, pm)
-                )
-                affected = prune_parts_bloom(
-                    out_dir, key_col, keys, affected,
-                    {p: d["bloom"] for p, d in pm.items()},
-                )
+                affected = prune((key_col, tuple(keys)), affected)
             if affected and len(head) <= broadcast_keys and keys:
                 key_bc = spark.sparkContext.broadcast(keys)
 

@@ -249,38 +249,6 @@ def register_filesystem(scheme: str, fs: FileSystem) -> None:
     _REGISTRY[scheme] = fs
 
 
-def _auto_register_fsspec() -> None:
-    """Executor-side bootstrap: the driver's :func:`sparkcodec.
-    fsspec_adapter.register_fsspec` records each scheme in
-    ``$SPARKCODEC_FSSPEC_SCHEMES`` (plus per-scheme storage options in
-    ``$SPARKCODEC_FSSPEC_OPTIONS``, JSON); Python workers (fresh
-    processes that re-import this module) re-register them here, so
-    ``_get_fs`` inside encode/decode kernels resolves the same schemes
-    — and the same endpoint/options — as the driver. The vars reach
-    workers via ``spark.executorEnv`` (sparkcodec.session sets this for
-    any value present at session creation; foreign builders set it
-    themselves), so register BEFORE building the session. Credentials
-    ride the backend's own default chain (instance profile, env), not
-    this channel."""
-    import json as _json
-
-    opts = _json.loads(os.environ.get("SPARKCODEC_FSSPEC_OPTIONS", "{}"))
-    for scheme in filter(
-        None, os.environ.get("SPARKCODEC_FSSPEC_SCHEMES", "").split(",")
-    ):
-        if scheme in _REGISTRY:
-            continue
-        try:
-            from .fsspec_adapter import register_fsspec
-
-            register_fsspec(scheme, **opts.get(scheme, {}))
-        except ImportError:
-            pass  # fsspec absent here: such paths raise at first use
-
-
-_auto_register_fsspec()
-
-
 def get_fs(path: str) -> FileSystem:
     """FileSystem for ``path``: plain paths -> LocalFS; ``scheme://`` ->
     the registered implementation (raises on unknown schemes, replacing

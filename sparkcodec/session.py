@@ -70,11 +70,6 @@ def get_spark(
     )
     for k, v in _MALLOC_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
-    # fsspec scheme registrations made before session creation reach
-    # Python workers (fs._auto_register_fsspec reads these on import)
-    for k in ("SPARKCODEC_FSSPEC_SCHEMES", "SPARKCODEC_FSSPEC_OPTIONS"):
-        if os.environ.get(k):
-            builder = builder.config(f"spark.executorEnv.{k}", os.environ[k])
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

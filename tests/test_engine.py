@@ -987,7 +987,7 @@ def test_block_pruning_skips_bytes_not_just_decode(spark, tmp_path):
     from sparkcodec.engine import (
         _IO_COUNTERS,
         _decode_column_ranges,
-        _keep_row_ranges,
+        _keep_row_ranges_multi,
         _reset_io_counters,
         completed_parts,
         decode_table,
@@ -1004,7 +1004,7 @@ def test_block_pruning_skips_bytes_not_just_decode(spark, tmp_path):
                  num_parts=1, resume=False, block_rows=256)
     [pid] = completed_parts(out)
     where = ("id", 1000, 1100)
-    ranges = _keep_row_ranges(out, pid, where)
+    ranges = _keep_row_ranges_multi(out, pid, [where])
     assert ranges, "expected some blocks pruned, some kept"
     _reset_io_counters()
     import pyarrow as _pa
@@ -1031,7 +1031,6 @@ def test_multi_predicate_where_intersects_and_reads_fewer_bytes(spark, tmp_path)
     from sparkcodec.engine import (
         _IO_COUNTERS,
         _decode_column_ranges,
-        _keep_row_ranges,
         _keep_row_ranges_multi,
         _reset_io_counters,
         completed_parts,
@@ -1050,8 +1049,8 @@ def test_multi_predicate_where_intersects_and_reads_fewer_bytes(spark, tmp_path)
     [pid] = completed_parts(out)
     wa = ("a", 1000, 2000)   # rows 1000..2000
     wb = ("b", 1500, 2500)   # rows 1499..2499
-    ra = _keep_row_ranges(out, pid, wa)
-    rb = _keep_row_ranges(out, pid, wb)
+    ra = _keep_row_ranges_multi(out, pid, [wa])
+    rb = _keep_row_ranges_multi(out, pid, [wb])
     rab = _keep_row_ranges_multi(out, pid, [wa, wb])
     cov = lambda rs: sum(hi - lo for lo, hi in rs)  # noqa: E731
     assert ra and rb and rab
@@ -2351,7 +2350,7 @@ def test_in_list_where_prunes_parts_and_blocks(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkcodec.engine import (
-        _keep_row_ranges_in,
+        _keep_row_ranges_multi,
         completed_parts,
         decode_table,
         encode_table,
@@ -2386,7 +2385,7 @@ def test_in_list_where_prunes_parts_and_blocks(spark, tmp_path):
                  cluster_by=None, salt_by=["id"], sort_by=["id"],
                  num_parts=1, resume=False, block_rows=256)
     [pid] = completed_parts(out2)
-    ranges = _keep_row_ranges_in(out2, pid, "id", [100, 3900])
+    ranges = _keep_row_ranges_multi(out2, pid, [("id", (100, 3900))])
     assert ranges is not None
     covered = sum(hi - lo for lo, hi in ranges)
     assert covered <= 512, (ranges, covered)  # two blocks of 256
@@ -2754,33 +2753,6 @@ def test_prune_parts_eq_type_mismatch_keeps(spark, tmp_path):
     assert prune_parts_eq(out, "g", ["3"], parts) == parts  # mismatched: keep
     assert prune_parts_eq(out, "g", [3], parts) == parts    # present: keep
     assert prune_parts_eq(out, "g", [9], parts) == []       # absent: prune
-
-
-def test_fsspec_adapter_memory_backend():
-    """FsspecFS primitives through fsspec's memory:// backend (skipped
-    where fsspec is absent). Driver-side only — memory:// is per-process
-    so Spark kernels can't see it; the cross-process seam behavior is
-    covered by mock:// above. Exercises put/read/exclusive-create/
-    claim/list plus the per-entry snapshot log and its squash."""
-    import pytest as _pytest
-
-    _pytest.importorskip("fsspec")
-    from sparkcodec.engine import SNAPDIR, _snapshot_log_append, snapshots
-    from sparkcodec.fsspec_adapter import register_fsspec
-
-    adapter = register_fsspec("memory")
-    out = "memory://sparkcodec_t"
-    assert adapter.put_atomic(f"{out}/a.bin", b"xy") == 2
-    with adapter.open_read(f"{out}/a.bin") as fh:
-        assert fh.read() == b"xy"
-    assert adapter.create_exclusive(f"{out}/_writer.lock", b"lease")
-    assert not adapter.create_exclusive(f"{out}/_writer.lock", b"other")
-    assert adapter.claim_stale(f"{out}/_writer.lock")
-    assert not adapter.claim_stale(f"{out}/_writer.lock")
-    _snapshot_log_append(out, {"id": 1, "parent": 0, "new_parts": [0]})
-    _snapshot_log_append(out, {"id": 2, "parent": 1, "new_parts": [1]})
-    assert [s["id"] for s in snapshots(out)] == [1, 2]
-    assert len(adapter.listdir(f"{out}/{SNAPDIR}")) == 2
 
 
 def test_unreadable_lock_treated_fresh_not_stolen(spark, tmp_path):

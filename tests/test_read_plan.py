@@ -25,6 +25,7 @@ from sparkcodec.datasource import (
     SparkcodecStreamReader,
 )
 from sparkcodec.engine import (
+    _keep_row_ranges_multi,
     _normalize_where,
     _plan_read,
     add_column,
@@ -198,3 +199,79 @@ def test_changefeed_where_on_defaulted_column(spark, tmp_path):
     out = _defaulted(spark, tmp_path)
     got = _feed(spark, out, tmp_path, "feed", [("score", 7, 7)])
     assert got.where("id < 200 AND score = 7").count() == 200
+
+
+def _sorted_append(spark, out, span, v, first=False, block_rows=25):
+    """One part holding ``span``'s ids in id order, with ``v``."""
+    encode_table(
+        spark, spark.range(*span).select(F.col("id"), v.alias("v")), out,
+        cluster_by=None, salt_by=["id"], sort_by=["id"], num_parts=1,
+        block_rows=block_rows, resume=not first, append=not first,
+    )
+
+
+def test_all_null_zones_are_refuted(spark, tmp_path):
+    """NULL matches no range: a part whose v is all NULL is dropped, and
+    so are the all-NULL blocks of a kept part (ids 100-149 here)."""
+    out = str(tmp_path / "t")
+    null = F.lit(None).cast("long")
+    _sorted_append(spark, out, _SPANS[0], null, first=True)
+    _sorted_append(spark, out, _SPANS[1],
+                   F.when(F.col("id") < 150, null).otherwise(F.col("id")))
+    for span in _SPANS[2:]:
+        _sorted_append(spark, out, span, F.col("id"))
+    parts = _plan_read(out).parts
+    w = ("v", 0, 1000)
+    assert _plan_read(out, wheres=[w]).parts == parts[1:]
+    assert _keep_row_ranges_multi(out, parts[1], [w]) == [[50, 100]]
+    got = decode_table(spark, out, where=w).where("v BETWEEN 0 AND 1000")
+    assert sorted(r["id"] for r in got.collect()) == list(range(150, 400))
+
+
+def test_in_list_tests_each_value_against_part_bounds(spark, tmp_path):
+    """A part is kept when its [min, max] holds one of the IN values,
+    not whenever it overlaps [min(values), max(values)]. Each part holds
+    4096 distinct ids, too many for a value set or a bloom, so only the
+    bounds decide here."""
+    out = str(tmp_path / "t")
+    n = 4096
+    for k in range(4):
+        _sorted_append(spark, out, (k * n, (k + 1) * n), F.col("id"),
+                       first=k == 0, block_rows=1024)
+    parts = _plan_read(out).parts
+    w = ("v", (5, 4 * n - 5))
+    assert _plan_read(out, wheres=[w]).parts == [parts[0], parts[3]]
+    got = decode_table(spark, out, where=w).where(f"v IN (5, {4 * n - 5})")
+    assert sorted(r["v"] for r in got.collect()) == [5, 4 * n - 5]
+
+
+def test_renamed_column_prunes_old_parts_by_stored_stats(spark, tmp_path):
+    """Parts written before rename_column("x", "v") keep their block
+    files and statistics under x; a predicate on v judges them by those."""
+    out = str(tmp_path / "t")
+    model = _build(spark, out, "alias")
+    parts = _plan_read(out).parts
+    w = ("v", 0, 50)
+    assert _plan_read(out, wheres=[w]).parts == parts[:1]
+    want = sorted((i, v) for i, v in model.items() if v is not None and v <= 50)
+    assert _rows(decode_table(spark, out, where=w), "v BETWEEN 0 AND 50") == want
+
+
+def test_decode_job_reports_the_planned_parts(spark, tmp_path, monkeypatch, capsys):
+    """decode_job's parts_kept is the read plan's. After drop_column +
+    add_column every part holds v under a retired field id, so a range
+    on v keeps no part."""
+    from jobs.decode_job import main
+
+    out = str(tmp_path / "t")
+    _build(spark, out, "plain")
+    drop_column(out, "v")
+    add_column(out, "v", "i64")
+    monkeypatch.setattr(
+        "sys.argv", ["decode_job.py", "--input", out, "--where", "v:100:399"]
+    )
+    assert main() == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    kept = _plan_read(out, wheres=[("v", 100, 399)]).parts
+    assert (rep["parts_total"], rep["parts_kept"], rep["rows"]) == (4, len(kept), 0)
+    assert kept == []

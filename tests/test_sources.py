@@ -1,5 +1,5 @@
-"""Tests for the binary record source (S1-S3 parity), multimodal
-plumbing, and streaming operators."""
+"""Tests for the binary record source (S1-S3 parity) and streaming
+operators."""
 
 from __future__ import annotations
 
@@ -132,148 +132,6 @@ def test_synapse_id_on_records(spark, record_dir):
     row = out.filter(F.col("synapse_id") % (1 << 24) == 0).count()
     n_gids = df.select("pre_gid").distinct().count()
     assert row == n_gids  # exactly one seq-0 row per gid
-
-
-# ---------------------------------------------------------------------------
-# multimodal
-
-
-def test_multimodal_features(spark):
-    from sparkcodec.multimodal import extract_features, synth_media_df
-
-    media = synth_media_df(spark, 60)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 60
-    for r in rows:
-        expect = r["width"] * r["height"] * r["channels"] * r["n_frames"]
-        assert r["payload_bytes"] == expect + 16  # header is 16 bytes
-    kinds = {r["kind"] for r in rows}
-    assert kinds == {"img", "aud", "vid"}
-
-
-def test_multimodal_frame_sampling(spark):
-    from sparkcodec.multimodal import extract_features, sample_frames, synth_media_df
-
-    media = synth_media_df(spark, 60)
-    before = {r["media_id"]: r["n_frames"] for r in extract_features(media).collect()}
-    sampled = sample_frames(media, every_k=2)
-    after = {r["media_id"]: r["n_frames"] for r in extract_features(sampled).collect()}
-    for mid, nf in before.items():
-        assert after[mid] == (nf + 1) // 2 if nf > 1 else 1
-
-
-def test_multimodal_resize(spark):
-    """Numpy nearest-neighbor resize: dimensions change, channel/frame
-    counts survive, values come from the source grid, non-images pass
-    through byte-identical."""
-    from sparkcodec.multimodal import (
-        HDR_SIZE,
-        decode_header,
-        extract_features,
-        resize_images,
-        synth_media_df,
-    )
-
-    media = synth_media_df(spark, 30)
-    before = {r["media_id"]: (r["kind"], bytes(r["payload"])) for r in media.collect()}
-    out = resize_images(media, 8, 6)
-    feats = {r["media_id"]: r for r in extract_features(out).collect()}
-    for r in out.collect():
-        kind, orig = before[r["media_id"]]
-        got = bytes(r["payload"])
-        if kind == "aud":
-            assert got == orig
-            continue
-        f = feats[r["media_id"]]
-        assert (f["width"], f["height"]) == (8, 6)
-        h0 = decode_header(orig)
-        assert f["channels"] == h0["channels"] and f["n_frames"] == h0["n_frames"]
-        # upper-left pixel of each frame is preserved by nearest-neighbor
-        fb_new = 8 * 6 * h0["channels"]
-        fb_old = h0["width"] * h0["height"] * h0["channels"]
-        for fr in range(h0["n_frames"]):
-            assert (
-                got[HDR_SIZE + fr * fb_new : HDR_SIZE + fr * fb_new + h0["channels"]]
-                == orig[HDR_SIZE + fr * fb_old : HDR_SIZE + fr * fb_old + h0["channels"]]
-            )
-
-
-def test_real_decode_dispatch():
-    """Magic sniffing: PNG needs Pillow (clear error without it), unknown
-    magic names the decodable formats, WAV decodes via stdlib wave."""
-    from sparkcodec.multimodal import decode_header
-
-    try:
-        import PIL  # noqa: F401
-
-        has_pillow = True
-    except ImportError:
-        has_pillow = False
-    if not has_pillow:
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_header(b"\x89PNG\r\n\x1a\n" + b"\x00" * 24)
-    with pytest.raises(NotImplementedError, match="unrecognized media magic"):
-        decode_header(b"XXXX" + b"\x00" * 24)
-
-
-def test_real_wav_decode_stdlib(spark):
-    """A REAL media format decodes end-to-end: WAV payloads (stdlib
-    `wave`) flow through the same extract_features kernel as the FAKM
-    fixture — proving the Spark plumbing is format-agnostic."""
-    import io
-    import wave
-
-    import pandas as pd
-
-    from sparkcodec.multimodal import (
-        MEDIA_SPARK_SCHEMA,
-        decode_header,
-        extract_features,
-        synth_media_df,
-    )
-
-    def make_wav(n_frames: int, rate: int, channels: int) -> bytes:
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(channels)
-            w.setsampwidth(2)
-            w.setframerate(rate)
-            w.writeframes(b"\x01\x02" * channels * n_frames)
-        return buf.getvalue()
-
-    h = decode_header(make_wav(100, 16000, 2))
-    assert h == {"kind": "aud", "channels": 2, "width": 16000,
-                 "height": 2, "n_frames": 100}
-    wavs = spark.createDataFrame(
-        pd.DataFrame(
-            [(1000 + i, "aud", make_wav(50 + i, 8000, 1)) for i in range(5)],
-            columns=["media_id", "kind", "payload"],
-        ),
-        schema=MEDIA_SPARK_SCHEMA,
-    )
-    mixed = synth_media_df(spark, 10).unionByName(wavs)
-    feats = {r["media_id"]: r for r in extract_features(mixed).collect()}
-    assert len(feats) == 15
-    for i in range(5):
-        r = feats[1000 + i]
-        assert (r["kind"], r["n_frames"], r["width"]) == ("aud", 50 + i, 8000)
-
-
-def test_real_png_decode_with_pillow(spark):
-    """Runs only where Pillow is installed (skip-marked otherwise): PNG
-    payloads decode through the same pipeline."""
-    PIL = pytest.importorskip("PIL")  # noqa: F841
-    import io
-
-    from PIL import Image
-
-    from sparkcodec.multimodal import decode_header
-
-    buf = io.BytesIO()
-    Image.new("RGB", (12, 7)).save(buf, format="PNG")
-    h = decode_header(buf.getvalue())
-    assert (h["kind"], h["width"], h["height"], h["channels"]) == ("img", 12, 7, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -786,13 +644,13 @@ def test_bloom_key_signed_zero():
     import numpy as np
     import pyarrow as pa
 
-    from sparkcodec.engine import _bloom_key, _part_col_bloom, prune_parts_bloom
+    from sparkcodec.engine import _bloom_key, _part_col_value_index, prune_parts_bloom
 
     assert _bloom_key(-0.0) == _bloom_key(0.0)
     assert _bloom_key(0.0) != _bloom_key(0)  # kinds stay distinct
     # bloom built over a mid-cardinality float column containing -0.0
     vals = np.concatenate([[-0.0], np.arange(1, 200, dtype=np.float64)])
-    rec = _part_col_bloom(pa.array(np.tile(vals, 30)))
+    rec = _part_col_value_index(pa.array(np.tile(vals, 30)))[1]
     assert rec is not None and rec["kinds"] == ["f"]
     blooms = {0: {"x": rec}}
     assert prune_parts_bloom(".", "x", [0.0], [0], blooms) == [0]  # kept
