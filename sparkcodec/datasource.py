@@ -379,9 +379,9 @@ class SparkcodecWriter(DataSourceArrowWriter):
     and the driver commits one snapshot only after every task's parts
     are durable. Clustering/salting/skew-fanout need a job-level
     exchange a per-task writer cannot express — use
-    ``engine.encode_table`` for those. Single writer at a time (part
-    ids are assigned from a driver-side base, above every optimistic
-    writer's reserved range)."""
+    ``engine.encode_table`` for those. The single-writer lease is held
+    from planning to commit, so part ids come from one driver-side base
+    and the entry commits under the lease like every other write."""
 
     def __init__(self, options, schema, overwrite):
         if overwrite:
@@ -399,13 +399,12 @@ class SparkcodecWriter(DataSourceArrowWriter):
         from .codecs import type_name
         from .engine import (
             _acquire_writer_lock,
-            _base_above_reservations,
             _exists,
             _j,
             _new_table_state,
+            _next_part_base,
             _release_writer_lock,
             _resolve_snapshot_meta,
-            completed_parts,
             evolve_schema,
         )
 
@@ -427,10 +426,7 @@ class SparkcodecWriter(DataSourceArrowWriter):
                     _resolve_snapshot_meta(self.out_dir)[0],
                     self.type_names, self.columns,
                 )
-            existing = completed_parts(self.out_dir)
-            self.base = _base_above_reservations(
-                self.out_dir, (max(existing) + 1) if existing else 0
-            )
+            self.base = _next_part_base(self.out_dir)
         except BaseException:
             _release_writer_lock(self.out_dir, self._lock_owner)
             raise
@@ -459,8 +455,6 @@ class SparkcodecWriter(DataSourceArrowWriter):
             _exists,
             _j,
             _release_writer_lock,
-            legacy_root_parts,
-            snapshots,
         )
 
         try:
@@ -482,10 +476,6 @@ class SparkcodecWriter(DataSourceArrowWriter):
                     "next_field_id": self.state["next_field_id"],
                     "engine_version": "0.1.0",
                 })
-            if not snapshots(self.out_dir):
-                # pre-snapshot table (parts exist but no log): this entry
-                # becomes the root snapshot (shared engine rule)
-                parts = legacy_root_parts(self.out_dir, parts, self.base)
             _commit_snapshot_entry(
                 self.out_dir,
                 _append_entry(

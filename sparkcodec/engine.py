@@ -348,12 +348,12 @@ def _snapshot_log_append(out_dir: str, entry: dict) -> None:
     (POSIX-atomic, zero overhead — every prior round's behavior).
 
     Object stores (non-native FS): stores have no atomic append, and
-    read-modify-PUT of a whole log is O(n^2) bytes and loses entries to
-    any concurrent writer the lock misses. Instead each entry is its own
-    object ``_snapshots.d/<seq>.json`` published with a CONDITIONAL PUT
-    (If-None-Match — ``fs.create_exclusive``): a sequence collision
-    (crashed retry's leftover, racing writer) just advances seq and
-    re-PUTs, the Iceberg optimistic-commit shape. Every log object —
+    read-modify-PUT of a whole log is O(n^2) bytes and can tear on a
+    crash. Instead each entry is its own object
+    ``_snapshots.d/<seq>.json`` published with a CONDITIONAL PUT
+    (If-None-Match — ``fs.create_exclusive``): a sequence collision (a
+    crashed commit's leftover, a stale lease's former holder) just
+    advances seq and re-PUTs. Every log object —
     entry or squash — claims the SAME name for a given seq, so exactly
     one writer wins each seq: squash-ness rides INSIDE the object (a
     ``{"_squash": 1}`` sentinel first line) rather than in a different
@@ -536,274 +536,27 @@ def _release_writer_lock(out_dir: str, owner: str | None) -> None:
 
 def _with_writer_lock(op: str):
     """Decorator enforcing the single-writer contract on a mutating
-    table operation (the function must take ``out_dir``).
-
-    Ops with a ``concurrency`` parameter (encode, compact) support both
-    modes; every other op always takes the lease:
-
-    - ``concurrency="exclusive"`` (default): hold the single-writer
-      lease for the whole operation.
-    - ``concurrency="optimistic"``: run the heavy work (encode /
-      rewrite) WITHOUT the table lock — the Iceberg optimistic-commit
-      shape. Disjointness of the written files is guaranteed up front by
-      a part-id range reservation (:func:`reserve_part_range`), and the
-      snapshot publish happens inside a SHORT validated critical
-      section (:func:`_acquire_writer_lock_blocking`) that re-resolves
-      the tip and refuses on a real conflict. Non-conflicting writers
-      (append ∥ append, append ∥ compaction) therefore ALL commit and
-      the log linearizes; conflicting pairs still refuse loudly.
-    """
+    table operation (the function must take ``out_dir``): the lease is
+    held for the whole operation, so every commit of the table runs
+    under it."""
     import functools
     import inspect
 
     def deco(fn):
-        sig = inspect.signature(fn)
+        pos = list(inspect.signature(fn).parameters).index("out_dir")
 
         @functools.wraps(fn)
         def wrapper(*args, **kwargs):
-            bound = sig.bind_partial(*args, **kwargs).arguments
-            mode = bound.get("concurrency", "exclusive")
-            if mode not in ("exclusive", "optimistic"):
-                raise ValueError(
-                    f"concurrency must be 'exclusive' or 'optimistic', "
-                    f"got {mode!r}"
-                )
-            if mode == "optimistic":
-                return fn(*args, **kwargs)
-            tok = _acquire_writer_lock(bound["out_dir"], op)
+            out_dir = kwargs["out_dir"] if "out_dir" in kwargs else args[pos]
+            tok = _acquire_writer_lock(out_dir, op)
             try:
                 return fn(*args, **kwargs)
             finally:
-                _release_writer_lock(bound["out_dir"], tok)
+                _release_writer_lock(out_dir, tok)
 
         return wrapper
 
     return deco
-
-
-_LOCK_EXTEND_SLACK = 10.0  # takeover/release headroom past the holder's lease
-
-
-def _acquire_writer_lock_blocking(
-    out_dir: str,
-    op: str,
-    timeout: float = 120.0,
-    lease_sec: float = 300.0,
-) -> str:
-    """Take the writer lease, waiting out short-lived holders (other
-    committers' critical sections, a running exclusive op) with jittered
-    exponential backoff instead of failing on first contention — the
-    commit half of the optimistic protocol. The deadline self-extends
-    to outlast the CURRENT holder's lease (its lock body records ts +
-    lease_sec): an optimistic append whose encode already finished must
-    not strand its work as orphans merely because an exclusive op holds
-    a 300s (or caller-raised) lease longer than a fixed 120s wait.
-    Raises :class:`ConcurrentWriterError` only once the deadline passes
-    with the holder's lease already expired-or-unknown."""
-    import random
-
-    deadline = time.time() + timeout
-    delay = 0.05
-    extended = False
-    key = _j(out_dir, "_writer.lock")
-    fs = _get_fs(out_dir)
-    while True:
-        try:
-            tok = _acquire_writer_lock(out_dir, op, lease_sec=lease_sec)
-            # a None token means the CALLING thread already holds the
-            # lease (reentrant) — valid here too: release is a no-op
-            return tok
-        except ConcurrentWriterError:
-            # peek at the holder: wait at least until ITS lease expires
-            # (+slack for its release/our takeover), however long it is.
-            # Extend AT MOST ONCE — for the holder observed when we
-            # started waiting: re-extending for every successive holder
-            # would make the wait unbounded under continuous writer
-            # turnover and the timeout parameter meaningless.
-            if not extended:
-                try:
-                    cur = json.loads(fs.read_bytes(key))
-                    expiry = cur.get("ts", 0) + cur.get("lease_sec", lease_sec)
-                    new_deadline = max(deadline, expiry + _LOCK_EXTEND_SLACK)
-                    if new_deadline > deadline:
-                        deadline = new_deadline
-                        extended = True
-                except Exception:
-                    pass  # no/unreadable lock: keep the current deadline
-            if time.time() >= deadline:
-                raise
-            time.sleep(delay * (0.5 + random.random()))
-            delay = min(delay * 2, 1.0)
-
-
-# ---------------------------------------------------------------------------
-# part-id range reservations (optimistic writers)
-#
-# An optimistic writer encodes WITHOUT the table lock, so two of them (or
-# one plus an exclusive writer that computes base = max(completed)+1 under
-# the lock) must never write the same blocks/<col>/part_<id>.parquet. The
-# reservation is a tiny conditional-PUT object `_reservations/<base>.json`
-# claiming the half-open id range [base, base+n): exactly one claimant
-# wins a given base (fs.create_exclusive — O_EXCL locally, If-None-Match
-# on object stores), the loser re-lists and claims past the winner's end.
-# The file also shields the range's in-flight part files from
-# vacuum_orphans/expire_snapshots until the reservation is released at
-# commit or its lease expires (crashed writer — same trade as the writer
-# lease: a >lease_sec encode must pass a bigger lease_sec).
-
-RESERVDIR = "_reservations"
-
-
-def _reservations(out_dir: str, *, prune_expired: bool = True) -> list[dict]:
-    """Unexpired reservations of ``out_dir``, base-ordered. Expired ones
-    are deleted best-effort (their orphan parts become vacuumable);
-    unreadable bodies are kept and treated as live (conservative — the
-    FS publishes bodies atomically, so this is a transient at worst)."""
-    fs = _get_fs(out_dir)
-    d = _j(out_dir, RESERVDIR)
-    now = time.time()
-    out = []
-    for name in fs.listdir(d):
-        if not name.endswith(".json"):
-            continue
-        path = _j(d, name)
-        try:
-            r = json.loads(fs.read_bytes(path))
-        except FileNotFoundError:
-            continue  # released between list and read
-        except Exception:
-            # unreadable body (transient store hiccup): the range's true
-            # extent is unknowable, so protect GENEROUSLY — an n=1 guess
-            # would let vacuum/expire reclaim the rest of an in-flight
-            # writer's files and hand its ids to a second writer. The
-            # next healthy read restores the real n; a permanently
-            # unreadable record heals at lease expiry.
-            stem = name[: -len(".json")]
-            r = {"base": int(stem) if stem.isdigit() else 0, "n": 1 << 20,
-                 "ts": now, "lease_sec": _LOCK_LEASE_SEC}
-        if now - r.get("ts", now) > r.get("lease_sec", _LOCK_LEASE_SEC):
-            if prune_expired:
-                try:
-                    fs.remove(path)
-                except FileNotFoundError:
-                    pass
-            continue
-        out.append(r)
-    return sorted(out, key=lambda r: r["base"])
-
-
-def reserved_parts(out_dir: str) -> set[int]:
-    """Part ids inside unexpired reservations — in-flight optimistic
-    writers' ranges, which vacuum/expire must not reclaim."""
-    out: set[int] = set()
-    for r in _reservations(out_dir):
-        out.update(range(r["base"], r["base"] + r["n"]))
-    return out
-
-
-def reserve_part_range(
-    out_dir: str, n: int, op: str, lease_sec: float = _LOCK_LEASE_SEC
-) -> dict:
-    """Claim the next free part-id range [base, base+n) via conditional
-    PUT; returns the reservation record. See the section comment.
-
-    The claim itself runs under a BRIEF writer-lease acquisition: an
-    exclusive append computes its base = max(completed)+1 while holding
-    that lease for its whole run, so a reservation taken lock-free could
-    land on the same base the in-flight exclusive run already planned
-    (its parts have no checkpoints yet — invisible to the floor scan)
-    and two writers would write the same part files. Holding the lease
-    for the floor-scan + conditional-PUT linearizes reservations against
-    exclusive planning; optimistic writers still overlap each other (the
-    lease is held only for this tiny step). A ``_pending_append.json``
-    seen here therefore belongs to a CRASHED exclusive append (a live
-    one would be holding the lease): its planned id range is respected
-    when its part count is recorded, else the reservation refuses and
-    points at the resume/vacuum remedies."""
-    fs = _get_fs(out_dir)
-    fs.makedirs(_j(out_dir, RESERVDIR))
-    tok = _acquire_writer_lock_blocking(out_dir, f"reserve-{op}")
-    try:
-        pend_floor = 0
-        pend_path = _j(out_dir, "_pending_append.json")
-        if fs.exists(pend_path):
-            pend = _read_json(pend_path)
-            pn = (pend.get("config") or {}).get("num_parts")
-            if isinstance(pn, int) and pn > 0:
-                pend_floor = pend["base"] + pn
-            else:
-                raise ConcurrentWriterError(
-                    f"cannot reserve a part-id range at {out_dir}: a "
-                    f"crashed exclusive append left _pending_append.json "
-                    f"with an unbounded part count (base "
-                    f"{pend.get('base')}); resume that append, or abandon "
-                    f"it with vacuum_orphans(include_pending=True), before "
-                    f"optimistic writes"
-                )
-        for _ in range(64):
-            floor = pend_floor
-            done = completed_parts(out_dir)
-            if done:
-                floor = max(floor, max(done) + 1)
-            for s in snapshots(out_dir):
-                np_ = s.get("new_parts") or []
-                if np_:
-                    floor = max(floor, max(np_) + 1)
-            for r in _reservations(out_dir):
-                floor = max(floor, r["base"] + r["n"])
-            res = {
-                "base": floor,
-                "n": int(n),
-                "owner": uuid.uuid4().hex,
-                "op": op,
-                "pid": os.getpid(),
-                "ts": time.time(),
-                "lease_sec": lease_sec,
-            }
-            if fs.create_exclusive(
-                _j(out_dir, RESERVDIR, f"{floor:010d}.json"),
-                json.dumps(res, separators=(",", ":")).encode(),
-            ):
-                return res
-            # lost the race for this base: re-list (the winner's
-            # reservation now raises the floor) and claim past it
-    finally:
-        _release_writer_lock(out_dir, tok)
-    raise ConcurrentWriterError(
-        f"could not reserve a part-id range at {out_dir} after 64 attempts "
-        f"(pathological reservation contention)"
-    )
-
-
-def release_part_range(out_dir: str, res: dict | None) -> None:
-    """Drop a reservation — call ONLY after its parts are committed (or
-    were never written): a failed run keeps its reservation so no writer
-    reuses ids that half-written files may occupy; the lease expiry +
-    vacuum reclaim that case."""
-    if not res:
-        return
-    fs = _get_fs(out_dir)
-    try:
-        fs.remove(_j(out_dir, RESERVDIR, f"{res['base']:010d}.json"))
-    except FileNotFoundError:
-        pass
-
-
-def _base_above_reservations(out_dir: str, floor: int) -> int:
-    """Raise an EXCLUSIVE writer's first part id above every unexpired
-    optimistic reservation: the reserved ranges may have no checkpoints
-    on disk yet (their writer is mid-encode, lock-free), so the usual
-    max(completed)+1 floor cannot see them."""
-    for r in _reservations(out_dir, prune_expired=False):
-        floor = max(floor, r["base"] + r["n"])
-    return floor
-
-
-def legacy_root_parts(out_dir: str, parts: list[int], base: int) -> list[int]:
-    """Widen a commit that ROOTS the snapshot log of a pre-snapshot table:
-    the entry must carry the legacy parts below ``base`` too, or
-    snapshot-resolving readers silently drop every pre-existing row."""
-    return sorted(set(parts) | {p for p in completed_parts(out_dir) if p < base})
 
 
 def _encode_one_part(
@@ -1347,8 +1100,8 @@ def _prune_meta_of(meta_json: str, n_rows: int) -> dict:
 
 def _checkpoint_prune_meta(out_dir: str, pid: int) -> dict:
     """One part's pruning metadata straight from its checkpoint file —
-    the per-part fallback for parts no manifest covers (legacy tables,
-    pre-manifest snapshots, uncommitted orphans)."""
+    the per-part fallback for parts no manifest covers (pre-manifest
+    snapshots, uncommitted orphans)."""
     t = _pq_read(
         _part_file(out_dir, CHECKPOINT_COL, pid), columns=["n_rows", "meta"]
     )
@@ -1438,8 +1191,8 @@ def part_meta(
     part ids are never reused across commits, so first-covered wins.
 
     ``parts`` is the id set the caller actually needs (a snapshot's live
-    set, a rewrite's affected set): ids no manifest covers — legacy
-    tables, pre-manifest snapshots, crashed-run orphans — fall back to
+    set, a rewrite's affected set): ids no manifest covers —
+    pre-manifest snapshots, crashed-run orphans — fall back to
     their individual checkpoint files. With ``parts=None`` the fallback
     spans every checkpointed part (the legacy full-scan contract). The
     per-dimension accessors below are views over this — callers applying
@@ -1764,10 +1517,11 @@ def _commit_snapshot_entry(
     branch: str | None = None,
     branch_parent: int | None = None,
 ) -> dict:
-    """Publish a prepared snapshot entry: write the entry's pruning
-    MANIFEST first, then append the entry with id/parent assigned from
-    the current log tip. The single-line log append is the atomic
-    publish point — everything written before it (parts, manifest) is
+    """Publish a prepared snapshot entry — the one commit path: every
+    writer calls it while holding the single-writer lease. Write the
+    entry's pruning MANIFEST first, then append the entry with id/parent
+    assigned from the current log tip. The single-line log append is the
+    atomic publish point — everything written before it (parts, manifest) is
     an invisible orphan until the entry lands, and the schema state the
     entry stamps takes effect with it, so a failed or refused append
     never widens the schema. ``pm`` forwards already-in-hand per-part
@@ -1829,90 +1583,6 @@ def _commit_snapshot_entry(
     return e
 
 
-def _commit_optimistic_append(
-    out_dir: str,
-    entry: dict,
-    meta: dict,
-    pm: dict | None,
-    res: dict | None,
-) -> dict:
-    """The short validated critical section of an optimistic append: take
-    the writer lease (waiting out other committers), re-resolve the
-    schema state AT THE COMMIT POINT — a concurrent writer may have
-    evolved it since this run planned, so the run's ``columns`` /
-    ``schema`` evolve onto the CURRENT tip state (never the stale one
-    this run started from, which would hide a concurrent widen) and the
-    entry stamps the result — publish the entry on the current tip,
-    then release the lease and the part-range reservation. An append
-    adds only its reserved parts, so it never conflicts on data; it
-    refuses only a genuine schema conflict (a retyped shared column,
-    from :func:`evolve_schema`) or re-assigned field ids."""
-    tok = _acquire_writer_lock_blocking(out_dir, "commit")
-    try:
-        evolved = evolve_schema(
-            _resolve_snapshot_meta(out_dir)[0], meta["schema"],
-            meta["columns"], meta.get("field_metadata"),
-        )
-        # the PARTS of this run stamped planning-time field ids into
-        # their checkpoints (and `pm`, about to become the manifest).
-        # If the commit-time evolution assigns any of this run's columns
-        # a DIFFERENT id — two concurrent writers each adding a column
-        # both allocate the same next_field_id — committing would
-        # persist conflicting identities: once a later drop/rename
-        # activates the remap, _column_remap would resolve by the stale
-        # per-part ids and could alias one column's reads onto another's
-        # blocks or falsely ghost it. Refuse loudly; the reservation
-        # keeps the orphan parts protected until vacuum.
-        stale = {
-            c: (meta["field_ids"].get(c), evolved["field_ids"].get(c))
-            for c in meta["columns"]
-            if meta["field_ids"].get(c) != evolved["field_ids"].get(c)
-        }
-        if stale:
-            raise ConcurrentWriterError(
-                "optimistic append refused: a concurrent schema "
-                "change re-assigned field ids this run already "
-                f"stamped into its parts ({stale}); re-run the "
-                "append with the default exclusive concurrency — "
-                "its parts stay protected behind the reservation "
-                "until vacuum reclaims them"
-            )
-        e = _commit_snapshot_entry(
-            out_dir, dict(entry, **_schema_stamp(evolved)), append=True, pm=pm
-        )
-    finally:
-        _release_writer_lock(out_dir, tok)
-    release_part_range(out_dir, res)
-    return e
-
-
-def _ensure_snapshot_root(out_dir: str, live: list[int]) -> None:
-    """Root the snapshot log of a pre-snapshot (legacy) table with its
-    current live set BEFORE any copy-on-write rewrite is written: from
-    that moment readers resolve the log, so rewritten parts stay
-    invisible orphans until their entry commits — without this the
-    completed_parts fallback would show survivor rows twice."""
-    if snapshots(out_dir):
-        return
-    state = _resolve_snapshot_meta(out_dir, snaps=[])[0]
-    root = {
-        "id": 1,
-        "parent": 0,
-        "new_parts": sorted(live),
-        "n_rows": 0,
-        "enc_bytes": 0,
-        "layout": _read_json(_j(out_dir, "_table_meta.json")).get(
-            "layout", "clustered"
-        ),
-        **_schema_stamp(state),
-        # one-time O(live) checkpoint fold: every pruned read of this
-        # legacy table afterwards is O(#manifests)
-        "manifest": write_manifest(out_dir, sorted(live)),
-        "ts": time.time(),
-    }
-    _snapshot_log_append(out_dir, root)
-
-
 def _append_entry(
     state: dict, new_parts: list[int], n_rows: int, enc_bytes: int, layout: str
 ) -> dict:
@@ -1938,6 +1608,20 @@ def completed_parts(out_dir: str) -> set[int]:
     return out
 
 
+def _log_parts(snaps: list[dict]) -> set[int]:
+    """Every part id a snapshot entry of the log names, on any chain."""
+    return {p for s in snaps for p in s.get("new_parts") or ()}
+
+
+def _next_part_base(out_dir: str) -> int:
+    """First id of a writer's new parts (append, rewrite, data-source
+    write): above every checkpointed part and every part the snapshot
+    log names. Writers hold the lease, so no other writer picks ids
+    concurrently."""
+    named = _log_parts(snapshots(out_dir))
+    return max(completed_parts(out_dir) | named, default=-1) + 1
+
+
 @_with_writer_lock("encode")
 def encode_table(
     spark: SparkSession,
@@ -1958,7 +1642,6 @@ def encode_table(
     append: bool = False,
     snapshot_extra: dict | None = None,
     commit: bool = True,
-    concurrency: str = "exclusive",
     branch: str | None = None,
 ) -> dict:
     """Encode ``df`` into a blocks table at ``out_dir``; returns metrics.
@@ -1979,15 +1662,20 @@ def encode_table(
       part ids are deterministic for a fixed file listing and
       maxPartitionBytes.
 
+    A table's rows are those its committed snapshots reach: every run
+    writes its parts first and commits one snapshot entry (id, parent,
+    new part ids, schema state) under the single-writer lease only
+    after every part of the run checkpointed, so readers see either the
+    previous snapshot or the complete new one, never a torn write. An
+    interrupted run leaves orphan parts no snapshot references; a rerun
+    with ``resume=True`` adopts the checkpointed ones and commits.
+
     ``append=True`` adds ``df`` as a NEW SNAPSHOT of an existing table
-    (Iceberg-style): new parts get ids above every existing part, and a
-    snapshot entry (id, parent, new part ids, codec metadata) is
-    committed to ``_snapshots.jsonl`` only after every part of the run
-    checkpointed — readers via ``decode_table`` see either the previous
-    snapshot or the complete new one, never a torn append; an
-    interrupted append leaves orphan parts that no snapshot references.
-    Each successful run (including the first) commits a snapshot, so
-    ``decode_table(snapshot_id=...)`` time-travels. A resumed append
+    (Iceberg-style): new parts get ids above every existing part (an
+    append onto a table with no committed snapshot commits only its own
+    parts). Each successful run (including the first) commits a
+    snapshot, so ``decode_table(snapshot_id=...)`` time-travels. A
+    resumed append
     reuses the interrupted run's part-id base (recorded in
     ``_pending_append.json``) and must present the same partitioning
     config — the same guard the base table applies.
@@ -2012,32 +1700,13 @@ def encode_table(
     ``upsert_rows`` folds an append and a copy-on-write delete into ONE
     atomic snapshot. Until the caller commits, the written parts are
     invisible orphans.
-
-    ``concurrency="optimistic"`` (append-only, clustered/z-order
-    layouts, snapshot-logged tables): the encode runs WITHOUT the
-    single-writer lease — part-file disjointness comes from a part-id
-    range reservation (:func:`reserve_part_range`) instead — and the
-    snapshot publishes inside a short validated critical section
-    (:func:`_commit_optimistic_append`) that re-resolves the tip, so
-    concurrent appends (and an append concurrent with a compaction)
-    ALL commit and the log linearizes; a genuine conflict (retyped
-    shared column) still refuses. The trade vs exclusive mode: a
-    CRASHED optimistic append is not resumable — its orphan parts sit
-    protected behind the reservation lease until vacuum reclaims them.
     """
     _t_enter = time.time()
-    if branch is not None:
-        if not append:
-            raise ValueError(
-                "branch= requires append=True: a branch commit adds a "
-                "snapshot onto an existing table's branch tip"
-            )
-        if concurrency == "optimistic":
-            raise ValueError(
-                "branch commits take the table lock (the ref move and the "
-                "log append publish together); use the default exclusive "
-                "concurrency"
-            )
+    if branch is not None and not append:
+        raise ValueError(
+            "branch= requires append=True: a branch commit adds a "
+            "snapshot onto an existing table's branch tip"
+        )
     cols = df.columns
     zb_shift = 0
     zexpr = None
@@ -2090,49 +1759,8 @@ def encode_table(
     # object-store filesystems (fs.register_filesystem) both work —
     # workers resolve the same registry at decode/encode kernel time
     fs = _get_fs(out_dir)
-    optimistic = concurrency == "optimistic"
-    res = None
-    if optimistic:
-        # the lock-free path needs (a) an existing snapshot-logged table
-        # so the commit composes as a delta on the tip, (b) a layout
-        # whose part count is known up front to reserve, (c) no deferred
-        # commit (that seam belongs to upsert, which is exclusive), and
-        # (d) no crashed-exclusive pending marker whose resume would
-        # overlap our ids
-        if not append:
-            raise ValueError(
-                "concurrency='optimistic' requires append=True — table "
-                "creation and fresh-run resets are inherently exclusive"
-            )
-        if layout == "aligned":
-            raise ValueError(
-                "optimistic appends require the clustered/z-order layouts "
-                "(the aligned layout's part count is only known at scan "
-                "time, so its id range cannot be reserved up front)"
-            )
-        if not commit:
-            raise ValueError(
-                "concurrency='optimistic' cannot defer its commit "
-                "(commit=False): the validated critical section IS the "
-                "commit"
-            )
-        if not fs.exists(_j(out_dir, "_table_meta.json")) or not snapshots(
-            out_dir
-        ):
-            raise ValueError(
-                "optimistic append requires an existing snapshot-logged "
-                "table (first write it with the default exclusive mode)"
-            )
-        if fs.exists(_j(out_dir, "_pending_append.json")):
-            raise ConcurrentWriterError(
-                f"table at {out_dir} has a crashed exclusive append "
-                f"pending resume; finish it (append with resume=True) or "
-                f"reclaim it (vacuum_orphans include_pending=True) before "
-                f"appending optimistically"
-            )
-    # a fresh (resume=False, non-append) run must not leave stale parts
-    # from an earlier run behind: completed_parts() would blend them into
-    # decode output
+    # a fresh (resume=False, non-append) run erases the earlier table:
+    # its parts, manifests, log and refs
     if not resume and not append:
         blocks_dir = _j(out_dir, "blocks")
         mdir = _j(out_dir, MANIFESTDIR)
@@ -2238,15 +1866,7 @@ def encode_table(
             )[0],
             state["schema"], cols, state["field_metadata"],
         )
-        existing = completed_parts(out_dir)
-        if optimistic:
-            # lock-free: disjointness by reservation, not by lock-held
-            # max(completed)+1; no shared pending marker (two optimistic
-            # appends would clobber it), hence no crashed-run resume
-            res = reserve_part_range(out_dir, num_parts, "encode")
-            base = res["base"]
-            done = set()
-        elif resume and fs.exists(pending_path):
+        if resume and fs.exists(pending_path):
             pend = _read_json(pending_path)
             if pend.get("config") != run_config:
                 raise ValueError(
@@ -2266,17 +1886,14 @@ def encode_table(
                 )
             base = pend["base"]
         else:
-            base = _base_above_reservations(
-                out_dir, (max(existing) + 1) if existing else 0
-            )
+            base = _next_part_base(out_dir)
             _atomic_write_json(
                 pending_path,
                 {"base": base, "config": run_config, "branch": branch},
             )
         done = (
-            {p for p in existing if p >= base}
-            if resume and not optimistic
-            else set()
+            {p for p in completed_parts(out_dir) if p >= base}
+            if resume else set()
         )
     else:
         if resume and fs.exists(meta_path):
@@ -2445,17 +2062,18 @@ def encode_table(
     snaps = snapshots(out_dir)
     committed = None
     new_parts = sorted(done | {int(r["part_id"]) for r in rows})
-    # appending to a pre-snapshot table (no _snapshots.jsonl, e.g. written
-    # by an older engine): the entry about to be written becomes the ROOT
-    # snapshot, so it must carry the full live set — the legacy parts below
-    # base included (compact_table applies the same legacy rule)
-    if append and not snaps:
-        new_parts = legacy_root_parts(out_dir, new_parts, base)
-    # append: commit when this run produced or resumed any part (a fully
-    # checkpointed append that crashed before its commit still commits on
-    # resume); create: commit when work happened or no snapshot exists yet
+    if append:
+        # a resumed append whose entry already landed (a crash between
+        # the log append and the pending marker's removal) must not
+        # commit its parts a second time
+        named = _log_parts(snaps)
+        new_parts = [p for p in new_parts if p not in named]
+    # append: commit when this run produced or resumed any uncommitted
+    # part (a fully checkpointed append that crashed before its commit
+    # still commits on resume); create: commit when work happened or no
+    # snapshot exists yet
     entry = None
-    if (rows or done) if append else (rows or not snaps):
+    if new_parts if append else (rows or not snaps):
         entry = _append_entry(
             state, new_parts, sum(r["n_rows"] for r in rows),
             sum(r["enc_bytes"] for r in rows), layout,
@@ -2473,25 +2091,12 @@ def encode_table(
             for r in rows
         }
         if commit:
-            if optimistic:
-                committed = _commit_optimistic_append(
-                    out_dir, entry, state, pm_new, res
-                )
-            else:
-                committed = _commit_snapshot_entry(
-                    out_dir, entry, append=append, pm=pm_new, branch=branch,
-                )
-    elif optimistic:
-        # a no-op optimistic run (empty df) committed nothing: release
-        # the reservation now — nothing was written under it
-        release_part_range(out_dir, res)
-    if not optimistic:
-        # an optimistic run must not remove a pending marker a CONCURRENT
-        # exclusive append may have written mid-flight (its resume relies
-        # on it); exclusive runs own these markers as before
-        for p in (pending_path, _j(out_dir, "_aligned_fingerprint_append")):
-            if fs.exists(p):
-                fs.remove(p)
+            committed = _commit_snapshot_entry(
+                out_dir, entry, append=append, pm=pm_new, branch=branch,
+            )
+    for p in (pending_path, _j(out_dir, "_aligned_fingerprint_append")):
+        if fs.exists(p):
+            fs.remove(p)
     result = {
         "parts_encoded": len(rows),
         "parts_skipped": len(done),
@@ -2619,16 +2224,17 @@ def _tip_entry(snaps: list[dict]) -> dict | None:
 
 def snapshot_parts(
     out_dir: str, snapshot_id: int | None = None, snaps: list[dict] | None = None
-) -> list[int] | None:
+) -> list[int]:
     """Resolve the live part set of a snapshot (default: the main-chain
-    tip) by walking the parent chain; None when the table predates
-    snapshots. Pass ``snaps`` when the log is already in hand."""
+    tip) by walking the parent chain — the only live set: a table with
+    no committed snapshot has none (``[]``), whatever parts sit on disk.
+    Pass ``snaps`` when the log is already in hand."""
     if snaps is None:
         snaps = snapshots(out_dir)
     if not snaps:
         if snapshot_id is not None:
             raise ValueError(f"table at {out_dir} has no snapshot log")
-        return None
+        return []
     by_id = {s["id"]: s for s in snaps}
     sid = snapshot_id if snapshot_id is not None else _tip_entry(snaps)["id"]
     if sid not in by_id:
@@ -3330,7 +2936,7 @@ def _plan_read(
     in this order.
 
     - Part set: the snapshot (tip, ``snapshot_id``, ``as_of`` or
-      ``ref``; pre-snapshot tables read every checkpointed part), or the
+      ``ref``; a table with no committed snapshot reads empty), or the
       explicit ``parts`` — with one snapshot-log read. The read schema is
       the one recorded at the resolved snapshot.
     - Defaults first: predicates on add_column-defaulted columns leave
@@ -3375,11 +2981,9 @@ def _plan_read(
             else f"not in the table schema ({meta['columns']})"
         )
         raise ValueError(f"columns {unknown} {hint}")
-    # snapshot isolation: never read parts of an uncommitted append
+    # snapshot isolation: never read parts of an uncommitted write
     if parts is None:
         parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)
-        if parts is None:
-            parts = completed_parts(out_dir)
     parts = sorted({int(p) for p in parts})
     fids = meta["field_ids"]
     defaults = meta["defaults"]
@@ -3659,14 +3263,6 @@ def watch_encode(out_dir: str, num_parts: int | None = None, interval: float = 1
 # ~8 MB — see BENCH.md)
 
 
-def _next_part_base(out_dir: str, live: list[int]) -> int:
-    """First id of a rewrite's new parts: above every live, completed
-    and reserved part id."""
-    return _base_above_reservations(
-        out_dir, max(max(live), max(completed_parts(out_dir), default=0)) + 1
-    )
-
-
 _REWRITE_DDL = "gi int, new_pid int, n_before long, n_after long, enc_bytes long"
 _REWRITE_SCHEMA = pa.schema([
     ("gi", pa.int32()), ("new_pid", pa.int32()), ("n_before", pa.int64()),
@@ -3773,8 +3369,6 @@ def compact_table(
     spark: SparkSession,
     out_dir: str,
     target_part_rows: int = 262_144,
-    concurrency: str = "exclusive",
-    _pre_commit_hook=None,
 ) -> dict:
     """Merge small live parts into bigger ones as a NEW snapshot.
 
@@ -3788,33 +3382,10 @@ def compact_table(
     codecs from fuller samples). The rewrite resolves the schema and
     field ids at the tip, like readers do, and the entry stamps them: a
     rollback across a schema change compacts under the restored schema.
-
-    ``concurrency="optimistic"``: the rewrite runs WITHOUT the table
-    lock (new-part ids from a range reservation), and the commit is a
-    short validated critical section that re-resolves the tip: if every
-    part this compaction replaces is STILL live there (concurrent
-    appends are — their parts are untouched), it commits on the new
-    tip; if a concurrent commit removed or rewrote any of them (a
-    DELETE, MERGE, another compaction), it raises
-    :class:`ConcurrentWriterError` and the rewritten files stay as
-    vacuumable orphans. ``_pre_commit_hook`` is a test seam invoked
-    just before the critical section (deterministic interleaving).
+    The entry commits under the writer lease the whole call holds.
     """
-    optimistic = concurrency == "optimistic"
     layout = _read_json(_j(out_dir, "_table_meta.json"))
     live = snapshot_parts(out_dir)
-    if live is None:
-        if optimistic:
-            raise ValueError(
-                "optimistic compaction requires a snapshot-logged table "
-                "(rooting a legacy table's log is an exclusive operation)"
-            )
-        live = sorted(completed_parts(out_dir))
-    # legacy (pre-snapshot-log) tables: root the log with the current
-    # live set BEFORE any merged part lands — otherwise readers on the
-    # completed_parts fallback would see originals AND merged copies
-    # (duplicate rows), permanently if the job crashed before the commit
-    _ensure_snapshot_root(out_dir, live)
     rows_of = {p: d["n_rows"] for p, d in part_meta(out_dir, parts=live).items()}
     groups: list[list[int]] = []
     cur: list[int] = []
@@ -3832,91 +3403,34 @@ def compact_table(
     if not groups:
         return {"groups": 0, "parts_removed": 0, "parts_created": 0}
 
-    res = None
-    if optimistic:
-        # lock-free rewrite: new-part ids come from a range reservation,
-        # so neither a concurrent exclusive append (base computed under
-        # the lock) nor another reservation can collide with ours
-        res = reserve_part_range(out_dir, len(groups), "compact")
-        base = res["base"]
-    else:
-        base = _next_part_base(out_dir, live)
     rw = _rewrite_parts(
-        spark, out_dir, groups, base, layout.get("block_rows") or 65536
+        spark, out_dir, groups, _next_part_base(out_dir),
+        layout.get("block_rows") or 65536,
     )
     removed, created = rw["removed_parts"], rw["new_parts"]
 
-    def entry(stamp: dict, survivors: list[int], pm: dict) -> dict:
-        # CONSOLIDATED manifest: cover the full post-compaction live set
-        # (survivors folded from the older manifests + the merged parts
-        # from their fresh checkpoints), so part_meta's newest-first
-        # early exit satisfies any later pruned read from THIS one file —
-        # a 10k-commit table stops paying a 10k-manifest cold-driver read
-        # at its next compaction (the Iceberg rewrite_manifests idiom).
-        return {
-            "new_parts": created,
-            "removed_parts": removed,
-            "n_rows": rw["n_rows"],
-            "enc_bytes": rw["enc_bytes"],
-            "layout": layout.get("layout", "clustered"),
-            **stamp,
-            "compaction": True,
-            "ts": time.time(),
-            "manifest": write_manifest(out_dir, survivors + created, pm=pm),
-            "manifest_full": True,
-        }
-
-    if not optimistic:
-        # the exclusive path holds the writer lease, so vacuum/expire
-        # (also lease holders) cannot sweep the not-yet-referenced
-        # manifest before the entry lands
-        survivors = sorted(set(live) - set(removed))
-        _commit_snapshot_entry(
-            out_dir, entry(rw["stamp"], survivors, part_meta(out_dir, parts=survivors)),
-            append=True,
-        )
-    else:
-        if _pre_commit_hook is not None:
-            _pre_commit_hook()
-        tok = _acquire_writer_lock_blocking(out_dir, "commit")
-        try:
-            # validate AT THE TIP: every part this rewrite replaces must
-            # still be live there — concurrent appends are fine (their
-            # parts are untouched and stay live through this entry), but
-            # a DELETE/MERGE/compaction that removed or rewrote any of
-            # them makes our merged copies resurrect dead rows
-            cur_live = set(snapshot_parts(out_dir) or ())
-            gone = sorted(p for p in removed if p not in cur_live)
-            if gone:
-                raise ConcurrentWriterError(
-                    f"optimistic compaction at {out_dir} lost its race: "
-                    f"parts {gone[:8]}{'...' if len(gone) > 8 else ''} "
-                    f"were removed or rewritten by a concurrent commit "
-                    f"since this rewrite planned; its files stay as "
-                    f"orphans (vacuumable once the reservation lease "
-                    f"expires) — re-run the compaction on the new tip"
-                )
-            # schema may have evolved concurrently (nullable widen by an
-            # append); compaction never changes schema, so the entry
-            # stamps the CURRENT tip's schema state, not the planning-time
-            # one. The manifest covers the CURRENT tip's survivors
-            # (concurrent appends since planning fold from their own
-            # fresh manifests) and is written INSIDE the lease: written
-            # lock-free it could sit unreferenced in front of a
-            # concurrent vacuum/expire sweep
-            cur_state, _, snaps = _resolve_snapshot_meta(out_dir)
-            cur_survivors = sorted(cur_live - set(removed))
-            _commit_snapshot_entry(
-                out_dir,
-                entry(
-                    _schema_stamp(cur_state), cur_survivors,
-                    part_meta(out_dir, parts=cur_survivors, snaps=snaps),
-                ),
-                append=True,
-            )
-        finally:
-            _release_writer_lock(out_dir, tok)
-        release_part_range(out_dir, res)
+    # CONSOLIDATED manifest: cover the full post-compaction live set
+    # (survivors folded from the older manifests + the merged parts from
+    # their fresh checkpoints), so part_meta's newest-first early exit
+    # satisfies any later pruned read from THIS one file — a 10k-commit
+    # table stops paying a 10k-manifest cold-driver read at its next
+    # compaction (the Iceberg rewrite_manifests idiom).
+    survivors = sorted(set(live) - set(removed))
+    _commit_snapshot_entry(out_dir, {
+        "new_parts": created,
+        "removed_parts": removed,
+        "n_rows": rw["n_rows"],
+        "enc_bytes": rw["enc_bytes"],
+        "layout": layout.get("layout", "clustered"),
+        **rw["stamp"],
+        "compaction": True,
+        "ts": time.time(),
+        "manifest": write_manifest(
+            out_dir, survivors + created,
+            pm=part_meta(out_dir, parts=survivors),
+        ),
+        "manifest_full": True,
+    }, append=True)
     return {
         "groups": len(groups),
         "parts_removed": len(removed),
@@ -4003,8 +3517,6 @@ def optimize_table(
             f"(which re-encodes under the SAME storage schema) still works"
         )
     live = snapshot_parts(out_dir)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
     if not live:
         return {"parts_removed": 0, "parts_created": 0, "n_rows": 0}
     affected = live
@@ -4023,9 +3535,6 @@ def optimize_table(
         affected = _plan_read(out_dir, parts=live, wheres=wheres).parts
         if not affected:
             return {"parts_removed": 0, "parts_created": 0, "n_rows": 0}
-    # legacy (pre-snapshot-log) tables: root the log BEFORE rewrite parts
-    # land, or completed_parts-fallback readers would double-count rows
-    _ensure_snapshot_root(out_dir, live)
     meta_path = _j(out_dir, "_table_meta.json")
     meta = _read_json(meta_path)
     src = decode_table(spark, out_dir, _parts=affected).persist()
@@ -4090,7 +3599,6 @@ def _copy_on_write_delete(
     spark: SparkSession,
     out_dir: str,
     affected: list[int],
-    live: list[int],
     meta: dict,
     mask_fn,
     tag: list,
@@ -4104,15 +3612,8 @@ def _copy_on_write_delete(
     null-safe), re-encode survivors under new part ids, and commit one
     snapshot (removed_parts = changed parts only; an untouched part
     keeps its id with no write). ``tag`` is recorded under the entry's
-    ``delete`` key so the changefeed skips the rewrite.
-
-    On a pre-snapshot (legacy) table a ROOT snapshot of the current live
-    set is committed BEFORE any rewritten part is written
-    (:func:`_ensure_snapshot_root`): from that moment readers resolve
-    the snapshot log, so the new parts stay invisible orphans until the
-    delete entry commits — without this the completed_parts fallback
-    would show survivor rows twice (old part + rewrite), permanently if
-    the job crashed mid-way.
+    ``delete`` key so the changefeed skips the rewrite. The rewritten
+    parts stay invisible orphans until that entry commits.
 
     ``commit=False`` skips the snapshot publish and returns the
     removed/created part ids under ``result["pending"]`` — the merge
@@ -4121,10 +3622,9 @@ def _copy_on_write_delete(
     The rewrite (:func:`_rewrite_parts`) resolves the schema and field
     ids at ``meta["snapshot_id"]`` (set by :func:`_load_live`: the tip or
     the branch tip; absent = the tip), like readers do."""
-    _ensure_snapshot_root(out_dir, live)
     rw = _rewrite_parts(
         spark, out_dir, [[int(p)] for p in affected],
-        _next_part_base(out_dir, live), meta.get("block_rows") or 65536,
+        _next_part_base(out_dir), meta.get("block_rows") or 65536,
         snapshot_id=meta.get("snapshot_id"), mask=mask_fn,
     )
     out = _delete_report(rw, len(affected))
@@ -4161,24 +3661,24 @@ def _delete_report(rw: dict, n_scanned: int) -> dict:
 
 
 def _load_live(
-    out_dir: str, col: str, branch: str | None = None
+    out_dir: str, cols: list[str], branch: str | None = None
 ) -> tuple[dict, list[int]]:
     """(meta, live) at the tip, or at ``branch``'s tip: the schema state
     in effect there (main may have evolved since a fork, and a rollback
     narrows the tip) with the table's ``layout`` and ``block_rows``, the
-    live part set, and the resolved id under ``meta["snapshot_id"]``
-    (None for a table without a snapshot log) — delete and merge rewrite
-    at that snapshot."""
+    live part set (empty without a committed snapshot), and the resolved
+    id under ``meta["snapshot_id"]`` — delete and merge rewrite at that
+    snapshot. Raises on the first of ``cols`` the schema lacks."""
     snaps = snapshots(out_dir)
     bid = _branch_tip(out_dir, branch, snaps) if branch is not None else None
     meta, sid, _ = _resolve_snapshot_meta(out_dir, bid, snaps)
     layout = _read_json(_j(out_dir, "_table_meta.json"))
-    live = (
-        snapshot_parts(out_dir, sid, snaps=snaps) if sid is not None
-        else sorted(completed_parts(out_dir))
-    )
-    if col not in meta["columns"]:
-        raise ValueError(f"unknown column {col!r}; table has {meta['columns']}")
+    for col in cols:
+        if col not in meta["columns"]:
+            raise ValueError(
+                f"unknown column {col!r}; table has {meta['columns']}"
+            )
+    live = snapshot_parts(out_dir, sid, snaps=snaps)
     return dict(
         meta, layout=layout.get("layout", "clustered"),
         block_rows=layout.get("block_rows"), snapshot_id=sid,
@@ -4215,12 +3715,7 @@ def delete_rows(
     wheres = _normalize_where(where)
     if not wheres:
         raise ValueError("delete_rows needs at least one predicate")
-    meta, live = _load_live(out_dir, wheres[0][0], branch=branch)
-    for w in wheres:
-        if w[0] not in meta["columns"]:
-            raise ValueError(
-                f"unknown column {w[0]!r}; table has {meta['columns']}"
-            )
+    meta, live = _load_live(out_dir, [w[0] for w in wheres], branch=branch)
     if not live:
         return {"parts_scanned": 0, "parts_rewritten": 0, "rows_deleted": 0}
     affected = _plan_read(
@@ -4235,23 +3730,12 @@ def delete_rows(
         m = None
         for w in wheres:
             v = tbl.column(w[0])
-            if len(w) == 2:
-                mm = _in_set(v, list(w[1]))
-            else:
-                _, lo, hi = w
-                # and_kleene: false AND null = false, so a NULL value
-                # yields match=false (kept) — plain and_ would propagate
-                # null into the mask and filter() would drop the row
-                mm = pc.is_valid(v)
-                if lo is not None:
-                    mm = pc.and_kleene(mm, pc.greater_equal(v, pa.scalar(lo, v.type)))
-                if hi is not None:
-                    mm = pc.and_kleene(mm, pc.less_equal(v, pa.scalar(hi, v.type)))
+            mm = _in_set(v, list(w[1])) if len(w) == 2 else _in_range(v, *w[1:])
             m = mm if m is None else pc.and_(m, mm)
         return m
 
     return _copy_on_write_delete(
-        spark, out_dir, affected, live, meta, mask,
+        spark, out_dir, affected, meta, mask,
         [list(w) for w in wheres], branch=branch,
     )
 
@@ -4260,7 +3744,6 @@ def _rewrite_parts_dropping_matched_keys(
     spark: SparkSession,
     out_dir: str,
     affected: list[int],
-    live: list[int],
     meta: dict,
     df: DataFrame,
     key_col: str,
@@ -4285,7 +3768,7 @@ def _rewrite_parts_dropping_matched_keys(
     delete. Returns the same ``pending`` shape as
     ``_copy_on_write_delete(commit=False)``; the caller owns the commit.
     """
-    base = _next_part_base(out_dir, live)
+    base = _next_part_base(out_dir)
     groups = [[int(p)] for p in affected]
     gi_of = {p: gi for gi, (p,) in enumerate(groups)}
     sid = meta.get("snapshot_id")
@@ -4328,6 +3811,27 @@ def _rewrite_parts_dropping_matched_keys(
 
     rows = matched.groupBy("old_pid").applyInPandas(rewrite, _REWRITE_DDL).collect()
     return _delete_report(_rewrite_summary(plan, groups, rows), len(affected))
+
+
+def _in_range(v, lo, hi):
+    """Null-safe range mask in Spark SQL's order: NULL never matches, and
+    NaN sorts above every number and equals itself (Arrow's IEEE
+    comparisons match NaN to no bound)."""
+    import pyarrow.compute as pc
+
+    nan = pc.is_nan(v) if pa.types.is_floating(v.type) else None
+    # and_kleene: false AND null = false, so a NULL value yields
+    # match=false (kept) — plain and_ would propagate null into the mask
+    # and filter() would drop the row
+    mm = pc.is_valid(v)
+    if lo is not None:
+        ge = pc.greater_equal(v, pa.scalar(lo, v.type))
+        if nan is not None:  # NaN passes every lower bound; NaN admits NaN
+            ge = nan if lo != lo else pc.or_kleene(ge, nan)
+        mm = pc.and_kleene(mm, ge)
+    if hi is not None and (nan is None or hi == hi):  # anything <= NaN
+        mm = pc.and_kleene(mm, pc.less_equal(v, pa.scalar(hi, v.type)))
+    return mm
 
 
 def _in_set(v, values):
@@ -4405,7 +3909,7 @@ def _upsert_rows_inner(
     parts_rewritten = 0
     meta = None
     if _exists(_j(out_dir, "_table_meta.json")):
-        meta, live = _load_live(out_dir, key_col, branch=branch)
+        meta, live = _load_live(out_dir, [key_col], branch=branch)
         span = df.agg(
             F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
         ).first()
@@ -4426,9 +3930,6 @@ def _upsert_rows_inner(
 
             affected = prune((key_col, span["lo"], span["hi"]), live)
         if affected:
-            # legacy tables root the log BEFORE any rewrite lands, so the
-            # rewrites stay invisible until the combined entry commits
-            _ensure_snapshot_root(out_dir, live)
             head = (
                 df.select(key_col).where(F.col(key_col).isNotNull())
                 .distinct().limit(broadcast_keys + 1).collect()
@@ -4444,14 +3945,14 @@ def _upsert_rows_inner(
                     return _in_set(tbl.column(key_col), key_bc.value)
 
                 rep = _copy_on_write_delete(
-                    spark, out_dir, affected, live, meta, mask,
+                    spark, out_dir, affected, meta, mask,
                     [key_col, "in-set", len(keys)], commit=False,
                 )
                 pending_del = rep["pending"]
                 parts_rewritten = rep["parts_rewritten"]
             elif affected:
                 rep = _rewrite_parts_dropping_matched_keys(
-                    spark, out_dir, affected, live, meta, df, key_col
+                    spark, out_dir, affected, meta, df, key_col
                 )
                 pending_del = rep["pending"]
                 parts_rewritten = rep["parts_rewritten"]
@@ -4510,12 +4011,7 @@ def _upsert_rows_inner(
 def _commit_schema_change(out_dir: str, change: dict, state: dict) -> dict:
     """Commit a metadata-only DDL (drop, add or rename a column) as one
     snapshot on the main tip: no part file is touched, the entry records
-    ``change`` and stamps the new schema ``state``. A pre-snapshot
-    (legacy) table gets its log rooted first."""
-    live = snapshot_parts(out_dir)
-    if live is None:
-        live = sorted(completed_parts(out_dir))
-    _ensure_snapshot_root(out_dir, live)
+    ``change`` and stamps the new schema ``state``."""
     entry = {
         "new_parts": [],
         "removed_parts": [],
@@ -4906,8 +4402,6 @@ def table_column_stats(out_dir: str, snapshot_id: int | None = None) -> dict:
     columns are not reported."""
     meta, _sid, snaps = _resolve_snapshot_meta(out_dir, snapshot_id)
     parts = snapshot_parts(out_dir, snapshot_id, snaps=snaps)
-    if parts is None:
-        parts = sorted(completed_parts(out_dir))
     pm = part_meta(out_dir, parts=parts, snaps=snaps)
     # field-id resolution, same rule as decode: a renamed column's stats
     # live under its STORAGE name in old parts; a dropped-and-re-added
@@ -5235,8 +4729,8 @@ def fast_forward(out_dir: str, name: str) -> dict:
     like a normal commit: a streaming consumer that skipped the branch
     commits receives the branch's net inserts (and, in CDC mode, its
     net deletes) once, at the fast-forward. A diverged branch is
-    refused — rewrite it on the new tip (e.g. re-run the upserts) as
-    with any optimistic-concurrency loss. No part file moves."""
+    refused — rebase it (:func:`rebase_branch`) or rewrite it on the new
+    tip (e.g. re-run the upserts). No part file moves."""
     snaps = snapshots(out_dir)
     if not snaps:
         raise ValueError(f"table at {out_dir} has no snapshot log")
@@ -5532,52 +5026,15 @@ def rebase_branch(out_dir: str, name: str, spark: SparkSession | None = None) ->
             "conflicts": []}
 
 
-@_with_writer_lock("vacuum")
-def vacuum_orphans(out_dir: str, *, include_pending: bool = False) -> dict:
-    """Delete part files no snapshot has EVER referenced — the orphans a
-    crashed append/merge/optimize leaves behind (their parts were
-    written but the atomic commit never published them) — WITHOUT
-    touching retention: every snapshot in the log, and therefore all
-    time travel and tags, stays intact (contrast ``expire_snapshots``,
-    which trades history for space). Runs under the writer lock, so no
-    writer is mid-flight; a ``_pending_append.json`` therefore marks a
-    CRASHED-but-resumable append, and its parts (ids at or above the
-    recorded base) are protected by default — pass
-    ``include_pending=True`` to reclaim them and abandon the resume
-    (the pending marker is removed with them). Optimistic writers run
-    WITHOUT the lock, so their in-flight part-id ranges are protected by
-    their unexpired reservations instead (:func:`reserved_parts`); a
-    crashed optimistic run's files become reclaimable only after its
-    reservation lease expires."""
-    snaps = snapshots(out_dir)
-    if not snaps:
-        # pre-snapshot-log table: every checkpointed part IS the live
-        # set (the completed_parts fallback) — nothing is orphaned
-        return {"files_deleted": 0, "parts_vacuumed": 0}
-    referenced: set[int] = set()
-    for s in snaps:
-        referenced |= set(s.get("new_parts", []))
-    protect_base = None
+def _sweep_files(
+    out_dir: str, keep_parts: set[int], keep_manifests: set[str]
+) -> tuple[set[int], int]:
+    """Delete every part file (``blocks/*/part_*.parquet``, half-written
+    parts without their checkpoint included) whose id is not in
+    ``keep_parts``, and every manifest not in ``keep_manifests``.
+    Returns (part ids deleted, files deleted)."""
     fs = _get_fs(out_dir)
-    pending_path = _j(out_dir, "_pending_append.json")
-    if fs.exists(pending_path):
-        if include_pending:
-            fs.remove(pending_path)  # abandoning the crashed append
-        else:
-            protect_base = _read_json(pending_path)["base"]
-    rsv = reserved_parts(out_dir)
-    orphans = {
-        p
-        for p in completed_parts(out_dir)
-        if p not in referenced
-        and p not in rsv
-        and (protect_base is None or p < protect_base)
-    }
-    # vacuumed part ids WILL be reused by the next append (base =
-    # max(completed)+1), breaking the progress cache's ids-never-reused
-    # premise — drop this table's cache, same as the fresh-run reset
-    if orphans:
-        _PROGRESS_CACHE.pop(out_dir, None)
+    parts: set[int] = set()
     deleted = 0
     blocks = _j(out_dir, "blocks")
     for cdir in fs.listdir(blocks):
@@ -5585,23 +5042,56 @@ def vacuum_orphans(out_dir: str, *, include_pending: bool = False) -> dict:
         for f in fs.listdir(d):
             if f.startswith("part_") and f.endswith(".parquet"):
                 pid = int(f[len("part_") : -len(".parquet")])
-                # covers checkpointed orphans AND half-written parts a
-                # crash left without their checkpoint-last marker
-                if pid not in referenced and pid not in rsv and (
-                    protect_base is None or pid < protect_base
-                ):
+                if pid not in keep_parts:
                     fs.remove(_j(d, f))
+                    parts.add(pid)
                     deleted += 1
-    # manifests no entry references: a crashed commit wrote one just
-    # before its log append — same orphan class as its part files
-    live_manifests = {s.get("manifest") for s in snaps} - {None}
     mdir = _j(out_dir, MANIFESTDIR)
     for f in fs.listdir(mdir):
-        if f.endswith(".parquet") and f not in live_manifests:
+        if f.endswith(".parquet") and f not in keep_manifests:
             fs.remove(_j(mdir, f))
             _MANIFEST_CACHE.pop(_j(mdir, f), None)
             deleted += 1
-    return {"files_deleted": deleted, "parts_vacuumed": len(orphans)}
+    if parts:
+        # swept part ids WILL be reused by the next writer
+        # (_next_part_base), breaking the progress cache's
+        # ids-never-reused premise — drop this table's cache, same as the
+        # fresh-run reset
+        _PROGRESS_CACHE.pop(out_dir, None)
+    return parts, deleted
+
+
+@_with_writer_lock("vacuum")
+def vacuum_orphans(out_dir: str, *, include_pending: bool = False) -> dict:
+    """Delete part files no snapshot has EVER referenced — the orphans a
+    crashed append/merge/optimize leaves behind (their parts were
+    written but the atomic commit never published them) — and the
+    manifests no entry references, WITHOUT touching retention: every
+    snapshot in the log, and therefore all time travel and tags, stays
+    intact (contrast ``expire_snapshots``, which trades history for
+    space). Runs under the writer lease, so no writer is mid-flight; a
+    ``_pending_append.json`` therefore marks a CRASHED-but-resumable
+    append, and its checkpointed parts (ids at or above the recorded
+    base) are protected by default — pass ``include_pending=True`` to
+    reclaim them and abandon the resume (the pending marker is removed
+    with them). A table with no committed snapshot is left alone: a
+    rerun of its create resumes those parts."""
+    snaps = snapshots(out_dir)
+    if not snaps:
+        return {"files_deleted": 0, "parts_vacuumed": 0}
+    keep = _log_parts(snaps)
+    fs = _get_fs(out_dir)
+    pending_path = _j(out_dir, "_pending_append.json")
+    if fs.exists(pending_path):
+        if include_pending:
+            fs.remove(pending_path)  # abandoning the crashed append
+        else:
+            base = _read_json(pending_path)["base"]
+            keep |= {p for p in completed_parts(out_dir) if p >= base}
+    parts, deleted = _sweep_files(
+        out_dir, keep, {s.get("manifest") for s in snaps} - {None}
+    )
+    return {"files_deleted": deleted, "parts_vacuumed": len(parts)}
 
 
 @_with_writer_lock("expire")
@@ -5661,20 +5151,7 @@ def expire_snapshots(out_dir: str, keep_last: int = 1) -> dict:
     # original ones covered only their own new_parts, but as roots they
     # now own full live sets; dropped entries' manifests die below)
     pm_all = part_meta(out_dir, parts=sorted(referenced), snaps=snaps)
-    # in-flight optimistic writers' reserved ranges are not referenced
-    # by any snapshot yet — protect them from the file sweep
-    protected = referenced | reserved_parts(out_dir)
-    deleted = 0
     fs = _get_fs(out_dir)
-    blocks = _j(out_dir, "blocks")
-    for cdir in fs.listdir(blocks):
-        d = _j(blocks, cdir)
-        for f in fs.listdir(d):
-            if f.startswith("part_") and f.endswith(".parquet"):
-                pid = int(f[len("part_") : -len(".parquet")])
-                if pid not in protected:
-                    fs.remove(_j(d, f))
-                    deleted += 1
     # squash: oldest retained snapshot re-rooted with its full live set;
     # it is no longer a compaction delta (a changefeed consumer starting
     # fresh must receive these rows), so the flag must not survive
@@ -5751,14 +5228,11 @@ def expire_snapshots(out_dir: str, keep_last: int = 1) -> dict:
         legacy = _j(out_dir, "_snapshots.jsonl")
         if fs.exists(legacy):
             fs.remove(legacy)
-    # manifests of dropped entries (and the roots' superseded originals)
-    # die only AFTER the squash published — a crash before this point
-    # leaves orphan manifest files readers never consult (and part_meta
-    # treats a missing manifest as uncovered anyway); kept[1:] keep theirs
-    live_manifests = {s.get("manifest") for s in squashed} - {None}
-    mdir = _j(out_dir, MANIFESTDIR)
-    for f in fs.listdir(mdir):
-        if f.endswith(".parquet") and f not in live_manifests:
-            fs.remove(_j(mdir, f))
-            _MANIFEST_CACHE.pop(_j(mdir, f), None)
+    # the files of dropped entries (their parts, their manifests and the
+    # roots' superseded originals) die only AFTER the squash published —
+    # a crash before this point leaves orphans no retained entry names,
+    # which vacuum_orphans reclaims; kept[1:] keep their manifests
+    _, deleted = _sweep_files(
+        out_dir, referenced, {s.get("manifest") for s in squashed} - {None}
+    )
     return {"files_deleted": deleted, "snapshots_kept": len(squashed)}

@@ -385,6 +385,8 @@ def test_u64_table_decodes_as_int64_bitview(spark, tmp_path):
     )
     with open(f"{out}/_table_meta.json", "w") as fh:
         json.dump({"schema": {"v": "u64"}, "columns": ["v"]}, fh)
+    with open(f"{out}/_snapshots.jsonl", "w") as fh:
+        fh.write('{"id":1,"parent":0,"new_parts":[0]}\n')  # commit part 0
     got = sorted(r["v"] for r in decode_table(spark, out).collect())
     want = sorted(int(v) for v in vals.view(np.int64))
     assert got == want
@@ -847,27 +849,6 @@ def test_compaction_and_expiry(spark, tmp_path):
         decode_table(spark, out, snapshot_id=first_id).count()
 
 
-def test_compact_legacy_table_keeps_untouched_parts(spark, tmp_path):
-    """Compacting a pre-snapshot table must root the log with the FULL
-    live set — singleton groups left alone must not vanish."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from sparkcodec.engine import compact_table, decode_table, encode_table
-
-    out = str(tmp_path / "legacy")
-    df = spark.range(3000).select(F.col("id"), (F.col("id") % 5).alias("g"))
-    encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"], num_parts=12,
-                 target_part_rows=250, resume=False)
-    _os.remove(_os.path.join(out, "_snapshots.jsonl"))  # simulate legacy table
-    rep = compact_table(spark, out, target_part_rows=700)
-    assert rep["parts_removed"] > 0
-    dec = decode_table(spark, out)
-    assert dec.count() == 3000
-    assert dec.agg(F.sum("id")).collect()[0][0] == sum(range(3000))
-
-
 def test_u64_columns_never_pruned():
     """u64 decodes as the int64 bit view, which is not monotone in the
     unsigned order (values >= 2^63 wrap negative), so zone maps must not
@@ -910,53 +891,6 @@ def test_stream_after_expiry_delivers_all_rows(spark, tmp_path):
     got = spark.read.parquet(sink)
     assert got.count() == 800
     assert got.agg(F.sum("id")).collect()[0][0] == sum(range(800))
-
-
-def test_append_to_legacy_table_roots_full_live_set(spark, tmp_path):
-    """append=True onto a pre-snapshot table (no _snapshots.jsonl): the
-    first committed snapshot must carry the legacy base parts too, or
-    snapshot-resolving readers silently drop every base-table row."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from sparkcodec.engine import decode_table, encode_table, snapshot_parts
-
-    out = str(tmp_path / "legacy_append")
-    d1 = spark.range(200).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    d2 = spark.range(200, 260).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    encode_table(spark, d1, out, cluster_by=["g"], salt_by=["id"], num_parts=4,
-                 target_part_rows=60, resume=False)
-    _os.remove(_os.path.join(out, "_snapshots.jsonl"))  # simulate legacy table
-    encode_table(spark, d2, out, cluster_by=["g"], salt_by=["id"], num_parts=2,
-                 target_part_rows=60, append=True)
-    live = snapshot_parts(out)
-    dec = decode_table(spark, out)
-    assert dec.count() == 260, (live, dec.count())
-    assert dec.agg(F.sum("id")).collect()[0][0] == sum(range(260))
-
-
-def test_ds_write_to_legacy_table_roots_full_live_set(spark, tmp_path):
-    """df.write.format('sparkcodec') onto a pre-snapshot table: same
-    legacy-rooting rule as encode_table(append=True)."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from sparkcodec.datasource import SparkcodecDataSource
-    from sparkcodec.engine import decode_table, encode_table
-
-    out = str(tmp_path / "legacy_ds_write")
-    d1 = spark.range(150).select(F.col("id"), (F.col("id") * 3).alias("v"))
-    encode_table(spark, d1, out, cluster_by=["id"], salt_by=["v"], num_parts=3,
-                 target_part_rows=60, resume=False)
-    _os.remove(_os.path.join(out, "_snapshots.jsonl"))  # simulate legacy table
-    spark.dataSource.register(SparkcodecDataSource)
-    d2 = spark.range(150, 180).select(F.col("id"), (F.col("id") * 3).alias("v"))
-    d2.repartition(2).write.format("sparkcodec").mode("append").save(out)
-    dec = decode_table(spark, out)
-    assert dec.count() == 180
-    assert dec.agg(F.sum("id")).collect()[0][0] == sum(range(180))
 
 
 def test_block_prune_type_mismatch_is_conservative(spark, tmp_path):
@@ -1351,7 +1285,7 @@ def test_upsert_commits_one_atomic_snapshot(spark, tmp_path):
 
     # simulate a crash BETWEEN the rewrite and the commit: run the
     # rewrite with commit=False and stop — the upsert's actual first step
-    meta, live = _load_live(out, "id")
+    meta, live = _load_live(out, ["id"])
     affected = prune_parts(out, ("id", 100, 109), live)
     assert affected
 
@@ -1365,7 +1299,7 @@ def test_upsert_commits_one_atomic_snapshot(spark, tmp_path):
         )
 
     rep = _copy_on_write_delete(
-        spark, out, affected, live, meta, mask, ["id", 100, 109], commit=False
+        spark, out, affected, meta, mask, ["id", 100, 109], commit=False
     )
     assert rep["pending"]["removed_parts"], rep
     # reader still sees the COMPLETE pre-merge table, and the aborted
@@ -2541,39 +2475,6 @@ def test_upsert_preserves_snapshot_extra(spark, tmp_path):
     assert e.get("merge") and e.get("stream") == ["ckpt", 7]
 
 
-def test_legacy_compact_roots_before_rewrite(spark, tmp_path):
-    """Compaction of a pre-snapshot-log table roots the log with the
-    live set BEFORE merged parts land — readers mid-compaction (or after
-    a crash before the commit) never see duplicate rows."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from sparkcodec.engine import (
-        _ensure_snapshot_root,
-        _read_json,
-        compact_table,
-        decode_table,
-        encode_table,
-        snapshots,
-    )
-
-    out = str(tmp_path / "legacycompact")
-    df = spark.range(300).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"], num_parts=6,
-                 target_part_rows=50, resume=False)
-    _os.remove(_os.path.join(out, "_snapshots.jsonl"))  # simulate legacy
-    rep = compact_table(spark, out, target_part_rows=1000)
-    assert rep["groups"] >= 1
-    snaps = snapshots(out)
-    # root carries the pre-compaction live set; the delta entry follows
-    assert snaps[0]["parent"] == 0 and len(snaps) == 2
-    assert snaps[1].get("compaction") and snaps[1]["removed_parts"]
-    dec = decode_table(spark, out)
-    assert dec.count() == 300  # no duplicates
-    assert dec.agg(F.sum("id")).collect()[0][0] == sum(range(300))
-
-
 def test_rollback_table(spark, tmp_path):
     """rollback_table: a forward-moving commit whose live set is exactly
     the target snapshot's — rows rewind, history survives (time travel
@@ -3044,347 +2945,6 @@ def test_manifest_lifecycle_expire_and_vacuum(spark, tmp_path):
     assert [(r["id"], r["g"]) for r in got] == [(5, 1)]  # the upserted row
 
 
-# ---------------------------------------------------------------------------
-# optimistic concurrency (Iceberg-style non-conflicting commits)
-
-
-def _snap_chain_is_linear(snaps):
-    """Every entry's parent is the previous entry's id (after the root)."""
-    for prev, cur in zip(snaps, snaps[1:]):
-        if cur["parent"] != prev["id"]:
-            return False
-    return True
-
-
-def test_optimistic_appends_both_commit_and_linearize(spark, tmp_path):
-    """Two optimistic appends running CONCURRENTLY (no single-writer
-    lease held during the encode) both commit; the snapshot log
-    linearizes; part ids are disjoint (range reservations); no
-    reservation or lock files survive."""
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F
-
-    from sparkcodec import engine
-
-    out = str(tmp_path / "opt_appends")
-    df = spark.range(300).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    engine.encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                        num_parts=2, target_part_rows=150, resume=False)
-
-    def appender(lo):
-        d = spark.range(lo, lo + 50).select(
-            F.col("id"), (F.col("id") % 3).alias("g"))
-        return engine.encode_table(
-            spark, d, out, cluster_by=["g"], salt_by=["id"], num_parts=2,
-            target_part_rows=150, append=True, concurrency="optimistic")
-
-    with ThreadPoolExecutor(2) as ex:
-        r1, r2 = list(ex.map(appender, [1000, 2000]))
-    assert r1["parts_encoded"] == 2 and r2["parts_encoded"] == 2
-
-    snaps = engine.snapshots(out)
-    assert len(snaps) == 3  # root + both appends
-    assert _snap_chain_is_linear(snaps)
-    a1, a2 = snaps[1]["new_parts"], snaps[2]["new_parts"]
-    assert not set(a1) & set(a2)  # reservation-disjoint ids
-    assert engine.decode_table(spark, out).count() == 400
-    assert engine.reserved_parts(out) == set()  # released at commit
-    assert not _os.path.exists(_os.path.join(out, "_writer.lock"))
-    # ids never reused: the appends' parts sit above the root's
-    assert min(a1 + a2) > max(snaps[0]["new_parts"])
-
-
-def test_optimistic_compaction_with_concurrent_append_both_commit(spark, tmp_path):
-    """append ∥ compaction: an exclusive append lands BETWEEN the
-    optimistic compaction's rewrite and its commit (via the test seam);
-    the compaction validates at the new tip and still commits — both
-    snapshots land, rows from both survive."""
-    from pyspark.sql import functions as F
-
-    from sparkcodec import engine
-
-    out = str(tmp_path / "opt_compact")
-    df = spark.range(600).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    engine.encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                        num_parts=6, target_part_rows=100, resume=False)
-
-    def concurrent_append():
-        d = spark.range(5000, 5040).select(
-            F.col("id"), (F.col("id") % 3).alias("g"))
-        engine.encode_table(spark, d, out, cluster_by=["g"], salt_by=["id"],
-                            num_parts=1, target_part_rows=100, append=True)
-
-    r = engine.compact_table(spark, out, target_part_rows=400,
-                             concurrency="optimistic",
-                             _pre_commit_hook=concurrent_append)
-    assert r["parts_removed"] >= 2 and r["parts_created"] >= 1
-    snaps = engine.snapshots(out)
-    assert len(snaps) == 3  # root, append, compaction
-    assert snaps[1].get("compaction") is None  # the append
-    assert snaps[2]["compaction"] is True
-    assert _snap_chain_is_linear(snaps)
-    # the concurrent append's rows survive the compaction commit
-    assert engine.decode_table(spark, out).count() == 640
-    assert engine.decode_table(spark, out).filter("id >= 5000").count() == 40
-    assert engine.reserved_parts(out) == set()
-
-
-def test_optimistic_compaction_conflict_refuses_and_reservation_protects(
-    spark, tmp_path
-):
-    """compaction ∥ DELETE on a part being rewritten: the validated
-    commit refuses (ConcurrentWriterError), the table reflects only the
-    delete, and the rewrite's orphan files stay protected by the
-    reservation until its lease expires — then vacuum reclaims them."""
-    import json as _json
-    import os as _os
-    import time as _time
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from sparkcodec import engine
-
-    out = str(tmp_path / "opt_conflict")
-    df = spark.range(600).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    engine.encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                        num_parts=6, target_part_rows=100, resume=False)
-    n_live0 = len(engine.snapshot_parts(out))
-
-    def concurrent_delete():
-        # rewrites/removes every part holding ids 0..299 — guaranteed to
-        # intersect the compaction's removed set (it rewrites ALL parts)
-        engine.delete_rows(spark, out, ("id", 0, 299))
-
-    with _pytest.raises(engine.ConcurrentWriterError, match="lost its race"):
-        engine.compact_table(spark, out, target_part_rows=400,
-                             concurrency="optimistic",
-                             _pre_commit_hook=concurrent_delete)
-
-    # table state: only the delete landed
-    assert engine.decode_table(spark, out).count() == 300
-    snaps = engine.snapshots(out)
-    assert snaps[-1].get("delete") is not None
-    # the failed rewrite kept its reservation: vacuum must NOT reclaim
-    rsv = engine.reserved_parts(out)
-    assert rsv, "conflicted compaction should keep its reservation"
-    v1 = engine.vacuum_orphans(out)
-    assert engine.reserved_parts(out) == rsv  # still protected
-    # expire the reservation lease, then vacuum reclaims the orphans
-    rdir = _os.path.join(out, "_reservations")
-    for f in _os.listdir(rdir):
-        p = _os.path.join(rdir, f)
-        with open(p) as fh:
-            rec = _json.load(fh)
-        rec["ts"] = _time.time() - 2 * rec["lease_sec"] - 1
-        with open(p, "w") as fh:
-            _json.dump(rec, fh)
-    v2 = engine.vacuum_orphans(out)
-    assert v2["files_deleted"] > v1["files_deleted"] or v2["parts_vacuumed"] > 0
-    assert engine.reserved_parts(out) == set()
-    # decode still exact after the sweep
-    assert engine.decode_table(spark, out).count() == 300
-    assert n_live0 >= 2  # sanity on the fixture (one part per g-group)
-
-
-def test_optimistic_mode_validations(spark, tmp_path):
-    """The lock-free path refuses the shapes it cannot make safe:
-    fresh tables, aligned layout, deferred commits, non-append runs."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from sparkcodec import engine
-
-    out = str(tmp_path / "opt_validate")
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("g"))
-
-    with _pytest.raises(ValueError, match="append=True"):
-        engine.encode_table(spark, df, out, num_parts=1, resume=False,
-                            concurrency="optimistic")
-    with _pytest.raises(ValueError, match="existing snapshot-logged"):
-        engine.encode_table(spark, df, out, num_parts=1, append=True,
-                            concurrency="optimistic")
-    engine.encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                        num_parts=1, resume=False)
-    with _pytest.raises(ValueError, match="aligned"):
-        engine.encode_table(spark, df, out, layout="aligned", append=True,
-                            concurrency="optimistic")
-    with _pytest.raises(ValueError, match="cannot defer"):
-        engine.encode_table(spark, df, out, num_parts=1, append=True,
-                            commit=False, concurrency="optimistic")
-    with _pytest.raises(ValueError, match="concurrency must be"):
-        engine.encode_table(spark, df, out, num_parts=1, append=True,
-                            concurrency="eventually")
-
-
-def test_reservation_floors_exclusive_base(spark, tmp_path):
-    """An unexpired reservation (in-flight optimistic writer with no
-    checkpoints on disk yet) floors the ids of a concurrent EXCLUSIVE
-    append — no collision; releasing frees the range for reuse."""
-    from pyspark.sql import functions as F
-
-    from sparkcodec import engine
-
-    out = str(tmp_path / "resv_floor")
-    df = spark.range(200).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    engine.encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                        num_parts=2, target_part_rows=100, resume=False)
-
-    res = engine.reserve_part_range(out, 5, "encode")
-    assert res["base"] == 2 and engine.reserved_parts(out) == {2, 3, 4, 5, 6}
-    # a second reservation claims PAST the first
-    res2 = engine.reserve_part_range(out, 3, "encode")
-    assert res2["base"] == 7
-
-    d = spark.range(900, 950).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    engine.encode_table(spark, d, out, cluster_by=["g"], salt_by=["id"],
-                        num_parts=1, target_part_rows=100, append=True)
-    appended = engine.snapshots(out)[-1]["new_parts"]
-    assert min(appended) >= 10  # above BOTH reserved ranges
-
-    engine.release_part_range(out, res)
-    engine.release_part_range(out, res2)
-    assert engine.reserved_parts(out) == set()
-    assert engine.decode_table(spark, out).count() == 250
-
-
-def test_datasource_append_skips_reserved_part_ids(spark, tmp_path):
-    """``.write.format("sparkcodec")`` takes its first part id above every
-    unexpired reservation, like an exclusive encode_table append: an
-    in-flight optimistic writer's reserved ids have no checkpoints on
-    disk yet, so max(completed) + 1 cannot see them."""
-    from pyspark.sql import functions as F
-
-    from sparkcodec import engine
-    from sparkcodec.datasource import SparkcodecDataSource
-
-    spark.dataSource.register(SparkcodecDataSource)
-    out = str(tmp_path / "resv_ds")
-    df = spark.range(200).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    engine.encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                        num_parts=2, target_part_rows=100, resume=False)
-    res = engine.reserve_part_range(out, 4, "encode")
-    reserved = engine.reserved_parts(out)
-    assert reserved == {2, 3, 4, 5}
-    more = spark.range(200, 260).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    more.repartition(2).write.format("sparkcodec").mode("append").save(out)
-    written = set(engine.snapshots(out)[-1]["new_parts"])
-    assert len(written) == 2 and not written & reserved, written
-    assert min(written) >= 6
-    engine.release_part_range(out, res)
-    assert engine.decode_table(spark, out).count() == 260
-
-
-def test_reservation_respects_crashed_pending_append(spark, tmp_path):
-    """reserve_part_range must not hand out ids inside a crashed
-    exclusive append's planned range (its parts may have no checkpoints
-    yet but WILL be rewritten by a resume): bounded pendings raise the
-    floor past base+num_parts; unbounded ones (no recorded part count)
-    refuse with the resume/vacuum remedies."""
-    import json as _json
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from sparkcodec.engine import (
-        ConcurrentWriterError,
-        release_part_range,
-        reserve_part_range,
-    )
-
-    out = str(tmp_path / "t")
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    from sparkcodec.engine import encode_table
-
-    encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                 num_parts=2, resume=False)
-    meta = _json.load(open(f"{out}/_table_meta.json"))
-    cfg = {k: meta[k] for k in ("num_parts", "layout", "cluster_by",
-                                "salt_by", "columns", "zorder_by",
-                                "target_part_rows")}
-    cfg["num_parts"] = 6
-    with open(f"{out}/_pending_append.json", "w") as fh:
-        _json.dump({"base": 3, "config": cfg, "branch": None}, fh)
-    res = reserve_part_range(out, 4, "test")
-    assert res["base"] >= 3 + 6, res  # past the crashed run's whole range
-    release_part_range(out, res)
-    cfg2 = dict(cfg, num_parts=None)  # unbounded: aligned/derived count
-    with open(f"{out}/_pending_append.json", "w") as fh:
-        _json.dump({"base": 3, "config": cfg2, "branch": None}, fh)
-    with _pytest.raises(ConcurrentWriterError, match="unbounded part count"):
-        reserve_part_range(out, 4, "test")
-    import os as _os
-
-    _os.remove(f"{out}/_pending_append.json")
-
-
-def test_unreadable_reservation_protects_generously(spark, tmp_path):
-    """An unreadable reservation body must protect MORE than one part id:
-    the range's true extent is unknowable, and an n=1 guess would let a
-    second writer reserve inside an in-flight writer's range."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from sparkcodec.engine import encode_table, reserve_part_range, reserved_parts
-
-    out = str(tmp_path / "t")
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                 num_parts=2, resume=False)
-    _os.makedirs(f"{out}/_reservations", exist_ok=True)
-    with open(f"{out}/_reservations/0000000005.json", "w") as fh:
-        fh.write("{corrupt")  # transiently unreadable body
-    assert len(reserved_parts(out)) > 1000  # generous, not n=1
-    res = reserve_part_range(out, 2, "test")
-    assert res["base"] >= 5 + (1 << 20)
-
-
-def test_optimistic_commit_stamps_commit_time_schema(spark, tmp_path):
-    """An optimistic append planned before a concurrent add-column
-    evolution must stamp the MERGED schema on its entry: the entry
-    becomes the tip and default reads overlay the tip's schema, so the
-    planning-time schema would hide the concurrently added column."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from sparkcodec.engine import (
-        _commit_optimistic_append,
-        decode_table,
-        encode_table,
-        snapshots,
-    )
-
-    out = str(tmp_path / "t")
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                 num_parts=1, resume=False)
-    # concurrent widen: an append lands column "extra" at the tip
-    encode_table(
-        spark,
-        spark.range(100, 150).select(
-            F.col("id"), (F.col("id") % 3).alias("g"),
-            F.lit(1).cast("long").alias("extra"),
-        ),
-        out, append=True, cluster_by=["g"], salt_by=["id"], num_parts=1,
-    )
-    assert "extra" in decode_table(spark, out).columns
-    # a stale-planned optimistic commit (planning meta predates "extra")
-    stale_meta = _json.load(open(f"{out}/_table_meta.json"))
-    stale_meta = dict(stale_meta, columns=["id", "g"],
-                      schema={"id": "i64", "g": "i64"})
-    entry = {"new_parts": [], "n_rows": 0, "enc_bytes": 0,
-             "layout": "clustered", "columns": ["id", "g"],
-             "schema": {"id": "i64", "g": "i64"}, "ts": 0.0}
-    _commit_optimistic_append(out, entry, stale_meta, None, None)
-    tip = snapshots(out)[-1]
-    assert "extra" in tip["schema"], tip
-    assert "extra" in decode_table(spark, out).columns  # still readable
-
-
 def test_bloom_key_nonfinite_decimal():
     """Non-finite Decimal probes key like their float twins instead of
     crashing the read."""
@@ -3558,7 +3118,6 @@ def test_rewrite_keeps_rows_after_evolution(spark, tmp_path, history):
 _HISTORIES = [
     "rollback_readd_append",
     "rollback_readd_datasource_append",
-    "rollback_readd_optimistic_append",
     "rollback_readd_upsert",
     "branch_readd_append",
     "branch_readd_upsert",
@@ -3618,9 +3177,6 @@ def test_writers_evolve_the_resolved_schema(spark, tmp_path, history):
             spark.dataSource.register(SparkcodecDataSource)
             more.repartition(2).write.format("sparkcodec").mode(
                 "append").save(out)
-        elif kind == "optimistic_append":
-            encode_table(spark, more, out, append=True, num_parts=1,
-                         concurrency="optimistic")
         else:
             upsert_rows(spark, df.where("id = 0"), out, "id", num_parts=1)
         want = (["id", "v"], rows40 if kind == "upsert" else rows60)
@@ -4080,51 +3636,6 @@ def test_add_column_with_default(spark, tmp_path):
     assert "score" not in pre.columns
 
 
-def test_optimistic_append_refuses_on_field_id_conflict(spark, tmp_path):
-    """Two writers that each planned the SAME next field id for different
-    new columns must not both commit optimistically: the loser's parts
-    stamped a field id the re-merge reassigns, so its commit refuses
-    loudly instead of persisting conflicting column identities."""
-    import json as _json
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from sparkcodec.engine import (
-        ConcurrentWriterError,
-        _commit_optimistic_append,
-        encode_table,
-    )
-
-    out = str(tmp_path / "fidconflict")
-    df = spark.range(50).select(F.col("id"), (F.col("id") % 2).alias("g"))
-    encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
-                 num_parts=1, resume=False)
-    base_meta = _json.load(open(f"{out}/_table_meta.json"))
-    # writer A landed column "a" at the tip and took the next field id
-    encode_table(
-        spark,
-        spark.range(50, 60).select(
-            F.col("id"), (F.col("id") % 2).alias("g"),
-            F.lit(1).cast("long").alias("a"),
-        ),
-        out, append=True, cluster_by=["g"], salt_by=["id"], num_parts=1,
-    )
-    # writer B planned column "b" against the PRE-A meta: its planning
-    # run allocated the same next_field_id for "b" that A used for "a"
-    planned = dict(
-        base_meta,
-        columns=base_meta["columns"] + ["b"],
-        schema={**base_meta["schema"], "b": "i64"},
-        field_ids={**base_meta["field_ids"], "b": base_meta["next_field_id"]},
-    )
-    entry = {"new_parts": [], "n_rows": 0, "enc_bytes": 0,
-             "layout": "clustered", "columns": planned["columns"],
-             "schema": planned["schema"], "ts": 0.0}
-    with _pytest.raises(ConcurrentWriterError, match="field ids"):
-        _commit_optimistic_append(out, entry, planned, None, None)
-
-
 def test_manifests_since_full_ignores_branch_and_bare_markers():
     """The consolidation counter must count only main-chain manifests and
     reset only on genuinely FULL-coverage ones — branch commits and bare
@@ -4143,48 +3654,3 @@ def test_manifests_since_full_ignores_branch_and_bare_markers():
     snaps.append({"id": 7, "manifest": "m7", "manifest_full": True})
     assert _manifests_since_full(snaps) == 0
 
-
-def test_writer_lock_wait_is_bounded_under_turnover(tmp_path, monkeypatch):
-    """The blocking acquire extends its deadline at most once (for the
-    holder observed at entry): continuous holder turnover must not make
-    the timeout parameter meaningless."""
-    import json as _json
-    import time as _time
-
-    import pytest as _pytest
-
-    from sparkcodec import engine as E
-
-    out = str(tmp_path / "lk")
-    import os as _os
-
-    _os.makedirs(out, exist_ok=True)
-    key = f"{out}/_writer.lock"
-
-    def refresh_holder():
-        # a fresh foreign holder every observation, each with a long lease
-        _json.dump(
-            {"ts": _time.time(), "lease_sec": 3.0, "op": "x",
-             "pid": 999999, "token": "t"},
-            open(key, "w"),
-        )
-
-    refresh_holder()
-    orig_read = E._get_fs(out).read_bytes
-
-    def read_and_refresh(path):
-        b = orig_read(path)
-        if path == key:
-            refresh_holder()  # simulate turnover on every peek
-        return b
-
-    monkeypatch.setattr(E._get_fs(out), "read_bytes", read_and_refresh)
-    monkeypatch.setattr(E, "_LOCK_EXTEND_SLACK", 0.5)
-    t0 = _time.time()
-    with _pytest.raises(E.ConcurrentWriterError):
-        E._acquire_writer_lock_blocking(out, "test", timeout=0.5, lease_sec=3.0)
-    waited = _time.time() - t0
-    # one extension for the entry-time holder (3s lease + 0.5s slack) is
-    # allowed; unbounded re-extension would never return at all (every
-    # peek re-arms the deadline under turnover)
-    assert waited < 8.0, waited
