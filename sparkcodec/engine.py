@@ -3,8 +3,9 @@
 Physical layout of an encoded table at ``out_dir``:
 
     _table_meta.json                     # layout config; create-time schema
-    _snapshots.jsonl                     # snapshot log: parts + schema state
-                                         # (object stores: _snapshots.d/)
+    _snapshots.d/<seq>.json              # snapshot log, one object per
+                                         # entry: parts + schema state
+    _manifests/m-<id>.parquet            # per-entry pruning metadata
     blocks/col=<column>/part_<id>.parquet   # one blocks file per (column, part)
     blocks/col=_checkpoint/part_<id>.parquet# lineage row, written LAST per part
 
@@ -37,6 +38,7 @@ Scale design:
 from __future__ import annotations
 
 import dataclasses
+import io
 import json
 import os
 import re
@@ -312,23 +314,15 @@ def _exists(path: str) -> bool:
 
 
 def _read_json(path: str):
-    fs = _get_fs(path)
-    if fs.native_paths:
-        with open(path) as fh:
-            return json.load(fh)
-    return json.loads(fs.read_bytes(path))
+    return json.loads(_get_fs(path).read_bytes(path))
 
 
-def _append_log_line(path: str, obj: dict) -> None:
-    """One committed log entry = one appended line (the atomic publish
-    point on local filesystems; object-store FS impls emulate per their
-    documented strategy — see fs.py)."""
-    _get_fs(path).append_line(path, json.dumps(obj, separators=(",", ":")) + "\n")
-
-
-SNAPDIR = "_snapshots.d"  # per-entry snapshot objects (object stores)
-# write-once log objects, cached after first GET (see snapshots())
-_SNAP_OBJ_CACHE: dict[str, list] = {}
+SNAPDIR = "_snapshots.d"  # the snapshot log: one object per entry
+# the one-file log of older engines: still read as the log's prefix
+LEGACY_SNAPLOG = "_snapshots.jsonl"
+# log dir -> ((name, bytes) of its lowest-seq object, {name: entries}):
+# log objects are write-once, so each is parsed once (see snapshots())
+_SNAP_OBJ_CACHE: dict[str, tuple] = {}
 
 
 def _snapdir_objects(fs, d: str) -> list[tuple[int, str]]:
@@ -344,31 +338,24 @@ def _snapdir_objects(fs, d: str) -> list[tuple[int, str]]:
 def _snapshot_log_append(out_dir: str, entry: dict) -> None:
     """Commit one snapshot entry — THE atomic publish point.
 
-    Local filesystems: a single O_APPEND line on ``_snapshots.jsonl``
-    (POSIX-atomic, zero overhead — every prior round's behavior).
-
-    Object stores (non-native FS): stores have no atomic append, and
-    read-modify-PUT of a whole log is O(n^2) bytes and can tear on a
-    crash. Instead each entry is its own object
-    ``_snapshots.d/<seq>.json`` published with a CONDITIONAL PUT
-    (If-None-Match — ``fs.create_exclusive``): a sequence collision (a
-    crashed commit's leftover, a stale lease's former holder) just
-    advances seq and re-PUTs. Every log object —
-    entry or squash — claims the SAME name for a given seq, so exactly
-    one writer wins each seq: squash-ness rides INSIDE the object (a
-    ``{"_squash": 1}`` sentinel first line) rather than in a different
-    filename, which would let an entry and a squash land at one seq and
-    silently erase the entry. Readers merge the ordered objects; a
-    squash object REPLACES everything before it (how
-    ``expire_snapshots`` and the fresh-run reset rewrite history
-    without an atomic multi-delete); the legacy ``<seq>.squash.json``
-    suffix from earlier layouts is still honored on read."""
-    fs = _get_fs(out_dir)
-    if fs.native_paths:
-        _append_log_line(_j(out_dir, "_snapshots.jsonl"), entry)
-        return
+    Each entry is its own object ``_snapshots.d/<seq>.json``, published
+    with a CONDITIONAL PUT (``fs.create_exclusive``: link(2) locally,
+    If-None-Match on object stores) — one protocol on every filesystem,
+    as Delta Lake's put-if-absent commit. Object stores have no atomic
+    append, and read-modify-PUT of a whole log is O(n^2) bytes and can
+    tear on a crash. A sequence collision (a crashed commit's leftover,
+    a stale lease's former holder) just advances seq and re-PUTs. Every
+    log object — entry or squash — claims the SAME name for a given
+    seq, so exactly one writer wins each seq: squash-ness rides INSIDE
+    the object (a ``{"_squash": 1}`` sentinel first line) rather than in
+    a different filename, which would let an entry and a squash land at
+    one seq and silently erase the entry. Readers merge the ordered
+    objects; a squash object REPLACES everything before it (how
+    ``_squash_log`` rewrites history without an atomic multi-delete);
+    the legacy ``<seq>.squash.json`` suffix from earlier layouts is
+    still honored on read."""
     data = (json.dumps(entry, separators=(",", ":")) + "\n").encode()
-    _snapdir_put(fs, _j(out_dir, SNAPDIR), data)
+    _snapdir_put(_get_fs(out_dir), _j(out_dir, SNAPDIR), data)
 
 
 SQUASH_SENTINEL = '{"_squash":1}'
@@ -383,7 +370,32 @@ def _snapdir_put(fs, d: str, data: bytes) -> int:
     seq = (objs[-1][0] + 1) if objs else 1
     while not fs.create_exclusive(_j(d, f"{seq:010d}.json"), data):
         seq += 1
+    cached = _SNAP_OBJ_CACHE.get(d)
+    if cached is not None:
+        # a directory re-created by a byte copy can hold an older
+        # table's parse under this name
+        cached[1].pop(f"{seq:010d}.json", None)
     return seq
+
+
+def _squash_log(fs, out_dir: str, entries: list[dict]) -> None:
+    """Replace the whole snapshot log with ``entries``. A squash object
+    (sentinel first line) at a fresh seq supersedes every earlier log
+    object and any legacy jsonl the moment it lands (readers replace
+    history when they hit it); THEN the dead log files go — a crash
+    between the two leaves files readers already ignore. Log-object
+    paths stay write-once: later entries continue at higher seqs."""
+    d = _j(out_dir, SNAPDIR)
+    objs = _snapdir_objects(fs, d)
+    body = "".join(
+        json.dumps(s, separators=(",", ":")) + "\n" for s in entries
+    )
+    _snapdir_put(fs, d, (SQUASH_SENTINEL + "\n" + body).encode())
+    legacy = _j(out_dir, LEGACY_SNAPLOG)
+    if fs.exists(legacy):
+        fs.remove(legacy)
+    for _seq, name in objs:
+        fs.remove(_j(d, name))
 
 
 def _pq_read(path: str, **kw) -> pa.Table:
@@ -400,9 +412,8 @@ def _pq_file(path: str) -> pq.ParquetFile:
 
 
 def _atomic_write_blocks(path: str, rows: list[dict]) -> int:
-    """Write one (column, part) blocks file atomically; returns bytes.
-    Local paths: tmp+rename. Registered object-store schemes: one
-    whole-object PUT (the fs seam's atomic-publish primitive).
+    """Write one (column, part) blocks file atomically (one
+    ``fs.put_atomic`` of the whole file); returns bytes.
 
     One parquet ROW GROUP per block row: readers can then fetch exactly
     the blocks that survive zone-map pruning (`read_row_groups`), so
@@ -411,32 +422,15 @@ def _atomic_write_blocks(path: str, rows: list[dict]) -> int:
     Metadata overhead is a few hundred bytes per block against multi-MB
     payloads."""
     table = pa.Table.from_pylist(rows, schema=BLOCKS_ARROW_SCHEMA)
-    fs = _get_fs(path)
-    if fs.native_paths:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        # payloads are pre-compressed by the codecs
-        pq.write_table(table, tmp, compression="none", row_group_size=1)
-        size = os.path.getsize(tmp)
-        os.replace(tmp, path)
-        return size
-    import io
-
     buf = io.BytesIO()
+    # payloads are pre-compressed by the codecs
     pq.write_table(table, buf, compression="none", row_group_size=1)
-    return fs.put_atomic(path, buf.getvalue())
+    return _get_fs(path).put_atomic(path, buf.getvalue())
 
 
 def _atomic_write_json(path: str, obj) -> None:
     """Atomic publish so concurrent readers never see a truncated file."""
-    fs = _get_fs(path)
-    if fs.native_paths:
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(obj, fh, indent=1)
-        os.replace(tmp, path)
-        return
-    fs.put_atomic(path, json.dumps(obj, indent=1).encode())
+    _get_fs(path).put_atomic(path, json.dumps(obj, indent=1).encode())
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -1143,20 +1137,9 @@ def write_manifest(out_dir: str, parts, pm: dict | None = None) -> str | None:
         [("part_id", pa.int64()), ("n_rows", pa.int64()), ("meta", pa.string())]
     ))
     name = f"m-{uuid.uuid4().hex[:16]}.parquet"
-    path = _j(out_dir, MANIFESTDIR, name)
-    fs = _get_fs(out_dir)
-    import io
-
     buf = io.BytesIO()
     pq.write_table(table, buf, compression="zstd")
-    if fs.native_paths:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "wb") as fh:
-            fh.write(buf.getvalue())
-        os.replace(tmp, path)
-    else:
-        fs.put_atomic(path, buf.getvalue())
+    _get_fs(out_dir).put_atomic(_j(out_dir, MANIFESTDIR, name), buf.getvalue())
     return name
 
 
@@ -1222,32 +1205,11 @@ def part_meta(
                 out.setdefault(pid, d)
     if needed is None:
         needed = completed_parts(out_dir)
-    missing = sorted(needed - out.keys())
-    if missing:
-        d = _j(out_dir, "blocks", f"col={CHECKPOINT_COL}")
-        fs = _get_fs(out_dir)
-        if fs.native_paths and len(missing) > 64:
-            # legacy bulk path: one pyarrow dataset scan beats thousands
-            # of per-file opens when (almost) nothing is manifested
-            import pyarrow.dataset as ds
-
-            tbl = ds.dataset(d, format="parquet").to_table(
-                columns=["part_id", "n_rows", "meta"]
-            )
-            want = set(missing)
-            for pid, n, meta in zip(
-                tbl.column("part_id").to_pylist(),
-                tbl.column("n_rows").to_pylist(),
-                tbl.column("meta").to_pylist(),
-            ):
-                if int(pid) in want:
-                    out[int(pid)] = _prune_meta_of(meta, n)
-        else:
-            for pid in missing:
-                try:
-                    out[pid] = _checkpoint_prune_meta(out_dir, pid)
-                except FileNotFoundError:
-                    pass  # expired or never-checkpointed id: no metadata
+    for pid in sorted(needed - out.keys()):
+        try:
+            out[pid] = _checkpoint_prune_meta(out_dir, pid)
+        except FileNotFoundError:
+            pass  # expired or never-checkpointed id: no metadata
     return out
 
 
@@ -1759,51 +1721,29 @@ def encode_table(
     # object-store filesystems (fs.register_filesystem) both work —
     # workers resolve the same registry at decode/encode kernel time
     fs = _get_fs(out_dir)
-    # a fresh (resume=False, non-append) run erases the earlier table:
-    # its parts, manifests, log and refs
+    # a fresh (resume=False, non-append) run erases the earlier table.
+    # The log goes FIRST, superseded by an empty squash, so a crash at
+    # any later step leaves a log that names no deleted file.
     if not resume and not append:
+        if fs.exists(_j(out_dir, LEGACY_SNAPLOG)) or _snapdir_objects(
+            fs, _j(out_dir, SNAPDIR)
+        ):
+            _squash_log(fs, out_dir, [])
         blocks_dir = _j(out_dir, "blocks")
+        for cdir in fs.listdir(blocks_dir):
+            for f in fs.listdir(_j(blocks_dir, cdir)):
+                fs.remove(_j(blocks_dir, cdir, f))
         mdir = _j(out_dir, MANIFESTDIR)
-        if fs.native_paths:
-            import shutil
-
-            if os.path.isdir(blocks_dir):
-                shutil.rmtree(blocks_dir)
-            if os.path.isdir(mdir):
-                shutil.rmtree(mdir)  # manifests of the erased history
-        else:
-            for cdir in fs.listdir(blocks_dir):
-                for f in fs.listdir(_j(blocks_dir, cdir)):
-                    fs.remove(_j(blocks_dir, cdir, f))
-            for f in fs.listdir(mdir):
-                fs.remove(_j(mdir, f))
-        # Reset the per-entry log by SUPERSEDING, not deleting — and do
-        # it BEFORE removing the legacy jsonl (a reader merging jsonl +
-        # objects between a jsonl delete and the squash would resolve a
-        # parent-truncated chain): an empty squash at a fresh seq erases
-        # ALL history (jsonl prefix included) for every reader at one
-        # atomic PUT, while keeping log-object paths write-once FOREVER
-        # — the new table's entries continue at higher seqs, so no
-        # process (this one or a concurrent reader on another machine)
-        # can ever serve a stale cached object under a reused path.
-        if not fs.native_paths:
-            stale = _snapdir_objects(fs, _j(out_dir, SNAPDIR))
-            if stale or fs.exists(_j(out_dir, "_snapshots.jsonl")):
-                d = _j(out_dir, SNAPDIR)
-                _snapdir_put(fs, d, (SQUASH_SENTINEL + "\n").encode())
-                for _seq, name in stale:
-                    obj = _j(d, name)
-                    fs.remove(obj)
-                    _SNAP_OBJ_CACHE.pop(obj, None)
+        for f in fs.listdir(mdir):
+            fs.remove(_j(mdir, f))  # manifests of the erased history
+        for ref in fs.listdir(_j(out_dir, REFDIR)):
+            fs.remove(_j(out_dir, REFDIR, ref))  # tags of the erased history
         for extra in (
-            "_aligned_fingerprint", "_log.jsonl", "_snapshots.jsonl",
-            "_pending_append.json",
+            "_pending_append.json", "_aligned_fingerprint", "_log.jsonl",
         ):
             p = _j(out_dir, extra)
             if fs.exists(p):
                 fs.remove(p)
-        for ref in fs.listdir(_j(out_dir, REFDIR)):
-            fs.remove(_j(out_dir, REFDIR, ref))  # tags of the erased history
         # part ids are about to be REUSED for different data — the
         # progress cache's immutability premise no longer holds here
         _PROGRESS_CACHE.pop(out_dir, None)
@@ -2051,9 +1991,14 @@ def encode_table(
 
     rows = [r.asDict() for r in summary]
     if rows:
+        # the per-part encode summary; each part's lineage stays in its
+        # checkpoint file only
         _get_fs(out_dir).append_line(
             _j(out_dir, "_log.jsonl"),
-            "".join(json.dumps(dict(r)) + "\n" for r in rows),
+            "".join(
+                json.dumps({k: v for k, v in r.items() if k != "lineage"}) + "\n"
+                for r in rows
+            ),
         )
 
     # snapshot commit LAST (Iceberg posture): the entry appears only once
@@ -2125,41 +2070,21 @@ def encode_table(
     return result
 
 
-# (path -> ((size, mtime_ns), parsed entries)) — see snapshots()
-_SNAPLOG_CACHE: dict[str, tuple] = {}
-
-
 def snapshots(out_dir: str) -> list[dict]:
     """Committed snapshot entries, oldest first.
 
-    Local tables read ``_snapshots.jsonl``. Object-store tables merge
-    the per-entry objects of ``_snapshots.d/`` in sequence order (see
-    :func:`_snapshot_log_append`); a squash object (sentinel first
+    Merges the per-entry objects of ``_snapshots.d/`` in sequence order
+    (see :func:`_snapshot_log_append`); a squash object (sentinel first
     line, or the legacy ``.squash.json`` name) replaces everything
-    before it, and any legacy ``_snapshots.jsonl`` (written by the old
-    read-modify-PUT emulation) is the prefix."""
-    path = _j(out_dir, "_snapshots.jsonl")
+    before it, and a legacy ``_snapshots.jsonl`` (the one-file log of
+    older engines) is the prefix. Entries are treated as immutable by
+    every caller."""
     fs = _get_fs(out_dir)
-    if fs.native_paths:
-        if not fs.exists(path):
-            return []
-        # stat-keyed parse cache: driver-side maintenance walks call this
-        # many times per operation, and a 10k-commit log is a 10k-line
-        # JSON parse each time. Appends grow the size and os.replace
-        # (expire's squash) changes (size, mtime_ns), so any committed
-        # change — same-process or a concurrent writer's — invalidates.
-        # Entries are treated as immutable by every caller.
-        st = os.stat(path)
-        key = (st.st_size, st.st_mtime_ns)
-        cached = _SNAPLOG_CACHE.get(path)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        with open(path) as fh:
-            out = [json.loads(line) for line in fh if line.strip()]
-        if len(_SNAPLOG_CACHE) > 256:  # bound driver memory
-            _SNAPLOG_CACHE.clear()
-        _SNAPLOG_CACHE[path] = (key, out)
-        return out
+    d, legacy = _j(out_dir, SNAPDIR), _j(out_dir, LEGACY_SNAPLOG)
+
+    def parse(raw: bytes) -> list[dict]:
+        return [json.loads(ln) for ln in raw.decode().splitlines() if ln.strip()]
+
     # LIST-then-GET race with a concurrent expire (readers take no lock):
     # an object listed here may be deleted before we read it — but every
     # deleter (expire, fresh-run reset) FIRST publishes a squash object
@@ -2168,36 +2093,31 @@ def snapshots(out_dir: str) -> list[dict]:
     # squash and the merge is complete.
     for _attempt in range(5):
         try:
-            out: list[dict] = []
-            if fs.exists(path):
-                out = [
-                    json.loads(line)
-                    for line in fs.read_bytes(path).decode().splitlines()
-                    if line.strip()
-                ]
-            for _seq, name in _snapdir_objects(fs, _j(out_dir, SNAPDIR)):
-                obj_path = _j(out_dir, SNAPDIR, name)
-                cached = _SNAP_OBJ_CACHE.get(obj_path)
-                if cached is None:
-                    raw = fs.read_bytes(obj_path)
-                    cached = [
-                        json.loads(ln)
-                        for ln in raw.decode().splitlines()
-                        if ln.strip()
-                    ]
-                    if len(_SNAP_OBJ_CACHE) > 8192:  # bound driver memory
-                        _SNAP_OBJ_CACHE.clear()
-                    # log objects are write-once (conditional PUT, never
-                    # rewritten), so caching them is sound and collapses
-                    # the per-call GET storm to new entries only
-                    _SNAP_OBJ_CACHE[obj_path] = cached
-                if cached and "_squash" in cached[0]:
+            out = parse(fs.read_bytes(legacy)) if fs.exists(legacy) else []
+            objs = _snapdir_objects(fs, d)
+            if not objs:
+                return out
+            # log objects are write-once, but a table deleted and
+            # re-created at this path restarts at seq 1: the lowest
+            # object's bytes (one small GET) tell the table apart
+            first = (objs[0][1], fs.read_bytes(_j(d, objs[0][1])))
+            cached = _SNAP_OBJ_CACHE.get(d)
+            if cached is None or cached[0] != first:
+                if len(_SNAP_OBJ_CACHE) > 256:  # bound driver memory
+                    _SNAP_OBJ_CACHE.clear()
+                cached = _SNAP_OBJ_CACHE[d] = (first, {first[0]: parse(first[1])})
+            parsed = cached[1]
+            for _seq, name in objs:
+                lines = parsed.get(name)
+                if lines is None:
+                    lines = parsed[name] = parse(fs.read_bytes(_j(d, name)))
+                if lines and "_squash" in lines[0]:
                     # sentinel first line: squash owns all history before
-                    out = list(cached[1:])
+                    out = list(lines[1:])
                 elif name.endswith(".squash.json"):
-                    out = list(cached)  # legacy squash-by-filename layout
+                    out = list(lines)  # legacy squash-by-filename layout
                 else:
-                    out.extend(cached)
+                    out.extend(lines)
             return out
         except FileNotFoundError:
             continue
@@ -5208,26 +5128,7 @@ def expire_snapshots(out_dir: str, keep_last: int = 1) -> dict:
         # handed out again and old parts never alias a new column onto
         # the dead field's bytes
         first["last_field_id"] = _max_field_id(snaps)
-    body = "".join(
-        json.dumps(s, separators=(",", ":")) + "\n" for s in squashed
-    ).encode()
-    if fs.native_paths:
-        fs.put_atomic(_j(out_dir, "_snapshots.jsonl"), body)
-    else:
-        # object stores: a squash object (sentinel first line) atomically
-        # supersedes all earlier log objects the moment it lands (readers
-        # replace history when they hit it), THEN the dead objects delete
-        # best-effort — a crash between the two leaves stale objects
-        # readers already ignore
-        d = _j(out_dir, SNAPDIR)
-        objs = _snapdir_objects(fs, d)
-        seq = _snapdir_put(fs, d, (SQUASH_SENTINEL + "\n").encode() + body)
-        for old_seq, name in objs:
-            if old_seq < seq:
-                fs.remove(_j(d, name))
-        legacy = _j(out_dir, "_snapshots.jsonl")
-        if fs.exists(legacy):
-            fs.remove(legacy)
+    _squash_log(fs, out_dir, squashed)
     # the files of dropped entries (their parts, their manifests and the
     # roots' superseded originals) die only AFTER the squash published —
     # a crash before this point leaves orphans no retained entry names,

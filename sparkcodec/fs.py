@@ -1,6 +1,7 @@
-"""Filesystem seam for table I/O: local paths stay on the fast
-open/rename path; URL schemes dispatch to a registered FileSystem so the
-engine can target object stores (S3/GCS-style) without rename.
+"""Filesystem seam for table I/O: every table file the engine writes or
+reads goes through a :class:`FileSystem`; URL schemes dispatch to a
+registered implementation so the engine can target object stores
+(S3/GCS-style) that have no rename.
 
 The engine's durability protocol has exactly three primitives:
 
@@ -9,27 +10,27 @@ The engine's durability protocol has exactly three primitives:
   a single PUT is already atomic — no rename needed, which is exactly
   why the seam exists (S3 has no rename; emulating tmp+rename there
   would be copy+delete and non-atomic).
-* ``open_read(path)`` — binary file-like for pyarrow readers.
-* ``append_line(path, line)`` — the metrics log (``_log.jsonl``).
+* ``create_exclusive(path, data)`` — publish only if absent (the
+  writer lease and the snapshot log's per-entry objects
+  ``_snapshots.d/<seq>.json``; see engine._snapshot_log_append).
+  Local: tmp file + ``link``. Object stores: a conditional PUT.
+* ``append_line(path, line)`` — the metrics log (``_log.jsonl``) only.
   Local: O_APPEND single write. Object stores don't append: the
   registered FS must emulate (the bundled fake uses read-modify-PUT,
-  acceptable under the single-writer lock). The SNAPSHOT log never uses
-  append on object stores: the engine writes per-entry objects
-  ``_snapshots.d/<seq>.json`` via ``create_exclusive`` (conditional
-  PUT) and merges them on read — see engine._snapshot_log_append.
+  acceptable under the single-writer lock).
 
-Everything else (exists / list / remove / makedirs) is bookkeeping.
+Everything else (open_read / exists / list / remove / makedirs) is
+bookkeeping.
 
 Register a scheme with :func:`register_filesystem`; ``get_fs`` picks the
-implementation from the path. ``LocalFS`` handles plain paths and is the
-behavior all prior rounds shipped — byte-identical layout, zero overhead
-(no wrapper objects on the hot path: pyarrow still receives a plain path
-so it can mmap / pread directly).
+implementation from the path. ``LocalFS`` handles plain paths; its
+``native_paths`` lets pyarrow read a plain path (mmap / pread) instead
+of a file-like.
 
-``MockObjectFS`` (scheme ``mock``) backs onto a local directory but goes
-through the object-store protocol — whole-object PUTs, no rename, no
-O_APPEND — so tests exercise the seam's semantics without a cloud
-account.
+``MockObjectFS`` (scheme ``mock``) maps ``mock:///abs/dir`` onto a local
+directory and differs from ``LocalFS`` only where object stores do: no
+native paths for pyarrow, and no append — so tests exercise the
+object-store protocol without a cloud account.
 """
 
 from __future__ import annotations
@@ -77,8 +78,9 @@ class FileSystem:
 
     def create_exclusive(self, path: str, data: bytes) -> bool:
         """Create ``path`` with ``data`` only if it does not exist;
-        False when it already does. The writer-lock primitive: O_EXCL
-        locally; object stores use a conditional PUT (If-None-Match)."""
+        False when it already does. The writer-lock and log-entry
+        primitive: tmp+link locally; object stores use a conditional
+        PUT (If-None-Match)."""
         raise NotImplementedError
 
     def claim_stale(self, path: str) -> bool:
@@ -91,83 +93,20 @@ class FileSystem:
         raise NotImplementedError
 
 
+# in-flight names (a PUT's or claim's private file): never listed, as an
+# object store never lists a PUT before it completes
+_TMP, _TOMB = ".tmp-", ".tomb-"
+
+
 class LocalFS(FileSystem):
-    """Plain paths: tmp+rename publishes, O_APPEND logs — POSIX-atomic
-    on local/NFS/fuse mounts (the contract every prior round shipped)."""
+    """Plain paths: tmp+rename publishes, tmp+link creates exclusively,
+    O_APPEND appends — POSIX-atomic on local/NFS/fuse mounts."""
 
     native_paths = True
 
-    def open_read(self, path: str):
-        return open(path, "rb")
-
-    def put_atomic(self, path: str, data: bytes) -> int:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        os.replace(tmp, path)
-        return len(data)
-
-    def append_line(self, path: str, line: str) -> None:
-        with open(path, "a") as fh:
-            fh.write(line)
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-    def listdir(self, path: str) -> list[str]:
-        return os.listdir(path) if os.path.isdir(path) else []
-
-    def remove(self, path: str) -> None:
-        os.remove(path)
-
-    def makedirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
-    def getsize(self, path: str) -> int:
-        return os.path.getsize(path)
-
-    def create_exclusive(self, path: str, data: bytes) -> bool:
-        # Publish the BODY atomically: write a private tmp file, then
-        # link(2) it into place (EEXIST = lost the race). An O_EXCL
-        # create followed by a write would expose a momentarily-EMPTY
-        # lock file — a racing lease acquirer reading it would see no
-        # timestamp and could steal a live writer's lease.
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.x-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "wb") as fh:
-            fh.write(data)
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            return False
-        finally:
-            os.remove(tmp)
-        return True
-
-    def claim_stale(self, path: str) -> bool:
-        tomb = f"{path}.tomb-{uuid.uuid4().hex[:8]}"
-        try:
-            os.rename(path, tomb)  # atomic: one renamer of this inode wins
-        except FileNotFoundError:
-            return False  # another claimer already took it
-        os.remove(tomb)
-        return True
-
-
-class MockObjectFS(FileSystem):
-    """Object-store semantics over a local backing directory, for tests:
-    ``mock:///abs/dir/...`` maps to ``/abs/dir/...`` but every write is a
-    whole-object atomic PUT (no rename visible to the protocol, no
-    appends — ``append_line`` is read-modify-PUT, safe only under the
-    single-writer lock, mirroring what a naive S3 log impl would do)."""
-
-    native_paths = False
-
-    @staticmethod
-    def _local(path: str) -> str:
-        assert path.startswith("mock://"), path
-        return path[len("mock://") :]
+    def _local(self, path: str) -> str:
+        """The backing local path of ``path``."""
+        return path
 
     def open_read(self, path: str):
         return open(self._local(path), "rb")
@@ -175,21 +114,15 @@ class MockObjectFS(FileSystem):
     def put_atomic(self, path: str, data: bytes) -> int:
         p = self._local(path)
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        # simulate an atomic PUT: the object appears fully-written or not
-        # at all (backed by rename INTERNALLY, invisible to the protocol)
-        tmp = f"{p}.put-{uuid.uuid4().hex[:8]}"
+        tmp = f"{p}{_TMP}{uuid.uuid4().hex[:8]}"
         with open(tmp, "wb") as fh:
             fh.write(data)
         os.replace(tmp, p)
         return len(data)
 
     def append_line(self, path: str, line: str) -> None:
-        p = self._local(path)
-        old = b""
-        if os.path.exists(p):
-            with open(p, "rb") as fh:
-                old = fh.read()
-        self.put_atomic(path, old + line.encode())
+        with open(self._local(path), "a") as fh:
+            fh.write(line)
 
     def exists(self, path: str) -> bool:
         return os.path.exists(self._local(path))
@@ -198,7 +131,7 @@ class MockObjectFS(FileSystem):
         p = self._local(path)
         return [
             n for n in (os.listdir(p) if os.path.isdir(p) else [])
-            if ".put-" not in n and ".tomb-" not in n
+            if _TMP not in n and _TOMB not in n
         ]
 
     def remove(self, path: str) -> None:
@@ -211,13 +144,14 @@ class MockObjectFS(FileSystem):
         return os.path.getsize(self._local(path))
 
     def create_exclusive(self, path: str, data: bytes) -> bool:
-        # stands in for a conditional PUT (HTTP If-None-Match: *) — a
-        # real conditional PUT publishes the whole body or nothing, so
-        # the mock must too (tmp + link, not O_EXCL-then-write, or a
-        # racing reader could observe an empty object)
+        # Publish the BODY atomically: write a private tmp file, then
+        # link(2) it into place (EEXIST = lost the race). An O_EXCL
+        # create followed by a write would expose a momentarily-EMPTY
+        # file — a racing lease acquirer reading it would see no
+        # timestamp and could steal a live writer's lease.
         p = self._local(path)
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = f"{p}.put-{uuid.uuid4().hex[:8]}"
+        tmp = f"{p}{_TMP}{uuid.uuid4().hex[:8]}"
         with open(tmp, "wb") as fh:
             fh.write(data)
         try:
@@ -229,15 +163,34 @@ class MockObjectFS(FileSystem):
         return True
 
     def claim_stale(self, path: str) -> bool:
-        # stands in for a conditional delete (HTTP If-Match: <etag>)
         p = self._local(path)
-        tomb = f"{p}.tomb-{uuid.uuid4().hex[:8]}"
+        tomb = f"{p}{_TOMB}{uuid.uuid4().hex[:8]}"
         try:
-            os.rename(p, tomb)
+            os.rename(p, tomb)  # atomic: one renamer of this inode wins
         except FileNotFoundError:
-            return False
+            return False  # another claimer already took it
         os.remove(tomb)
         return True
+
+
+class MockObjectFS(LocalFS):
+    """Object-store semantics over a local backing directory, for tests:
+    ``mock:///abs/dir/...`` maps to ``/abs/dir/...``; pyarrow gets
+    file-likes, never paths, and ``append_line`` is read-modify-PUT
+    (safe only under the single-writer lock, mirroring what a naive S3
+    log impl would do). Its PUTs, conditional PUTs and conditional
+    deletes are LocalFS's, whose renames and links the protocol never
+    sees."""
+
+    native_paths = False
+
+    def _local(self, path: str) -> str:
+        assert path.startswith("mock://"), path
+        return path[len("mock://") :]
+
+    def append_line(self, path: str, line: str) -> None:
+        old = self.read_bytes(path) if self.exists(path) else b""
+        self.put_atomic(path, old + line.encode())
 
 
 _REGISTRY: dict[str, FileSystem] = {"mock": MockObjectFS()}

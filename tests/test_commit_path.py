@@ -25,6 +25,8 @@ from sparkcodec.engine import (
     decode_table,
     delete_rows,
     encode_table,
+    expire_snapshots,
+    optimize_table,
     snapshot_parts,
     snapshots,
     upsert_rows,
@@ -131,8 +133,8 @@ class _FaultFS:
     ``append_line``, ``create_exclusive`` or ``remove``) on any path but
     the writer lock. With ``after=True`` the k-th call lands first and
     then raises, as a crash right after a durable write would. Snapshot
-    log writes (the local log's line, an object store's log object) must
-    run while the lock file exists."""
+    log writes (its objects, and the removal of a legacy one-file log)
+    must run while the lock file exists."""
 
     OPS = ("put_atomic", "append_line", "create_exclusive", "remove")
 
@@ -175,6 +177,18 @@ _OPS = {
         spark, _df(spark, 480, 50).withColumn("v", -F.col("id")), out, "id",
         cluster_by=["id"], num_parts=1,
     ),
+    "optimize": lambda spark, out: optimize_table(
+        spark, out, zorder_by=["g", "v"], num_parts=2
+    ),
+    "expire": lambda spark, out: expire_snapshots(out, keep_last=1),
+    # on a new path
+    "create": lambda spark, out: _encode(
+        spark, _df(spark, 2000, 120), out, num_parts=2
+    ),
+    # resume=False over the existing table: erases it, then creates
+    "recreate": lambda spark, out: _encode(
+        spark, _df(spark, 2000, 120), out, num_parts=2, resume=False
+    ),
 }
 
 
@@ -195,19 +209,42 @@ def test_fault_at_every_commit_step_recovers(
 ):
     """For each mutating filesystem call the driver makes during ``op``
     (counted on a clean run), fail before it and right after it. Then a
-    read shows the prior snapshot's rows or the clean run's; rerunning
-    the op takes the lease, reaches the clean run's rows and commits it
-    exactly once; and ``vacuum_orphans`` leaves only the part files and
-    manifests the log names. A fault right after the last call leaves a
-    finished op (an append rerun would append again), so only vacuum
-    follows it. Python workers are separate processes, so only the
-    driver's steps fail. Local paths and the object-store protocol
-    (``mock://``: manifests and log entries are PUTs) both run."""
+    read shows the prior snapshot's rows or the clean run's (a create or
+    re-create may also leave a table with no committed snapshot, which
+    reads empty, and a create may leave no table at all); rerunning the
+    op takes the lease, reaches the clean run's rows and snapshot count;
+    and
+    ``vacuum_orphans`` leaves only the part files and manifests the log
+    names. A fault right after the last call leaves a finished op (an
+    append rerun would append again), so only vacuum follows it. Python
+    workers are separate processes, so only the driver's steps fail;
+    the data-source writer commits in such a worker, which is why it is
+    not among the ops. Local paths and the object-store protocol
+    (``mock://``) run the same calls: every table file is written
+    through the filesystem."""
     tmpl = scheme + str(tmp_path / "tmpl")
     _encode(spark, _df(spark, 0, 400), tmpl, num_parts=4, resume=False)
     _encode(spark, _df(spark, 400, 100), tmpl, num_parts=2, append=True)
-    prior, prior_parts = _rows(spark, tmpl), snapshot_parts(tmpl)
     real = engine._get_fs(tmpl)
+    on_new_path = op == "create"
+
+    def state(out):
+        try:
+            return _rows(spark, out), snapshot_parts(out)
+        except FileNotFoundError:
+            return None  # no table at ``out``
+
+    allowed = [state(scheme + str(tmp_path / "none") if on_new_path else tmpl)]
+    if op in ("create", "recreate"):
+        # a table with no committed snapshot yet (for a re-create, the
+        # old log is superseded) reads empty
+        allowed.append(([], []))
+
+    def start(name):
+        local = tmp_path / name
+        if not on_new_path:
+            shutil.copytree(tmp_path / "tmpl", local)
+        return local, scheme + str(local)
 
     def run(out, fs):
         monkeypatch.setattr(engine, "_get_fs", lambda path: fs)
@@ -216,23 +253,23 @@ def test_fault_at_every_commit_step_recovers(
         finally:
             monkeypatch.setattr(engine, "_get_fs", lambda path: real)
 
-    clean_out = scheme + str(tmp_path / "clean")
-    shutil.copytree(tmp_path / "tmpl", tmp_path / "clean")
+    _, clean_out = start("clean")
     counter = _FaultFS(real, k=0)
     run(clean_out, counter)
     clean, n_snaps = _rows(spark, clean_out), len(snapshots(clean_out))
-    clean_parts = snapshot_parts(clean_out)
-    assert counter.n >= 1 and n_snaps == len(snapshots(tmpl)) + 1
+    allowed.append(state(clean_out))
+    assert counter.n >= 1
+    assert n_snaps == (
+        1 if op in ("create", "recreate", "expire")
+        else len(snapshots(tmpl)) + 1
+    )
     for k in range(1, counter.n + 1):
         for after in (False, True):
             case = f"k={k}{' after' if after else ''}"
-            local = tmp_path / f"k{k}{'a' if after else 'b'}"
-            shutil.copytree(tmp_path / "tmpl", local)
-            out = scheme + str(local)
+            local, out = start(f"k{k}{'a' if after else 'b'}")
             with pytest.raises(_Fault):
                 run(out, _FaultFS(real, k, after))
-            assert snapshot_parts(out) in (prior_parts, clean_parts), case
-            assert _rows(spark, out) in (prior, clean), case
+            assert state(out) in allowed, case
             try:
                 if not (after and k == counter.n):
                     _OPS[op](spark, out)

@@ -386,7 +386,9 @@ def test_u64_table_decodes_as_int64_bitview(spark, tmp_path):
     with open(f"{out}/_table_meta.json", "w") as fh:
         json.dump({"schema": {"v": "u64"}, "columns": ["v"]}, fh)
     with open(f"{out}/_snapshots.jsonl", "w") as fh:
-        fh.write('{"id":1,"parent":0,"new_parts":[0]}\n')  # commit part 0
+        # commit part 0 in an older engine's one-file log, which still
+        # reads as the log's prefix
+        fh.write('{"id":1,"parent":0,"new_parts":[0]}\n')
     got = sorted(r["v"] for r in decode_table(spark, out).collect())
     want = sorted(int(v) for v in vals.view(np.int64))
     assert got == want
@@ -1635,6 +1637,99 @@ def test_object_store_fresh_run_never_reuses_log_paths(spark, tmp_path):
     assert decode_table(spark, out).count() == 400
 
 
+@pytest.mark.parametrize("scheme", ["", "mock://"])
+def test_table_recreated_at_same_path_reads_its_own_log(spark, tmp_path, scheme):
+    """A table deleted outside the engine and made again at the same
+    path restarts its log at seq 1, under the object names the old
+    table used. Whether the new table is encoded in this process or
+    copied in from elsewhere, reads must see its log, not the old
+    table's cached entries (whose manifests are gone)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from sparkcodec.engine import decode_table, encode_table, snapshots
+
+    def df(lo, n):
+        return spark.range(lo, lo + n).select(F.col("id"), (F.col("id") % 2).alias("g"))
+
+    def check(ids):
+        snaps = snapshots(out)
+        assert len(snaps) == 1, snaps
+        assert (local / "_manifests" / snaps[0]["manifest"]).exists()
+        assert sorted(r.id for r in decode_table(spark, out).collect()) == ids
+
+    local = tmp_path / "t"
+    out = scheme + str(local)
+    encode_table(spark, df(0, 400), out, cluster_by=["g"], num_parts=2)
+    encode_table(spark, df(400, 40), out, cluster_by=["g"], num_parts=1,
+                 append=True)
+    assert decode_table(spark, out).count() == 440
+    shutil.rmtree(local)
+    encode_table(spark, df(1000, 30), out, cluster_by=["g"], num_parts=1)
+    check(list(range(1000, 1030)))
+    # made by another writer (here: encoded elsewhere, then copied in)
+    elsewhere = tmp_path / "other"
+    encode_table(spark, df(2000, 20), scheme + str(elsewhere),
+                 cluster_by=["g"], num_parts=1)
+    shutil.rmtree(local)
+    shutil.copytree(elsewhere, local)
+    check(list(range(2000, 2020)))
+
+
+def test_legacy_one_file_log_reads_then_migrates(spark, tmp_path):
+    """A local table written by an older engine keeps its whole log in
+    ``_snapshots.jsonl``. It reads; an append lands in ``_snapshots.d/``
+    after that prefix; an expire leaves exactly one squash object and
+    removes the old file."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from sparkcodec.engine import (
+        LEGACY_SNAPLOG,
+        SNAPDIR,
+        decode_table,
+        encode_table,
+        expire_snapshots,
+        snapshots,
+    )
+
+    local = tmp_path / "t"
+    out = str(local)
+
+    def df(lo, n):
+        return spark.range(lo, lo + n).select(F.col("id"), (F.col("id") % 2).alias("g"))
+
+    encode_table(spark, df(0, 300), out, cluster_by=["g"], num_parts=2)
+    encode_table(spark, df(300, 30), out, cluster_by=["g"], num_parts=1,
+                 append=True)
+    # the older engine's format: the same entries, one line each, in one
+    # file, and no log objects
+    lines = [
+        ln for p in sorted((local / SNAPDIR).iterdir())
+        for ln in p.read_text().splitlines()
+    ]
+    shutil.rmtree(local / SNAPDIR)
+    (local / LEGACY_SNAPLOG).write_text("".join(ln + "\n" for ln in lines))
+    assert [s["id"] for s in snapshots(out)] == [1, 2]
+    assert decode_table(spark, out).count() == 330
+
+    encode_table(spark, df(330, 20), out, cluster_by=["g"], num_parts=1,
+                 append=True)
+    assert [s["id"] for s in snapshots(out)] == [1, 2, 3]
+    [obj] = sorted((local / SNAPDIR).iterdir())
+    assert [json.loads(ln)["id"] for ln in obj.read_text().splitlines()] == [3]
+    assert decode_table(spark, out).count() == 350
+
+    expire_snapshots(out, keep_last=1)
+    assert not (local / LEGACY_SNAPLOG).exists()
+    [obj] = sorted((local / SNAPDIR).iterdir())
+    assert obj.read_text().splitlines()[0] == '{"_squash":1}'
+    assert [s["id"] for s in snapshots(out)] == [3]
+    assert sorted(r.id for r in decode_table(spark, out).collect()) == list(range(350))
+
+
 def test_unregistered_scheme_refused(spark):
     """An out_dir with an unregistered URL scheme fails fast with a
     registration hint (replacing the old blanket URL refusal)."""
@@ -2199,19 +2294,18 @@ def test_optimize_refuses_non_roundtrip_storage_types(spark, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from sparkcodec.engine import encode_table, optimize_table
+    from sparkcodec.engine import SNAPDIR, encode_table, optimize_table
 
     out = str(tmp_path / "u32t")
     df = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("g"))
     encode_table(spark, df, out, cluster_by=["g"], salt_by=["id"],
                  num_parts=1, resume=False)
     # simulate an unsigned-stored column in the schema the tip entry
-    # stamps (the schema optimize resolves)
-    log_path = str(tmp_path / "u32t" / "_snapshots.jsonl")
-    entries = [_json.loads(line) for line in open(log_path)]
+    # stamps (the schema optimize resolves): forge the tip's log object
+    tip = sorted((tmp_path / "u32t" / SNAPDIR).iterdir())[-1]
+    entries = [_json.loads(line) for line in tip.read_text().splitlines()]
     entries[-1]["schema"]["id"] = "u32"
-    with open(log_path, "w") as fh:
-        fh.write("".join(_json.dumps(e) + "\n" for e in entries))
+    tip.write_text("".join(_json.dumps(e) + "\n" for e in entries))
     with _pytest.raises(ValueError, match="round-trip"):
         optimize_table(spark, out, zorder_by=["g"])
 
